@@ -58,7 +58,7 @@ object Scaling {
     val s = SparkSession.builder()
       .master(s"local[$cores]")
       .appName(s"graft-scaling-$cores")
-      // measured (ConfigProbe): partitions = cores with AQE on beats 2×/3×
+      // measured: partitions = cores with AQE on beats 2×/3×
       // waves for this kernel at both levels
       .config("spark.sql.shuffle.partitions", cores.toString)
       .config("spark.sql.adaptive.enabled", "true")

@@ -20,14 +20,9 @@ object SparkEntry {
     val sfDir = "/root/testdata/sf0.001"
     val docs = GeoTables.docs(spark, sfDir)
     val spans = docs.select(col("doc_id"), explode(col("spans")).as("s"))
-    val polys = spans.where(col("s.kind") === "wkt")
-      .select(col("doc_id").as("poly_doc"), col("s.text").as("wkt"))
-    val pts = spans.where(col("s.kind") === "point")
-      .select(col("doc_id"),
-        (split(col("s.text"), ",").getItem(0).cast("double") / 4.0).as("x"),
-        (split(col("s.text"), ",").getItem(1).cast("double") / 4.0).as("y"),
-        split(col("s.text"), ",").getItem(2).cast("double").as("value"))
-    SpatialJoin.pip(pts, polys, GeoTables.JoinLevel, broadcastPolys = true)
+    SpatialJoin.pip(GeoTables.pointSpans(spans, col("doc_id")),
+        GeoTables.polySpans(spans, col("doc_id")), GeoTables.JoinLevel,
+        PipPlan.BroadcastPolys)
       .groupBy(col("poly_doc"))
       .agg(count(lit(1)).as("n_pts"), round(sum(col("value")), 3).as("sum_val"))
   }
@@ -67,12 +62,12 @@ object SparkEntry {
         round(avg(col("value")), 3).as("avg_val"))
     }),
 
-    // same join, pure-bbox codegen refine + salting path must agree
+    // same join, uniformly salted (PipPlan.Salted) — must agree
     "q_zonal_stats_salted" -> ((s, dir) => {
-      val joined = SpatialJoin.pipSalted(
+      val joined = SpatialJoin.pip(
         GeoTables.points(s, dir),
         GeoTables.zones(s, dir).select(col("zone_id"), col("wkt")),
-        GeoTables.JoinLevel, salt = 4)
+        GeoTables.JoinLevel, PipPlan.Salted(4))
       joined.groupBy(col("zone_id")).agg(
         count(lit(1)).as("n_pts"),
         sum(col("value")).as("sum_val"))
@@ -81,10 +76,10 @@ object SparkEntry {
     // same join again through the per-cell ADAPTIVE salting path (north
     // rule: repartition by measured cell density, salt only hot cells)
     "q_zonal_stats_adaptive" -> ((s, dir) => {
-      val joined = AdaptiveSkew.pipAdaptive(
+      val joined = SpatialJoin.pip(
         GeoTables.points(s, dir),
         GeoTables.zones(s, dir).select(col("zone_id"), col("wkt")),
-        GeoTables.JoinLevel, targetRowsPerTask = 2000L)
+        GeoTables.JoinLevel, PipPlan.Adaptive(targetRowsPerTask = 2000L))
       joined.groupBy(col("zone_id")).agg(
         count(lit(1)).as("n_pts"),
         sum(col("value")).as("sum_val"))

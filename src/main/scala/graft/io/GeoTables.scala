@@ -1,6 +1,6 @@
 package graft.io
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Deterministic geo tables derived from the driver's TPC-H-ish parquet.
@@ -122,6 +122,23 @@ object GeoTables {
         expr("transform(s0, x -> struct(x.kind as kind, x.text as text, " +
              "x.media_ref as media_ref, x.offset as offset))").as("spans"))
   }
+
+  /** Point spans of an exploded docs frame (one span struct per row in
+    * column `s`): the "<x4>,<y4>,<q>" scaled-int CSV (see [[docs]])
+    * decoded to (`key`, x, y, value). */
+  def pointSpans(spans: DataFrame, key: Column): DataFrame = {
+    val f = split(col("s.text"), ",")
+    spans.where(col("s.kind") === "point")
+      .select(key,
+        (f.getItem(0).cast("double") / 4.0).as("x"),
+        (f.getItem(1).cast("double") / 4.0).as("y"),
+        f.getItem(2).cast("double").as("value"))
+  }
+
+  /** Polygon spans of an exploded docs frame: (`key` as poly_doc, wkt). */
+  def polySpans(spans: DataFrame, key: Column): DataFrame =
+    spans.where(col("s.kind") === "wkt")
+      .select(key.as("poly_doc"), col("s.text").as("wkt"))
 
   /** Distinct media_refs straight off the span SOURCE — the projection a
     * 10^12-doc pipeline wants: no window, no collect_list, no document

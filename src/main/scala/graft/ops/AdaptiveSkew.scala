@@ -2,14 +2,14 @@ package graft.ops
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import graft.functions.GeoFunctions._
 
 /** Adaptive repartitioning by cell density (north rule): measure the
   * per-cell histogram, derive a per-cell salt factor proportional to the
-  * cell's share of rows, and run the PIP join salted only where it's hot.
-  * This is the data-driven version of SpatialJoin.pipSalted's uniform
-  * salt — uniform salting taxes every cell; adaptive salting only fans
-  * out the heavy ones (Zipfian cell distributions at 10^12-doc scale).
+  * cell's share of rows, and run the PIP join salted only where it's hot
+  * (`PipPlan.Adaptive`). This is the data-driven version of the uniform
+  * `PipPlan.Salted` — uniform salting taxes every cell; adaptive salting
+  * only fans out the heavy ones (Zipfian cell distributions at 10^12-doc
+  * scale).
   */
 object AdaptiveSkew {
 
@@ -24,41 +24,9 @@ object AdaptiveSkew {
         greatest(lit(1), ceil(col("rows") / targetRowsPerTask)).cast("int").as("salt"))
       .where(col("salt") > 1)
 
-  /** PIP join with per-cell adaptive salt. Exactly the pipSalted plan, but
-    * the polygon side replicates per-cell only `salt(cell)` ways and the
-    * point side buckets by `pmod(hash, salt(cell))`. */
+  /** Adaptively salted [[SpatialJoin.pip]]:
+    * `pip(..., PipPlan.Adaptive(targetRowsPerTask))`. */
   def pipAdaptive(points: DataFrame, polys: DataFrame, level: Int,
-                  targetRowsPerTask: Long = 2000000L): DataFrame = {
-    val salts = saltFactors(points, level, targetRowsPerTask)
-
-    // one-parse annotation + lazy CASE refine, as in SpatialJoin.pip:
-    // the exchange carries four flat envelope doubles and a NULL
-    // `gen_geom` for rectangles instead of the wkt string for every poly
-    val annotated = polys
-      .withColumn("pa", st_env_rect(col("wkt")))
-      .withColumn("gen_geom",
-        when(col("pa._5"), lit(null).cast("string")).otherwise(col("wkt")))
-    val polyCells = annotated
-      .withColumn("cell",
-        explode(cover_cells(col("pa._1"), col("pa._2"), col("pa._3"), col("pa._4"), lit(level))))
-      .join(broadcast(salts), Seq("cell"), "left")
-      .withColumn("salt_n", coalesce(col("salt"), lit(1)))
-      .withColumn("salt", explode(sequence(lit(0), col("salt_n") - 1)))
-
-    val ptCells = points
-      .withColumn("cell", graft.plans.CellOfExpr.cellOfNative(col("x"), col("y"), lit(level)))
-      .join(broadcast(salts), Seq("cell"), "left")
-      .withColumn("salt_n", coalesce(col("salt"), lit(1)))
-      .withColumn("salt", pmod(xxhash64(col("x"), col("y")), col("salt_n")).cast("int"))
-
-    // build the point side (see SpatialJoin.pip): the salted poly-cell
-    // side is cover×salt times larger
-    ptCells.drop("salt_n").hint("shuffle_hash")
-      .join(polyCells.drop("salt_n"), Seq("cell", "salt"), "inner")
-      .where(col("x") > col("pa._1") && col("x") < col("pa._3") &&
-             col("y") > col("pa._2") && col("y") < col("pa._4"))
-      .where(col("gen_geom").isNull ||
-             st_contains_xy(col("gen_geom"), col("x"), col("y")))
-      .drop("cell", "salt", "pa", "gen_geom")
-  }
+                  targetRowsPerTask: Long): DataFrame =
+    SpatialJoin.pip(points, polys, level, PipPlan.Adaptive(targetRowsPerTask))
 }

@@ -45,14 +45,8 @@ object BenchKernel {
       substring(col("doc_id"), 5, 9).cast("long").as("doc_key"),
       explode(col("spans")).as("s"))
 
-    val polys = spans.where(col("s.kind") === "wkt")
-      .select(col("doc_key").as("poly_doc"), col("s.text").as("wkt"))
-
-    val pts = spans.where(col("s.kind") === "point")
-      .select(col("doc_key"),
-        (split(col("s.text"), ",").getItem(0).cast("double") / 4.0).as("x"),
-        (split(col("s.text"), ",").getItem(1).cast("double") / 4.0).as("y"),
-        split(col("s.text"), ",").getItem(2).cast("double").as("value"))
+    val polys = GeoTables.polySpans(spans, col("doc_key"))
+    val pts = GeoTables.pointSpans(spans, col("doc_key"))
 
     // PIP spatial join + tile assignment.
     // Tried and rejected (round 6): broadcasting the point side removes

@@ -30,9 +30,13 @@ object Overlay {
     * between adjacent x-cuts is covered all-or-nothing by each cut, so the
     * per-slab interval merge is exact; on integer-coordinate rectilinear
     * inputs the result is integer-exact, matching both JTS difference area
-    * and the oracle's unit-cell count bit for bit. */
+    * and the oracle's unit-cell count bit for bit. Cuts with no area
+    * (`c(0) >= c(2)` or `c(1) >= c(3)`) cover nothing and are skipped. */
   private[graft] def rectDiffArea(sx0: Double, sy0: Double, sx1: Double, sy1: Double,
-                                  cuts: Array[Array[Double]]): Double = {
+                                  allCuts: Array[Array[Double]]): Double = {
+    // the sweep needs lo < hi on both axes: a zero-width cut would leave
+    // the active set before it enters it
+    val cuts = allCuts.filter(c => c(0) < c(2) && c(1) < c(3))
     if (cuts.isEmpty) return (sx1 - sx0) * (sy1 - sy0)
     val xs = (Array(sx0, sx1) ++ cuts.flatMap(c => Array(c(0), c(2)))).distinct.sorted
     val k = cuts.length
@@ -110,8 +114,7 @@ object Overlay {
   private val stripDiffAreaUdf = udf(
     (sy0: Double, sy1: Double, x0: Double, x1: Double, cuts: Seq[Seq[Double]]) => {
       val cs = cuts.iterator
-        .map(c => Array(math.max(c(0), x0), c(1), math.min(c(2), x1), c(3)))
-        .filter(c => c(2) > c(0) && c(3) > c(1)).toArray
+        .map(c => Array(math.max(c(0), x0), c(1), math.min(c(2), x1), c(3))).toArray
       rectDiffArea(x0, sy0, x1, sy1, cs)
     })
 
@@ -136,7 +139,7 @@ object Overlay {
         val c = g.getEnvelopeInternal
         Array(math.max(c.getMinX, e.getMinX), math.max(c.getMinY, e.getMinY),
               math.min(c.getMaxX, e.getMaxX), math.min(c.getMaxY, e.getMaxY))
-      }.filter(c => c(2) > c(0) && c(3) > c(1)).toArray
+      }.toArray
       rectDiffArea(e.getMinX, e.getMinY, e.getMaxX, e.getMaxY, cuts)
     } else {
       val arr = new java.util.ArrayList[org.locationtech.jts.geom.Geometry]()

@@ -94,14 +94,12 @@ object PointInterp {
     val inGrid = neighbors
       .where(col("si") >= 0 && col("si") < height && col("sj") >= 0 && col("sj") < width)
 
-    // Round 3 sliced payload bytes with codegen substring; round 4 read
-    // them in place with CellValueExpr — but the binary `data` column
-    // still crossed the join, and every probe row's getBinary re-copied
-    // the 20 KB payload out of the build UnsafeRow. Round 6 joins a
-    // per-pixel (si, sj, v) relation instead (RasterOps.pixelRows): one
-    // tile decode total, 24-byte build rows, no binary column anywhere in
-    // the join. LEFT join: masked cells are absent from the relation, so
-    // v is NULL exactly where CellValueExpr returned NULL.
+    // Join a per-pixel (si, sj, v) relation (RasterOps.pixelRows), not
+    // the tiles: a join that carries the binary `data` column re-copies
+    // the 20 KB payload out of the build UnsafeRow on every probe. The
+    // per-pixel relation costs one tile decode total, 24-byte build rows
+    // and no binary column in the join. LEFT join: masked cells are
+    // absent from the relation, so v is NULL exactly at masked pixels.
     val kernelN = method match {
       case "nearest" => 1; case "bilinear" => 4; case "cubic" => 16
       case "quintic" => 36

@@ -27,11 +27,6 @@ object Reproject {
     def tilesY: Int = (height + tileH - 1) / tileH
   }
 
-  def gridOf(t: RasterTile, tilesX: Int, tilesY: Int): GridSpec =
-    GridSpec(t.xres, t.yres, t.xmin - t.tile_col * t.width * t.xres,
-      t.ymax + t.tile_row * t.height * t.yres,
-      tilesX * t.width, tilesY * t.height, t.width, t.height, t.crs)
-
   /** Resample `src` (whose full grid is `srcGrid`) onto `dst`.
     * method: "nearest" | "bilinear". Identity transform between CRSs for
     * now (CRS hook: srcXY = transformXY(dstX, dstY)). */

@@ -25,12 +25,6 @@ object Sampling {
       .orderBy(col("skey").bitwiseXOR(lit(Long.MinValue)), col(gidCol))
       .limit(k)
 
-  /** Uniform fraction sample, partition-invariant (hash threshold). */
-  def sampleFraction(df: DataFrame, gidCol: String, fraction: Double, seed: Long): DataFrame = {
-    val u = udf((idx: Long, s: Long) => SplitMix64.uniform(idx, s))
-    df.where(u(col(gidCol), lit(seed)) < fraction)
-  }
-
   /** Stratified (per-group) deterministic top-k sample — the data-mixing
     * stage of a training pipeline (fixed per-language/per-source quotas).
     * Selection key = Knuth multiplicative hash of the id, so the sample is

@@ -4,6 +4,30 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import graft.functions.GeoFunctions._
 
+/** How [[SpatialJoin.pip]] distributes its cell equi-join. Every plan
+  * runs the same annotate, cover, join and refine; the plan picks only the
+  * exchange shape and the per-cell salt fan-out.
+  *
+  *  - `Shuffle`: shuffle-hash join keyed on `cell`, point side as build.
+  *  - `BroadcastPolys`: broadcast the poly-cell side so the point side
+  *    never shuffles (the analog of the reference caching one STRtree per
+  *    worker); for a small polygon side.
+  *  - `Salted(n)`: every cell fans out `n` ways, for skewed cells.
+  *  - `Adaptive(targetRowsPerTask)`: only hot cells fan out, in proportion
+  *    to their measured point count ([[AdaptiveSkew.saltFactors]]).
+  */
+sealed trait PipPlan
+object PipPlan {
+  case object Shuffle extends PipPlan
+  case object BroadcastPolys extends PipPlan
+  final case class Salted(n: Int) extends PipPlan {
+    require(n >= 1, s"salt count $n must be >= 1")
+  }
+  final case class Adaptive(targetRowsPerTask: Long) extends PipPlan {
+    require(targetRowsPerTask >= 1, s"targetRowsPerTask $targetRowsPerTask must be >= 1")
+  }
+}
+
 /** Point-in-polygon spatial join — the heart of the graft (SURVEY.md §2.4,
   * reference `vector/vector.py:1519-1571` create_mask /
   * `interface/rasterization.py:382-511` rasterize candidate pruning).
@@ -13,27 +37,22 @@ import graft.functions.GeoFunctions._
   * scalable path), then JTS prepared-geometry refine. The equi pre-join is
   * what Catalyst can shuffle/broadcast/AQE-skew-optimize; the refine is a
   * cheap scalar UDF on surviving candidates only.
-  *
-  * `broadcastThreshold`: when the polygon side is small (after explode),
-  * hint broadcast so the point side never shuffles — the analog of the
-  * reference caching one STRtree per worker.
   */
 object SpatialJoin {
 
-  /** polys must carry (wkt + bbox cols); points must carry (x, y).
+  /** polys must carry `wkt`; points must carry (x, y).
     * Returns candidates refined by interior containment (boundary
-    * excluded — matches the strict-inequality oracle).
+    * excluded — matches the strict-inequality oracle). `plan` picks how
+    * the cell equi-join is distributed (see [[PipPlan]]); the result rows
+    * are the same under every plan.
     */
   def pip(points: DataFrame, polys: DataFrame, level: Int,
-          broadcastPolys: Boolean = false): DataFrame = {
+          plan: PipPlan = PipPlan.Shuffle): DataFrame = {
     // Envelope + rectangle flag from ONE cached parse per polygon
-    // (st_env_rect; round 5 parsed each wkt three times — envelope,
-    // rect flag, cover — and ran the whole polygon side TWICE through a
-    // rect/general branch pair, which cost a second scan + annotate pass
-    // and a second join even when one branch was empty). Single join:
+    // (st_env_rect). Single join:
     //  - the exchange carries four flat envelope doubles + `gen_geom`,
     //    which is NULL for rectangles (a null bit, not a string) — the
-    //    geometry string still never rides the shuffle for rect layers;
+    //    geometry string never rides the shuffle for rect layers;
     //  - refine is bbox-first in codegen; the JTS prepared-geometry UDF
     //    only evaluates on bbox survivors of general polygons (CASE
     //    branches are lazy in codegen).
@@ -52,34 +71,45 @@ object SpatialJoin {
 
     val cells = annotated.withColumn("cell",
       explode(cover_cells(col("e0"), col("e1"), col("e2"), col("e3"), lit(level))))
+
+    // Salt step of the salted plans: `salt_n` is a cell's fan-out. A
+    // point takes one bucket by a deterministic hash of its coordinates; a
+    // poly-cell row is replicated into every bucket, so each candidate pair
+    // meets exactly once on (cell, salt).
+    def salted(withSaltN: DataFrame => DataFrame) =
+      (withSaltN(ptCells)
+         .withColumn("salt", pmod(xxhash64(col("x"), col("y")), col("salt_n")).cast("int"))
+         .drop("salt_n").hint("shuffle_hash"),
+       withSaltN(cells)
+         .withColumn("salt", explode(sequence(lit(0), col("salt_n") - 1)))
+         .drop("salt_n"),
+       Seq("cell", "salt"))
     // shuffle-hash with the POINT side as build: the exploded poly-cell
-    // side is cover-factor× larger (60× at the kernel's level-7 boxes),
-    // so building the hash relation from points and streaming poly-cells
-    // probes the smaller table (candidate emission is unchanged)
-    val side = if (broadcastPolys) broadcast(cells) else cells
-    val left = if (broadcastPolys) ptCells else ptCells.hint("shuffle_hash")
-    left.join(side, Seq("cell"), "inner")
+    // side is cover-factor× larger (60× at the kernel's level-7 boxes,
+    // times the salt for the salted plans), so building the hash relation
+    // from points and streaming poly-cells probes the smaller table
+    // (candidate emission is unchanged)
+    val (left, right, keys) = plan match {
+      case PipPlan.Shuffle => (ptCells.hint("shuffle_hash"), cells, Seq("cell"))
+      case PipPlan.BroadcastPolys => (ptCells, broadcast(cells), Seq("cell"))
+      case PipPlan.Salted(n) => salted(_.withColumn("salt_n", lit(n)))
+      case PipPlan.Adaptive(target) =>
+        // hot cells only; a cell missing from the histogram gets 1
+        val salts = broadcast(AdaptiveSkew.saltFactors(points, level, target))
+        salted(_.join(salts, Seq("cell"), "left")
+          .withColumn("salt_n", coalesce(col("salt"), lit(1))))
+    }
+    left.join(right, keys, "inner")
       .where(col("x") > col("e0") && col("x") < col("e2") &&
              col("y") > col("e1") && col("y") < col("e3"))
       .where(col("gen_geom").isNull ||
              st_contains_xy(col("gen_geom"), col("x"), col("y")))
-      .drop("cell", "e0", "e1", "e2", "e3", "gen_geom")
+      .drop(keys ++ Seq("e0", "e1", "e2", "e3", "gen_geom"): _*)
   }
 
-  /** Pure-bbox variant (axis-aligned zones): refine with codegen'd column
-    * predicates, no UDF in the hot path. Used when the polygon side carries
-    * (zxmin..zymax) box bounds. */
-  def pipBox(points: DataFrame, boxes: DataFrame, level: Int,
-             broadcastBoxes: Boolean = false): DataFrame = {
-    val boxCells = boxes.withColumn("cell",
-      explode(cover_cells(col("zxmin"), col("zymin"), col("zxmax"), col("zymax"), lit(level))))
-    val ptCells = points.withColumn("cell", graft.plans.CellOfExpr.cellOfNative(col("x"), col("y"), lit(level)))
-    val side = if (broadcastBoxes) broadcast(boxCells) else boxCells
-    ptCells.join(side, Seq("cell"), "inner")
-      .where(col("x") > col("zxmin") && col("x") < col("zxmax") &&
-             col("y") > col("zymin") && col("y") < col("zymax"))
-      .drop("cell")
-  }
+  /** Uniformly salted [[pip]]: `pip(..., PipPlan.Salted(salt))`. */
+  def pipSalted(points: DataFrame, polys: DataFrame, level: Int, salt: Int): DataFrame =
+    pip(points, polys, level, PipPlan.Salted(salt))
 
   /** Adaptive cover-level of an envelope (clamped to [minLvl, maxLvl]). */
   private val adLevel = udf((minx: Double, miny: Double, maxx: Double, maxy: Double,
@@ -258,34 +288,5 @@ object SpatialJoin {
       case "semi"  => a.select(col("id_a")).join(pairs, Seq("id_a"), "left_semi")
       case "anti"  => a.select(col("id_a")).join(pairs, Seq("id_a"), "left_anti")
     }
-  }
-
-  /** Salted PIP for skewed cell distributions (north rule): replicate each
-    * polygon-cell row `salt` ways, key points by pmod(hash, salt) — hot
-    * cells fan out across `salt` reducers. */
-  def pipSalted(points: DataFrame, polys: DataFrame, level: Int, salt: Int): DataFrame = {
-    // single-join form of [[pip]] (same one-parse annotation, same lazy
-    // CASE refine), with the polygon-cell rows replicated `salt` ways and
-    // points keyed by a deterministic hash salt
-    val annotated = polys
-      .withColumn("pa", st_env_rect(col("wkt")))
-      .withColumn("gen_geom",
-        when(col("pa._5"), lit(null).cast("string")).otherwise(col("wkt")))
-    val ptCells = points
-      .withColumn("cell", graft.plans.CellOfExpr.cellOfNative(col("x"), col("y"), lit(level)))
-      .withColumn("salt", pmod(xxhash64(col("x"), col("y")), lit(salt)).cast("int"))
-
-    val cells = annotated
-      .withColumn("cell",
-        explode(cover_cells(col("pa._1"), col("pa._2"), col("pa._3"), col("pa._4"), lit(level))))
-      .withColumn("salt", explode(sequence(lit(0), lit(salt - 1))))
-    // build the point side (see pip): the salted poly-cell side is
-    // cover×salt times larger
-    ptCells.hint("shuffle_hash").join(cells, Seq("cell", "salt"), "inner")
-      .where(col("x") > col("pa._1") && col("x") < col("pa._3") &&
-             col("y") > col("pa._2") && col("y") < col("pa._4"))
-      .where(col("gen_geom").isNull ||
-             st_contains_xy(col("gen_geom"), col("x"), col("y")))
-      .drop("cell", "salt", "pa", "gen_geom")
   }
 }

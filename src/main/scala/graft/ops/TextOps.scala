@@ -181,7 +181,7 @@ object TextOps {
                       threshold: Double = 0.5,
                       maxBucket: Int = 10000): DataFrame = {
     require(numPerm % bands == 0,
-      s"numPerm=$numPerm must divide into bands=$bands (trailing signature " +
+      s"bands=$bands must evenly divide numPerm=$numPerm (trailing signature " +
       "permutations would silently be ignored)")
     val rowsPerBand = numPerm / bands
     val sigUdf = udf((t: String) => minhashSig(t, k, numPerm))

@@ -1,7 +1,7 @@
 package graft.ops
 
 import org.apache.spark.sql.{Dataset, Encoders}
-import graft.model.{Dtypes, RasterTile, TileCodec}
+import graft.model.{RasterTile, TileCodec}
 
 /** Cell-wise tile operators beyond map/zip (SURVEY.md §2.2): comparisons
   * producing mask rasters, mask boolean algebra, astype with nodata
@@ -196,13 +196,6 @@ object TileOps {
       t.copy(nodata = newNodata,
         data = TileCodec.packDoubles(out), mask = TileCodec.packMask(valid))
     }
-
-  /** Promote two rasters' dtypes/nodata for arithmetic
-    * (`raster/raster.py:226-321`) — metadata-level helper. */
-  def promoteMeta(a: RasterTile, b: RasterTile): (String, Double) = {
-    val dt = Dtypes.promote(a.dtype, b.dtype)
-    (dt, Dtypes.combineNodata(a.nodata, b.nodata, dt))
-  }
 
   /** split_bands (`raster/raster.py:3528-3560`): one single-band raster
     * per band of a multi-band stack. Pure Catalyst `filter(band = b)` per

@@ -6,7 +6,7 @@ import org.apache.spark.sql.types._
 import org.apache.spark.sql.streaming.Trigger
 
 import graft.io.GeoTables
-import graft.ops.SpatialJoin
+import graft.ops.{PipPlan, SpatialJoin}
 
 /** Structured-Streaming ingest of the interleaved docs table (SURVEY.md
   * §2.11 — the reference has only chunked-batch incrementality; we expose
@@ -41,19 +41,15 @@ object DocsStream {
                       checkpointDir: String, sinkTable: String,
                       sinkDir: String): Unit = {
     val docs = spark.readStream.schema(docsSchema).parquet(docsDir)
-    val pts = docs.select(col("doc_id"), explode(col("spans")).as("s"))
-      .where(col("s.kind") === "point")
-      .select(col("doc_id"),
-        (split(col("s.text"), ",").getItem(0).cast("double") / 4.0).as("x"),
-        (split(col("s.text"), ",").getItem(1).cast("double") / 4.0).as("y"),
-        split(col("s.text"), ",").getItem(2).cast("double").as("value"))
+    val pts = GeoTables.pointSpans(
+      docs.select(col("doc_id"), explode(col("spans")).as("s")), col("doc_id"))
 
     val q = pts.writeStream
       .trigger(Trigger.AvailableNow())
       .option("checkpointLocation", checkpointDir)
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
         val joined = SpatialJoin.pip(batch, polys, GeoTables.JoinLevel,
-          broadcastPolys = true)
+          PipPlan.BroadcastPolys)
         joined.groupBy(col("zone_id"))
           .agg(count(lit(1)).as("n_pts"), sum(col("value")).as("sum_val"))
           .withColumn("batch_id", lit(batchId))

@@ -35,12 +35,17 @@ class Ops4Spec extends SparkSpec {
               else SplitMix64.uniform(i, 19L) * 100.0
       (i, x, y, 1.0)
     }.toDF("point_id", "x", "y", "value")
-    val polys = GeoTables.zones(spark, sf001).select(col("zone_id"), col("wkt"))
-    val plain = SpatialJoin.pip(pts, polys, GeoTables.JoinLevel)
-      .select("zone_id", "point_id")
-    val adaptive = AdaptiveSkew.pipAdaptive(pts, polys, GeoTables.JoinLevel,
-      targetRowsPerTask = 1000L)
-    assert(rowSet(adaptive.select("zone_id", "point_id")) == rowSet(plain))
+    val zones = GeoTables.zones(spark, sf001)
+    // every plan, the plain Shuffle one included, against the brute-force
+    // box reference (no cell cover)
+    val expected = bboxPairs(pts, zones)
+    assert(expected.nonEmpty)
+    for (plan <- Seq(PipPlan.Shuffle, PipPlan.BroadcastPolys, PipPlan.Salted(4),
+                     PipPlan.Adaptive(1000L))) {
+      val got = SpatialJoin.pip(pts, zones.select(col("zone_id"), col("wkt")),
+        GeoTables.JoinLevel, plan)
+      assert(pipPairs(got) == expected, plan)
+    }
     // the hot cell actually got a salt factor > 1
     val maxSalt = AdaptiveSkew.saltFactors(pts, GeoTables.JoinLevel, 1000L)
       .agg(max("salt")).collect()(0).getInt(0)

@@ -164,12 +164,16 @@ class Ops8Spec extends SparkSpec {
         val x0 = nx(22) - 2.0; val y0 = nx(22) - 2.0
         (x0, y0, x0 + nx(10) + 1.0, y0 + nx(10) + 1.0)
       }
-      // clip to src (the UDF pre-clips the same way)
+      // clip to src (the UDF pre-clips the same way); a cut outside src
+      // clips to an empty one, which the sweep must skip
       val cuts = cuts0.map { case (x0, y0, x1, y1) =>
         Array(math.max(x0, src._1), math.max(y0, src._2),
               math.min(x1, src._3), math.min(y1, src._4))
-      }.filter(c => c(2) > c(0) && c(3) > c(1)).toArray
-      val got = Overlay.rectDiffArea(src._1, src._2, src._3, src._4, cuts)
+      }.toArray
+      // degenerate cuts (zero width, inverted x, zero height) have no area
+      val degenerate = Array(Array(3.0, 1.0, 3.0, 4.0), Array(4.0, 2.0, 1.0, 3.0),
+                             Array(1.0, 3.0, 4.0, 3.0))
+      val got = Overlay.rectDiffArea(src._1, src._2, src._3, src._4, cuts ++ degenerate)
       val exp = cuts0.map { case (x0, y0, x1, y1) => rect(x0, y0, x1, y1) }
         .foldLeft(rect(src._1, src._2, src._3, src._4): org.locationtech.jts.geom.Geometry)(
           (acc, c) => acc.difference(c)).getArea

@@ -2,30 +2,65 @@ package graft
 
 import org.apache.spark.sql.functions._
 import graft.io.GeoTables
-import graft.ops.SpatialJoin
+import graft.ops.{BenchKernel, PipPlan, SpatialJoin}
+import org.apache.spark.sql.catalyst.optimizer.BuildLeft
+import org.apache.spark.sql.execution.{QueryExecution, SparkPlan}
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.joins.ShuffledHashJoinExec
+import org.apache.spark.sql.util.QueryExecutionListener
 
 /** Plan-shape regression guards: the perf-critical properties verified by
   * hand during the plan audit must not silently rot. */
-class PlanSpec extends SparkSpec {
+class PlanSpec extends SparkSpec with AdaptiveSparkPlanHelper {
 
   test("PIP rect branch prunes wkt and uses a hash join keyed on cell") {
     val pts = GeoTables.points(spark, sf001)
     val z = GeoTables.zones(spark, sf001).select(col("zone_id"), col("wkt"))
-    val agg = SpatialJoin.pip(pts, z, GeoTables.JoinLevel)
-      .groupBy("zone_id").agg(count(lit(1)).as("n"))
-    val plan = agg.queryExecution.executedPlan.toString
+    for (pipPlan <- Seq(PipPlan.Shuffle, PipPlan.BroadcastPolys, PipPlan.Salted(4),
+                        PipPlan.Adaptive(2000L))) {
+      val agg = SpatialJoin.pip(pts, z, GeoTables.JoinLevel, pipPlan)
+        .groupBy("zone_id").agg(count(lit(1)).as("n"))
+      val plan = agg.queryExecution.executedPlan.toString
 
-    assert(plan.contains("ShuffledHashJoin") || plan.contains("BroadcastHashJoin"),
-      "cell equi-join must be a hash join")
-    // the exchanges feeding the join must not carry the WKT string: every
-    // Exchange line's column list should be wkt-free (wkt appears only in
-    // scans/projections of the general-polygon branch)
-    val badExchange = plan.linesIterator
-      .filter(_.trim.startsWith("+- Exchange hashpartitioning"))
-      .exists(_.contains("wkt"))
-    assert(!badExchange, "wkt leaked into a shuffle exchange")
-    // partial aggregation before the final exchange (map-side combine)
-    assert(plan.contains("HashAggregate"), plan)
+      // the inner cell equi-join is a hash join keyed on cell, plus salt
+      // for the salted plans
+      val key = pipPlan match {
+        case PipPlan.Salted(_) | PipPlan.Adaptive(_) => """cell#\d+L?, salt#\d+"""
+        case _ => """cell#\d+L?"""
+      }
+      val join = s"""(ShuffledHashJoin|BroadcastHashJoin) \\[$key\\], \\[$key\\], Inner""".r
+      assert(join.findFirstIn(plan).isDefined, s"$pipPlan: no hash join on [$key]\n$plan")
+      // the exchanges feeding the join must not carry the WKT string: every
+      // Exchange line's column list should be wkt-free (wkt appears only in
+      // scans/projections of the general-polygon branch)
+      val badExchange = plan.linesIterator
+        .filter(_.trim.startsWith("+- Exchange hashpartitioning"))
+        .exists(_.contains("wkt"))
+      assert(!badExchange, s"$pipPlan: wkt leaked into a shuffle exchange")
+      // partial aggregation before the final exchange (map-side combine)
+      assert(plan.contains("HashAggregate"), plan)
+    }
+
+    // the kernel runs the Shuffle plan: exactly one shuffle-hash join,
+    // built from the point side
+    val executed = new java.util.concurrent.LinkedBlockingQueue[SparkPlan]()
+    val listener = new QueryExecutionListener {
+      // the kernel's one action: a global (total, mrows) aggregate
+      def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit =
+        if (qe.analyzed.output.map(_.name) == Seq("total", "mrows")) executed.put(qe.executedPlan)
+      def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    // listeners are called asynchronously: stay registered until the call
+    val kernel = try {
+      BenchKernel.run(spark, BenchKernel.prepareInput(spark, sf001))
+      executed.poll(60, java.util.concurrent.TimeUnit.SECONDS)
+    } finally spark.listenerManager.unregister(listener)
+    assert(kernel != null, "kernel action was not observed")
+    val shj = collect(kernel) { case j: ShuffledHashJoinExec => j }
+    assert(shj.size == 1, kernel.toString)
+    assert(shj.head.buildSide == BuildLeft && shj.head.left.output.exists(_.name == "x"),
+      s"kernel join must build from the point side\n$kernel")
   }
 
   test("sjoin emits pairs once: no dedup shuffle, no global window, hash joins only") {
@@ -103,8 +138,8 @@ class PlanSpec extends SparkSpec {
 
   test("point-window cell reads never move the packed payload (no UDF, no binary join)") {
     // reduce_points' hot stage: the window pixels join a per-pixel
-    // (si, sj, v) relation. A reintroduced payload-carrying join (the
-    // round-4/5 CellValueExpr-over-`data` plan) re-copies the 20KB binary
+    // (si, sj, v) relation. A reintroduced payload-carrying join (a cell
+    // read over the tiles' `data` column) re-copies the 20KB binary
     // out of the build row per probe (~108 GB of memcpy at sf0.1), and a
     // UDF re-adds allocations + serde per row.
     val plan = SparkEntry.queries("q_reduce_points")(spark, sf001)

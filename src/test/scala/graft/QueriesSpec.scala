@@ -35,26 +35,29 @@ class QueriesSpec extends SparkSpec {
 
   test("salted PIP join equals unsalted") {
     import graft.io.GeoTables
-    import graft.ops.SpatialJoin
+    import graft.ops.{PipPlan, SpatialJoin}
     val pts = GeoTables.points(spark, sf001)
     val z = GeoTables.zones(spark, sf001).select(col("zone_id"), col("wkt"))
-    val a = SpatialJoin.pip(pts, z, GeoTables.JoinLevel)
-      .select("zone_id", "point_id")
-    val b = SpatialJoin.pipSalted(pts, z, GeoTables.JoinLevel, salt = 4)
-      .select("zone_id", "point_id")
-    assert(rowSet(a) == rowSet(b))
+    val plain = pipPairs(SpatialJoin.pip(pts, z, GeoTables.JoinLevel))
+    for (plan <- Seq(PipPlan.Salted(4), PipPlan.Adaptive(1000L)))
+      assert(pipPairs(SpatialJoin.pip(pts, z, GeoTables.JoinLevel, plan)) == plain, plan)
   }
 
   test("pip equals pipBox on box zones (JTS refine vs codegen refine)") {
+    // the codegen box refine is the crossJoin reference in bboxPairs; pip
+    // must match it under every PipPlan
     import graft.io.GeoTables
-    import graft.ops.SpatialJoin
+    import graft.ops.{PipPlan, SpatialJoin}
     val pts = GeoTables.points(spark, sf001)
-    val z = GeoTables.zones(spark, sf001)
-    val viaJts = SpatialJoin.pip(pts, z.select(col("zone_id"), col("wkt")),
-      GeoTables.JoinLevel).select("zone_id", "point_id")
-    val viaBox = SpatialJoin.pipBox(pts, z.drop("wkt"), GeoTables.JoinLevel)
-      .select("zone_id", "point_id")
-    assert(rowSet(viaJts) == rowSet(viaBox))
+    val zones = GeoTables.zones(spark, sf001)
+    val expected = bboxPairs(pts, zones)
+    assert(expected.nonEmpty)
+    for (plan <- Seq(PipPlan.Shuffle, PipPlan.BroadcastPolys, PipPlan.Salted(4),
+                     PipPlan.Adaptive(1000L))) {
+      val got = SpatialJoin.pip(pts, zones.select(col("zone_id"), col("wkt")),
+        GeoTables.JoinLevel, plan)
+      assert(pipPairs(got) == expected, plan)
+    }
   }
 
   test("kNN matches brute force") {
