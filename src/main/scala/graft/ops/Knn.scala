@@ -10,13 +10,18 @@ import graft.geo.CellIndex
   *
   * Exact algorithm: candidates from the query's ring-k cell neighborhood;
   * a ring-k minimum is accepted only if it beats the distance to the
-  * explored-square boundary (no closer point can hide outside). Queries
-  * unresolved at ring k retry at 2k, 4k, … (`expandRounds` doublings);
-  * only the residue after the last round takes a nested-loop fallback,
-  * and that fallback broadcasts whichever side is SMALLER (counted at
-  * plan-build time) — a sparse corpus therefore broadcasts its small
-  * point table, never an unbounded unresolved query set. Results are
-  * partition-invariant and exact at every path.
+  * explored-square boundary (no closer point can hide outside). One
+  * resolver serves [[nearest]] and [[nearestValue]]; only the per-query
+  * candidate aggregate differs. One early-stopping probe sizes the point
+  * side against `spark.graft.knn.broadcastRows`:
+  *  - a small point side is broadcast LAZILY: one ring round, then a
+  *    nested loop of the unresolved queries against the broadcast points,
+  *    all inside the consumer's action — the queries are never counted;
+  *  - a big point side retries unresolved queries at 2k, 4k, …
+  *    (`expandRounds` doublings, one count per round); the residue after
+  *    the last round takes a nested loop that broadcasts the leftover
+  *    queries only when they fit under the threshold.
+  * Results are partition-invariant and exact at every path.
   *
   * Each round's ring-best aggregate feeds BOTH the resolved branch and
   * the anti-join that derives the next round's query set, so the
@@ -77,6 +82,14 @@ object Knn {
     * the eager ring rounds (no fallback built). */
   private[graft] var lastFallback: Option[(Long, Long, Boolean)] = None
 
+  private val CellQidBase = 1000000
+  /** A grid-cell query's `qid`: cell (i, j), j < 1000000, packed into one long. */
+  def cellQid(i: Column, j: Column): Column = i.cast("long") * CellQidBase + j
+  /** (i, j) unpacked from a [[cellQid]] `qid` column. */
+  def cellIj: Seq[Column] = Seq(
+    floor(col("qid") / CellQidBase).cast("int").as("i"),
+    (col("qid") % CellQidBase).cast("int").as("j"))
+
   private def boundCol(ringK: Int, cellSize: Double) = {
     // the explored square lives in DOMAIN coordinates: cell i spans
     // [x0 + i·cs, x0 + (i+1)·cs) — omitting the origin here is only
@@ -112,6 +125,25 @@ object Knn {
       .join(pts, Seq("cell"))
       .withColumn("d2", d2Col)
 
+  /** The per-query candidate aggregate (aliased `nn`) and the squared
+    * distance read back out of it. */
+  private final case class NnAgg(agg: Column, d2: Column)
+  private val MinD2 = NnAgg(min(col("d2")), col("nn"))
+  // lexicographic min: among equally distant points the minimum value wins
+  private val MinD2Value = NnAgg(min(struct(col("d2"), col("value"))), col("nn.d2"))
+
+  /** Best candidate per query of `cand` (qid, d2, …): (qid, nn), plus the
+    * ring round's `bound` when `withBound`. */
+  private def bestOf(cand: DataFrame, nn: NnAgg, withBound: Boolean): DataFrame = {
+    val g = cand.groupBy("qid")
+    if (withBound) g.agg(nn.agg.as("nn"), first(col("bound")).as("bound"))
+    else g.agg(nn.agg.as("nn"))
+  }
+
+  /** (qid, nn) of the ring-best rows whose minimum beats the STRICT bound. */
+  private def resolvedOf(best: DataFrame, nn: NnAgg): DataFrame =
+    best.where(sqrt(nn.d2) < col("bound")).select(col("qid"), col("nn"))
+
   /** Rows at or below which a table is cheap to broadcast for the exact
     * nested-loop path ((qid,x,y,value) rows ≈ 40 B → ≤ ~40 MB). Override
     * with spark.graft.knn.broadcastRows (tests set 0 to force the ring
@@ -138,8 +170,9 @@ object Knn {
     (p, n, thr)
   }
 
-  /** queries: (qid, qx, qy); points: (point_id, x, y).
-    * Output: (qid, nn_d2) — exact squared euclidean NN distance.
+  /** The ring resolver behind [[nearest]] and [[nearestValue]] without a
+    * cutoff: (qid, nn), `nn` being `nn.agg` over each query's exact
+    * candidates.
     *
     * Strategy by point-side size (ONE early-stopping probe job):
     *  - broadcast-small points → one LAZY ring round; unresolved queries
@@ -149,29 +182,27 @@ object Knn {
     *    broadcast-tiny table — blind ring doubling here was 3× slower,
     *    measured on q_proximity_vector's boundary-cell targets.
     *  - big points → EAGER ring-doubling rounds (2k, 4k; one small count
-    *    per round decides the next), then a last-resort nested loop
-    *    broadcasting whichever side is smaller by counted rows. */
-  def nearest(queries: DataFrame, points: DataFrame, level: Int,
-              ringK: Int = 2, expandRounds: Int = 2): DataFrame = {
+    *    per round decides the next), then a last-resort nested loop that
+    *    broadcasts the leftover queries only when they fit. */
+  private def resolve(queries: DataFrame, points: DataFrame, level: Int,
+                      ringK: Int, expandRounds: Int, nn: NnAgg): DataFrame = {
     val cellSize = CellIndex.DefaultDomain.cellSize(level)
     val q0 = queries.select(col("qid"), col("qx"), col("qy"))
-    def bestOf(qf: DataFrame, ptSide: DataFrame, k: Int): DataFrame =
-      trackPersisted(ringCand(qf, withCellPts(ptSide, level), level, k, cellSize)
-        .groupBy("qid").agg(min(col("d2")).as("nn_d2"), first(col("bound")).as("bound")))
+    def resolvedAt(qf: DataFrame, ptSide: DataFrame, k: Int): DataFrame =
+      resolvedOf(trackPersisted(bestOf(
+        ringCand(qf, withCellPts(ptSide, level), level, k, cellSize), nn, withBound = true)), nn)
+    def nested(pairs: DataFrame): DataFrame =
+      bestOf(pairs.withColumn("d2", d2Col), nn, withBound = false)
 
     val (p, n, thr) = probeSmall(points)
     if (n <= thr) {
       // ring candidates read the PERSISTED probe frame too: the point
       // side is often a derived subplan (boundary-cell extraction), and
       // this makes it compute exactly once per call
-      val best = bestOf(q0, p, ringK)
-      val resolved = best.where(sqrt(col("nn_d2")) < col("bound"))
-        .select(col("qid"), col("nn_d2"))
+      val resolved = resolvedAt(q0, p, ringK)
       val unresolved = q0.join(resolved, Seq("qid"), "left_anti")
       lastFallback = Some((-1L, n, false))
-      resolved.unionByName(
-        broadcast(p).crossJoin(unresolved).withColumn("d2", d2Col)
-          .groupBy("qid").agg(min(col("d2")).as("nn_d2")))
+      resolved.unionByName(nested(broadcast(p).crossJoin(unresolved)))
     } else {
       var q = q0
       var k = ringK
@@ -179,9 +210,7 @@ object Knn {
       var remaining = 1L
       var r = 0
       while (r <= expandRounds && remaining > 0) {
-        val best = bestOf(q, points, k)
-        val resolved = best.where(sqrt(col("nn_d2")) < col("bound"))
-          .select(col("qid"), col("nn_d2"))
+        val resolved = resolvedAt(q, points, k)
         resolvedAll ::= resolved
         q = q.join(resolved, Seq("qid"), "left_anti")
         remaining = q.count()
@@ -198,13 +227,18 @@ object Knn {
         // broadcast would
         val bq = remaining <= thr
         lastFallback = Some((remaining, nPts, bq))
-        val pairs =
-          if (bq) points.crossJoin(broadcast(q)) else points.crossJoin(q)
-        res.unionByName(
-          pairs.withColumn("d2", d2Col).groupBy("qid").agg(min(col("d2")).as("nn_d2")))
+        res.unionByName(nested(
+          if (bq) points.crossJoin(broadcast(q)) else points.crossJoin(q)))
       }
     }
   }
+
+  /** queries: (qid, qx, qy); points: (point_id, x, y).
+    * Output: (qid, nn_d2) — exact squared euclidean NN distance. */
+  def nearest(queries: DataFrame, points: DataFrame, level: Int,
+              ringK: Int = 2, expandRounds: Int = 2): DataFrame =
+    resolve(queries, points, level, ringK, expandRounds, MinD2)
+      .select(col("qid"), col("nn").as("nn_d2"))
 
   /** Nearest neighbor carrying the point's `value`: returns
     * (qid, nn_d2, nn_value) with deterministic tiebreak — among equally
@@ -220,91 +254,32 @@ object Knn {
     * a query with NO in-cutoff ring candidate is nodata by definition and
     * never falls back, and only the measure-zero boundary-equality
     * queries (sqrt(nn_d2) == bound) do — a provably tiny set, so the
-    * cutoff path stays fully LAZY (no counts) and broadcast-safe with a
-    * single ring round. Without cutoff, the same eager ring-expansion
-    * loop as `nearest` applies. */
+    * cutoff path stays fully LAZY (no probe, no counts) and
+    * broadcast-safe with a single ring round. Without cutoff, the ring
+    * resolver of `nearest` applies. */
   def nearestValue(queries: DataFrame, points: DataFrame, level: Int,
                    ringK: Int = 2, cutoff: Option[Double] = None,
                    expandRounds: Int = 2): DataFrame = {
-    val cellSize = CellIndex.DefaultDomain.cellSize(level)
-    val pts = withCellPts(points, level)
-
-    def bestAgg(cand: DataFrame, withBound: Boolean): DataFrame = {
-      val filtered = cutoff.fold(cand)(c => cand.where(col("d2") <= lit(c * c)))
-      val g = filtered.groupBy("qid")
-      if (withBound)
-        g.agg(min(struct(col("d2"), col("value"))).as("nn"), first(col("bound")).as("bound"))
-      else
-        g.agg(min(struct(col("d2"), col("value"))).as("nn"))
-    }
-
-    cutoff match {
+    val best = cutoff match {
+      case None => resolve(queries, points, level, ringK, expandRounds, MinD2Value)
       case Some(c) =>
+        val cellSize = CellIndex.DefaultDomain.cellSize(level)
         val k = math.max(1, math.ceil(c / cellSize).toInt)
+        val inCutoff = col("d2") <= lit(c * c)
         val q = queries.select(col("qid"), col("qx"), col("qy"))
-        val ringBest = trackPersisted(bestAgg(
-          ringCand(q, pts, level, k, cellSize), withBound = true))
-        val resolved = ringBest.where(sqrt(col("nn.d2")) < col("bound"))
-          .select(col("qid"), col("nn.d2").as("nn_d2"), col("nn.value").as("nn_value"))
+        val ringBest = trackPersisted(bestOf(
+          ringCand(q, withCellPts(points, level), level, k, cellSize).where(inCutoff),
+          MinD2Value, withBound = true))
         // only ring-candidates that failed the strict bound fall back;
         // empty-ring queries are nodata and dropped
         val unresolved = ringBest.where(!(sqrt(col("nn.d2")) < col("bound")))
           .select(col("qid"))
           .join(q, Seq("qid"))
           .select(col("qid"), col("qx"), col("qy"))
-        val fallback = bestAgg(
-          points.crossJoin(broadcast(unresolved)).withColumn("d2", d2Col),
-          withBound = false)
-          .select(col("qid"), col("nn.d2").as("nn_d2"), col("nn.value").as("nn_value"))
-        resolved.unionByName(fallback)
-
-      case None =>
-        val q0 = queries.select(col("qid"), col("qx"), col("qy"))
-        def bestOf(qf: DataFrame, ptSide: DataFrame, k: Int): DataFrame =
-          trackPersisted(bestAgg(
-            ringCand(qf, withCellPts(ptSide, level), level, k, cellSize),
-            withBound = true))
-        def unpack(df: DataFrame): DataFrame = df
-          .select(col("qid"), col("nn.d2").as("nn_d2"), col("nn.value").as("nn_value"))
-
-        val (p, n, thr) = probeSmall(points)
-        if (n <= thr) {
-          // lazy small-points path (see `nearest`): one ring round over
-          // the PERSISTED probe frame, the unresolved nested-loop against
-          // the same broadcast point set
-          val best = bestOf(q0, p, ringK)
-          val resolved = unpack(best.where(sqrt(col("nn.d2")) < col("bound")))
-          val unresolved = q0.join(resolved, Seq("qid"), "left_anti")
-          lastFallback = Some((-1L, n, false))
-          resolved.unionByName(unpack(bestAgg(
-            broadcast(p).crossJoin(unresolved).withColumn("d2", d2Col),
-            withBound = false)))
-        } else {
-          var q = q0
-          var k = ringK
-          var resolvedAll: List[DataFrame] = Nil
-          var remaining = 1L
-          var r = 0
-          while (r <= expandRounds && remaining > 0) {
-            val resolved = unpack(bestOf(q, points, k).where(sqrt(col("nn.d2")) < col("bound")))
-            resolvedAll ::= resolved
-            q = q.join(resolved, Seq("qid"), "left_anti")
-            remaining = q.count()
-            k *= 2; r += 1
-          }
-          val res = resolvedAll.reduce(_ unionByName _)
-          if (remaining == 0) { lastFallback = None; res }
-          else {
-            val nPts = points.count()
-            // same size cap as `nearest`: never force a broadcast of an
-            // over-threshold residue
-            val bq = remaining <= thr
-            lastFallback = Some((remaining, nPts, bq))
-            val pairs =
-              if (bq) points.crossJoin(broadcast(q)) else points.crossJoin(q)
-            res.unionByName(unpack(bestAgg(pairs.withColumn("d2", d2Col), withBound = false)))
-          }
-        }
+        resolvedOf(ringBest, MinD2Value).unionByName(bestOf(
+          points.crossJoin(broadcast(unresolved)).withColumn("d2", d2Col).where(inCutoff),
+          MinD2Value, withBound = false))
     }
+    best.select(col("qid"), col("nn.d2").as("nn_d2"), col("nn.value").as("nn_value"))
   }
 }

@@ -37,9 +37,12 @@ object Lineage {
     val todo = df.join(done, df(partCol) === done("part_id"), "left_anti")
     val newParts = todo.select(col(partCol)).distinct().count()
     if (newParts > 0) {
-      // idempotent per-partition write: each partition dir overwritten whole
+      // idempotent per-partition write: dynamic overwrite replaces exactly
+      // the partition dirs this run writes, so a resume re-running a
+      // partition whose manifest entry was lost does not duplicate its rows
       todo.withColumn("part_id", col(partCol))
-        .write.mode(SaveMode.Append).partitionBy("part_id").parquet(s"$outDir/data")
+        .write.mode(SaveMode.Overwrite).option("partitionOverwriteMode", "dynamic")
+        .partitionBy("part_id").parquet(s"$outDir/data")
       manifest(todo, partCol)
         .write.mode(SaveMode.Append).parquet(manifestPath)
     }

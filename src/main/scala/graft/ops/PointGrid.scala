@@ -25,14 +25,12 @@ object PointGrid {
       (col("id") / w).cast("int").as("i"),
       (col("id") % w).cast("int").as("j"))
       .select(col("i"), col("j"),
-        (col("i").cast("long") * 1000000 + col("j")).as("qid"),
+        Knn.cellQid(col("i"), col("j")).as("qid"),
         (lit(xmin) + (col("j") + 0.5) * xres).as("qx"),
         (lit(ymax) - (col("i") + 0.5) * yres).as("qy"))
     Knn.nearestValue(cells.select("qid", "qx", "qy"), points, level,
         cutoff = Some(cutoff))
       .where(col("nn_d2") <= cutoff * cutoff)
-      .select(floor(col("qid") / 1000000).cast("int").as("i"),
-              (col("qid") % 1000000).cast("int").as("j"),
-              col("nn_d2"), col("nn_value"))
+      .select(Knn.cellIj ++ Seq(col("nn_d2"), col("nn_value")): _*)
   }
 }

@@ -27,14 +27,12 @@ object Proximity {
       .withColumn("x", lit(xmin) + (col("j") + 0.5) * xres)
       .withColumn("y", lit(ymax) - (col("i") + 0.5) * yres)
     val queries = cells.select(
-      (col("i").cast("long") * 1000000 + col("j")).as("qid"),
+      Knn.cellQid(col("i"), col("j")).as("qid"),
       col("x").as("qx"), col("y").as("qy"))
     val targets = cells.where(col("val") === target)
       .select(col("x"), col("y"))
     val nn = Knn.nearest(queries, targets, level)
-    nn.select(floor(col("qid") / 1000000).cast("int").as("i"),
-              (col("qid") % 1000000).cast("int").as("j"),
-              sqrt(col("nn_d2")).as("dist"))
+    nn.select(Knn.cellIj :+ sqrt(col("nn_d2")).as("dist"): _*)
   }
 
   // cell center of a general geometry is inside / 4-neighbor outside
@@ -114,15 +112,13 @@ object Proximity {
       .withColumn("x", lit(xmin) + (col("j") + 0.5) * xres)
       .withColumn("y", lit(ymax) - (col("i") + 0.5) * yres)
     val queries = cells.select(
-      (col("i").cast("long") * 1000000 + col("j")).as("qid"),
+      Knn.cellQid(col("i"), col("j")).as("qid"),
       col("x").as("qx"), col("y").as("qy"))
     if (distanceUnit == "pixel")
       require(xres == yres, "pixel distance unit requires square cells")
     val unit = if (distanceUnit == "pixel") xres else 1.0
     val nn = Knn.nearest(queries, targets, level)
-      .select(floor(col("qid") / 1000000).cast("int").as("i"),
-              (col("qid") % 1000000).cast("int").as("j"),
-              (sqrt(col("nn_d2")) / unit).as("dist"))
+      .select(Knn.cellIj :+ (sqrt(col("nn_d2")) / unit).as("dist"): _*)
 
     if (inOrOut == "both") nn
     else {

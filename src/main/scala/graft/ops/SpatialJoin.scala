@@ -117,11 +117,6 @@ object SpatialJoin {
     math.max(minLvl,
       graft.geo.CellIndex.coverLevel(minx, miny, maxx, maxy, perAxis, maxLvl)))
 
-  /** Cover cells of an envelope at ONE level. */
-  private val coverAt = udf((minx: Double, miny: Double, maxx: Double, maxy: Double,
-                             lvl: Int) =>
-    graft.geo.CellIndex.cover(minx, miny, maxx, maxy, lvl))
-
   /** Cover cells at EVERY level minLvl..ownLvl — the ancestor emission of
     * the hierarchical grid join (a cover cell's ancestors at level L are
     * exactly cover(env, L)). */
@@ -236,7 +231,7 @@ object SpatialJoin {
       explode(coverUpTo(e(p, 0), e(p, 1), e(p, 2), e(p, 3),
         lit(minLevel), col(lvl))))
     def cellsOwn(df: DataFrame, p: String, lvl: String) = df.withColumn("cell",
-      explode(coverAt(e(p, 0), e(p, 1), e(p, 2), e(p, 3), col(lvl))))
+      explode(cover_cells(e(p, 0), e(p, 1), e(p, 2), e(p, 3), col(lvl))))
 
     // j1 matches at lvl_b (bOwn cells) ⇒ implies lvl_a ≥ lvl_b;
     // j2 restricted to strictly-deeper b so equal levels emit once

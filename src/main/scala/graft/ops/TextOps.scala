@@ -625,18 +625,16 @@ object TextOps {
     base.join(top2, Seq("doc_id"), "left").join(cov, Seq("doc_id"), "left")
       .select(col("doc_id"), col("n_tokens"),
         coalesce(col("top2_cnt"), lit(0L)).as("top2_cnt"),
-        // bround (HALF_EVEN), not round (HALF_UP): the fractions are
+        // round (HALF_UP), not bround (HALF_EVEN): the fractions are
         // small-integer ratios, so exactly-representable 4-dp ties occur
-        // (n_tokens=64, top2_cnt=1 → 0.03125) and every such dyadic tie
-        // has an exact x*1e4 product — DuckDB's nearbyint-based round()
-        // resolves them half-to-even, so HALF_EVEN here is the only mode
-        // that agrees with the oracle on ties (non-ties are unaffected)
+        // (n_tokens=64, top2_cnt=1 → 0.03125), and the oracle's DuckDB
+        // round() takes such a tie away from zero (round(2/64, 4) = 0.0313)
         when(col("n_tokens") === 0, 0.0).otherwise(
-          bround(coalesce(col("top2_cnt"), lit(0L)) * 2.0 / col("n_tokens"), 4))
+          round(coalesce(col("top2_cnt"), lit(0L)) * 2.0 / col("n_tokens"), 4))
           .as("top2_frac"),
         coalesce(col("dup_cov"), lit(0L)).as("dup_cov"),
         when(col("n_tokens") === 0, 0.0).otherwise(
-          bround(coalesce(col("dup_cov"), lit(0L)).cast("double") / col("n_tokens"), 4))
+          round(coalesce(col("dup_cov"), lit(0L)).cast("double") / col("n_tokens"), 4))
           .as("dup_frac"))
   }
 

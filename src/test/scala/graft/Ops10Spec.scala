@@ -140,6 +140,10 @@ class Ops10Spec extends SparkSpec {
     val (n2, t2) = Lineage.runWithCheckpoint(spark, pts, "tile", dir)
     assert(n2 == 3, s"resume should process exactly the missing partitions, got $n2")
     assert(t2 == t1)
+    // the resumed data equals the uninterrupted run: re-run partitions
+    // replace their directories instead of appending a second copy
+    val rows = spark.read.parquet(s"$dir/data").count()
+    assert(rows == pts.count(), s"resumed data holds $rows rows, want ${pts.count()}")
   }
 
   test("buffer_without_overlap: pieces disjoint, cover the ring, touch their feature (geometric.py:58-199)") {

@@ -52,17 +52,26 @@ class Ops12Spec extends SparkSpec {
     val ql = (0 until 40).map(i =>
       (i.toLong, 20.0 + (i % 8) * 5.0, 30.0 + (i / 8) * 8.0))
     val q = ql.toDF("qid", "qx", "qy")
-    val got = Knn.nearest(q, pts, GeoTables.KnnLevel).collect()
-      .map(r => r.getLong(0) -> r.getDouble(1)).toMap
-    assert(Knn.lastFallback == Some((-1L, 3L, false)),
-      s"fallback must broadcast points (lazily, uncounted queries), got ${Knn.lastFallback}")
     val ptl = Seq((5.0, 5.0), (95.0, 95.0), (50.0, 5.0))
-    assert(got.size == 40)
-    ql.foreach { case (id, qx, qy) =>
-      val want = ptl.map { case (x, y) =>
-        (x - qx) * (x - qx) + (y - qy) * (y - qy) }.min
-      assert(got(id) == want, s"qid $id")
-    }
+    // default threshold: the lazy small-points branch; threshold 0: the
+    // eager ring rounds, then the counted fallback with all 40 queries
+    // left over (too many to broadcast under a 0-row threshold)
+    Seq(None -> Some((-1L, 3L, false)), Some("0") -> Some((40L, 3L, false)))
+      .foreach { case (thr, wantFallback) =>
+        thr.foreach(spark.conf.set("spark.graft.knn.broadcastRows", _))
+        try {
+          val got = Knn.nearest(q, pts, GeoTables.KnnLevel).collect()
+            .map(r => r.getLong(0) -> r.getDouble(1)).toMap
+          assert(Knn.lastFallback == wantFallback,
+            s"threshold $thr: fallback ${Knn.lastFallback}, want $wantFallback")
+          assert(got.size == 40)
+          ql.foreach { case (id, qx, qy) =>
+            val want = ptl.map { case (x, y) =>
+              (x - qx) * (x - qx) + (y - qy) * (y - qy) }.min
+            assert(got(id) == want, s"threshold $thr, qid $id")
+          }
+        } finally spark.conf.unset("spark.graft.knn.broadcastRows")
+      }
   }
 
   test("knn: nearestValue sparse corpus — expansion + fallback keep the tiebreak") {
@@ -72,11 +81,20 @@ class Ops12Spec extends SparkSpec {
     val pts = Seq((30.0, 50.0, 9.0), (70.0, 50.0, 3.0))
       .toDF("x", "y", "value")
     val q = Seq((1L, 50.0, 50.0)).toDF("qid", "qx", "qy")
-    val r = Knn.nearestValue(q, pts, GeoTables.KnnLevel).collect()
-    assert(r.length == 1)
-    assert(r(0).getDouble(1) == 400.0 && r(0).getDouble(2) == 3.0)
-    assert(Knn.lastFallback == Some((-1L, 2L, false)),
-      "2 points are broadcast-small: lazy nested loop broadcasting the point side")
+    // 2 points are broadcast-small: lazy nested loop broadcasting the
+    // point side; under a 0-row threshold the eager rounds miss and the
+    // counted fallback resolves the one leftover query
+    Seq(None -> Some((-1L, 2L, false)), Some("0") -> Some((1L, 2L, false)))
+      .foreach { case (thr, wantFallback) =>
+        thr.foreach(spark.conf.set("spark.graft.knn.broadcastRows", _))
+        try {
+          val r = Knn.nearestValue(q, pts, GeoTables.KnnLevel).collect()
+          assert(r.length == 1)
+          assert(r(0).getDouble(1) == 400.0 && r(0).getDouble(2) == 3.0, s"threshold $thr")
+          assert(Knn.lastFallback == wantFallback,
+            s"threshold $thr: fallback ${Knn.lastFallback}, want $wantFallback")
+        } finally spark.conf.unset("spark.graft.knn.broadcastRows")
+      }
   }
 
   test("sessionize: late-beyond-watermark events are dropped and counted") {

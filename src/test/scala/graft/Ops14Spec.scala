@@ -253,16 +253,16 @@ class Ops14Spec extends SparkSpec {
     assert(got("T") === ((1, 0L, 0.0, 0L, 0.0)))
   }
 
-  test("repetitionStats: exact-half 4-dp ties round half-to-even (oracle mode)") {
+  test("repetitionStats: exact-half 4-dp ties round half-up (oracle mode)") {
     // 64 distinct tokens → top2_cnt = 1, top2_frac = 2/64 = 0.03125: an
-    // exactly-representable 4-dp tie. HALF_UP gave 0.0313 while the
-    // driver's DuckDB (nearbyint) resolves dyadic ties half-to-even —
-    // the r5 q_repetition hash FAIL. bround pins 0.0312.
+    // exactly-representable 4-dp tie. The DuckDB oracle rounds it away
+    // from zero (round(2/64, 4) = 0.0313); HALF_EVEN's 0.0312 was the
+    // q_repetition mismatch.
     val text = (0 until 64).map(i => f"t$i%02d").mkString(" ")
     val r = TextOps.repetitionStats(Seq(("E", text)).toDF("doc_id", "text"), 3)
       .collect().head
     assert(r.getInt(1) == 64 && r.getLong(2) == 1L)
-    assert(r.getDouble(3) == 0.0312, s"top2_frac must round half-even: ${r.getDouble(3)}")
+    assert(r.getDouble(3) == 0.0313, s"top2_frac must round half-up: ${r.getDouble(3)}")
   }
 
   test("repetitionStats: overlapping dup windows are not double-counted") {
