@@ -15,8 +15,10 @@ import graft.io.GeoTables
   */
 object BenchKernel {
 
-  /** Tile assignment: map matched points to the fixed 8×8 dem tiling. */
-  private def tileOf(xc: String, yc: String) = struct(
+  /** Tile assignment: the fixed 8×8 dem tile of a matched point, as two
+    * int columns `tr`, `tc` — a primitive grouping key (a struct key turns
+    * off Spark's fast primitive-key aggregation map). */
+  private def tileOf(xc: String, yc: String) = Seq(
     least(lit(7), floor((lit(100.0) - col(yc)) / 12.5).cast("int")).as("tr"),
     least(lit(7), floor(col(xc) / 12.5).cast("int")).as("tc"))
 
@@ -34,11 +36,10 @@ object BenchKernel {
     }
   }
 
-  /** Run the kernel over a prepared docs table. Returns
-    * (result rows, per-partition metric rows). `level` is the PIP join's
-    * cell-cover level (default = the GeoTables production setting). */
-  def run(spark: SparkSession, docs: DataFrame,
-          level: Int = GeoTables.JoinLevel): (Long, Long) = {
+  /** The kernel's tile aggregate over a prepared docs table:
+    * (poly_doc, tr, tc, n_pts, sum_val), one row per polygon and tile its
+    * matched points fall in. `level` is the PIP join's cell-cover level. */
+  private[graft] def assigned(docs: DataFrame, level: Int): DataFrame = {
     // long doc keys through the hot join/agg path: hashing + row width of
     // a bigint beats a 13-char string at 10^8-row scale
     val spans = docs.select(
@@ -48,24 +49,30 @@ object BenchKernel {
     val polys = GeoTables.polySpans(spans, col("doc_key"))
     val pts = GeoTables.pointSpans(spans, col("doc_key"))
 
-    // PIP spatial join + tile assignment.
-    // Tried and rejected (round 6): broadcasting the point side removes
-    // both join exchanges (the 123 MB poly-cell shuffle at sf0.1), but
-    // the partial aggregation then runs in the poly scan stage and the
-    // per-partition metric below reports the scan's partition count —
-    // metric_rows 1984 → 248, a visible change to the kernel's reported
-    // output — while the wall win measured within noise (the removed
-    // shuffle is local-disk-fast and the broadcast build is paid every
-    // rep). The shuffle-hash point-side build stays.
-    val assigned = SpatialJoin.pip(pts, polys, level)
-      .withColumn("tile", tileOf("x", "y"))
-      .groupBy(col("poly_doc"), col("tile"))
+    // PIP spatial join + tile assignment. The point side is the join's
+    // hash build (`PipPlan.PointBuild`). At or below Spark's broadcast
+    // threshold it is broadcast: the poly-cell side is never exchanged, and
+    // each polygon's groups are complete in the task that exploded its
+    // cells, so the partial aggregate already emits the final groups. On a
+    // 4-core host at perfbench kernel scale (90k points, a 6.6 MB estimated
+    // point side) this and the primitive (tr, tc) key took the median task
+    // CPU per pass from 3.4 s to 1.6 s and the shuffle write from 14.1 MB to
+    // 0.6 MB (BENCH.md); either half alone fell short. Above the threshold
+    // (graft.Bench at sf0.1: 44 MB) the shuffle-hash build on `cell` stays.
+    SpatialJoin.pip(pts, polys, level)
+      .groupBy(col("poly_doc") +: tileOf("x", "y"): _*)
       .agg(count(lit(1)).as("n_pts"), sum(col("value")).as("sum_val"))
+  }
 
+  /** Run the kernel over a prepared docs table. Returns
+    * (result rows, per-partition metric rows). `level` is the PIP join's
+    * cell-cover level (default = the GeoTables production setting). */
+  def run(spark: SparkSession, docs: DataFrame,
+          level: Int = GeoTables.JoinLevel): (Long, Long) = {
     // per-partition metrics (north rule): row count + level-4 cell histogram
-    val metrics = assigned
+    val metrics = assigned(docs, level)
       .withColumn("cell", graft.functions.GeoFunctions.cell_of(
-        col("tile.tc") * 12.5 + 6.25, lit(100.0) - col("tile.tr") * 12.5 - 6.25, lit(4)))
+        col("tc") * 12.5 + 6.25, lit(100.0) - col("tr") * 12.5 - 6.25, lit(4)))
       .groupBy(spark_partition_id().as("partition_id"), col("cell"))
       .agg(count(lit(1)).as("rows"))
 

@@ -78,8 +78,10 @@ object Knn {
     * (unresolved count, point count, queries side broadcast?). The lazy
     * small-points path reports unresolved = -1 (never counted: the
     * nested loop is part of the consumer's single action) and always
-    * broadcasts the point side. None when every query resolved within
-    * the eager ring rounds (no fallback built). */
+    * broadcasts the point side. The cutoff path of [[nearestValue]]
+    * counts nothing and broadcasts its boundary-equality queries:
+    * (-1, -1, true). None when every query resolved within the eager ring
+    * rounds (no fallback built). */
   private[graft] var lastFallback: Option[(Long, Long, Boolean)] = None
 
   private val CellQidBase = 1000000
@@ -276,6 +278,7 @@ object Knn {
           .select(col("qid"))
           .join(q, Seq("qid"))
           .select(col("qid"), col("qx"), col("qy"))
+        lastFallback = Some((-1L, -1L, true))
         resolvedOf(ringBest, MinD2Value).unionByName(bestOf(
           points.crossJoin(broadcast(unresolved)).withColumn("d2", d2Col).where(inCutoff),
           MinD2Value, withBound = false))

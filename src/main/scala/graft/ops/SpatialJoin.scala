@@ -8,7 +8,13 @@ import graft.functions.GeoFunctions._
   * runs the same annotate, cover, join and refine; the plan picks only the
   * exchange shape and the per-cell salt fan-out.
   *
-  *  - `Shuffle`: shuffle-hash join keyed on `cell`, point side as build.
+  *  - `PointBuild`: the point side is the hash build. It is broadcast when
+  *    Spark's estimate of its size is at most
+  *    `spark.sql.autoBroadcastJoinThreshold` (Spark's own rule for joins
+  *    without a hint, decided at planning time, no job run), so the
+  *    poly-cell side is never exchanged and each polygon's candidates stay
+  *    in the task that exploded its cells; above the threshold (or with it
+  *    at -1) it is a shuffle-hash join keyed on `cell`.
   *  - `BroadcastPolys`: broadcast the poly-cell side so the point side
   *    never shuffles (the analog of the reference caching one STRtree per
   *    worker); for a small polygon side.
@@ -18,7 +24,7 @@ import graft.functions.GeoFunctions._
   */
 sealed trait PipPlan
 object PipPlan {
-  case object Shuffle extends PipPlan
+  case object PointBuild extends PipPlan
   case object BroadcastPolys extends PipPlan
   final case class Salted(n: Int) extends PipPlan {
     require(n >= 1, s"salt count $n must be >= 1")
@@ -47,7 +53,7 @@ object SpatialJoin {
     * are the same under every plan.
     */
   def pip(points: DataFrame, polys: DataFrame, level: Int,
-          plan: PipPlan = PipPlan.Shuffle): DataFrame = {
+          plan: PipPlan = PipPlan.PointBuild): DataFrame = {
     // Envelope + rectangle flag from ONE cached parse per polygon
     // (st_env_rect). Single join:
     //  - the exchange carries four flat envelope doubles + `gen_geom`,
@@ -84,13 +90,17 @@ object SpatialJoin {
          .withColumn("salt", explode(sequence(lit(0), col("salt_n") - 1)))
          .drop("salt_n"),
        Seq("cell", "salt"))
-    // shuffle-hash with the POINT side as build: the exploded poly-cell
-    // side is cover-factor× larger (60× at the kernel's level-7 boxes,
-    // times the salt for the salted plans), so building the hash relation
-    // from points and streaming poly-cells probes the smaller table
-    // (candidate emission is unchanged)
+    // the POINT side is the hash build: the exploded poly-cell side is
+    // cover-factor× larger (60× at the kernel's level-7 boxes, times the
+    // salt for the salted plans), so building the hash relation from
+    // points and streaming poly-cells probes the smaller table (candidate
+    // emission is unchanged)
     val (left, right, keys) = plan match {
-      case PipPlan.Shuffle => (ptCells.hint("shuffle_hash"), cells, Seq("cell"))
+      case PipPlan.PointBuild =>
+        val broadcastable = ptCells.queryExecution.optimizedPlan.stats.sizeInBytes <=
+          ptCells.sparkSession.sessionState.conf.autoBroadcastJoinThreshold
+        (if (broadcastable) broadcast(ptCells) else ptCells.hint("shuffle_hash"),
+         cells, Seq("cell"))
       case PipPlan.BroadcastPolys => (ptCells, broadcast(cells), Seq("cell"))
       case PipPlan.Salted(n) => salted(_.withColumn("salt_n", lit(n)))
       case PipPlan.Adaptive(target) =>

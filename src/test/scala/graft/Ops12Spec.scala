@@ -95,6 +95,13 @@ class Ops12Spec extends SparkSpec {
             s"threshold $thr: fallback ${Knn.lastFallback}, want $wantFallback")
         } finally spark.conf.unset("spark.graft.knn.broadcastRows")
       }
+    // a cutoff call after the calls above reports its own decision (no
+    // count, queries side broadcast), not the counted fallback before it;
+    // both points lie inside the cutoff ring, so the tiebreak holds there too
+    val r = Knn.nearestValue(q, pts, GeoTables.KnnLevel, cutoff = Some(25.0)).collect()
+    assert(r.length == 1 && r(0).getDouble(1) == 400.0 && r(0).getDouble(2) == 3.0)
+    assert(Knn.lastFallback == Some((-1L, -1L, true)),
+      s"cutoff call: fallback ${Knn.lastFallback}")
   }
 
   test("sessionize: late-beyond-watermark events are dropped and counted") {

@@ -36,15 +36,16 @@ class Ops4Spec extends SparkSpec {
       (i, x, y, 1.0)
     }.toDF("point_id", "x", "y", "value")
     val zones = GeoTables.zones(spark, sf001)
-    // every plan, the plain Shuffle one included, against the brute-force
-    // box reference (no cell cover)
+    // every plan, the plain PointBuild one on both sides of the broadcast
+    // threshold included, against the brute-force box reference (no cell
+    // cover)
     val expected = bboxPairs(pts, zones)
     assert(expected.nonEmpty)
-    for (plan <- Seq(PipPlan.Shuffle, PipPlan.BroadcastPolys, PipPlan.Salted(4),
-                     PipPlan.Adaptive(1000L))) {
+    forPipInputs(Seq(PipPlan.PointBuild, PipPlan.BroadcastPolys, PipPlan.Salted(4),
+                     PipPlan.Adaptive(1000L))) { (plan, thr) =>
       val got = SpatialJoin.pip(pts, zones.select(col("zone_id"), col("wkt")),
         GeoTables.JoinLevel, plan)
-      assert(pipPairs(got) == expected, plan)
+      assert(pipPairs(got) == expected, s"$plan, threshold $thr")
     }
     // the hot cell actually got a salt factor > 1
     val maxSalt = AdaptiveSkew.saltFactors(pts, GeoTables.JoinLevel, 1000L)

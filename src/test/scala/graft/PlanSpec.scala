@@ -1,12 +1,17 @@
 package graft
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 import graft.io.GeoTables
 import graft.ops.{BenchKernel, PipPlan, SpatialJoin}
 import org.apache.spark.sql.catalyst.optimizer.BuildLeft
+import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
 import org.apache.spark.sql.execution.{QueryExecution, SparkPlan}
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
-import org.apache.spark.sql.execution.joins.ShuffledHashJoinExec
+import org.apache.spark.sql.execution.aggregate.HashAggregateExec
+import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+import org.apache.spark.sql.execution.joins.{BroadcastHashJoinExec, ShuffledHashJoinExec}
 import org.apache.spark.sql.util.QueryExecutionListener
 
 /** Plan-shape regression guards: the perf-critical properties verified by
@@ -16,51 +21,131 @@ class PlanSpec extends SparkSpec with AdaptiveSparkPlanHelper {
   test("PIP rect branch prunes wkt and uses a hash join keyed on cell") {
     val pts = GeoTables.points(spark, sf001)
     val z = GeoTables.zones(spark, sf001).select(col("zone_id"), col("wkt"))
-    for (pipPlan <- Seq(PipPlan.Shuffle, PipPlan.BroadcastPolys, PipPlan.Salted(4),
-                        PipPlan.Adaptive(2000L))) {
+    forPipInputs(Seq(PipPlan.PointBuild, PipPlan.BroadcastPolys, PipPlan.Salted(4),
+                     PipPlan.Adaptive(2000L))) { (pipPlan, thr) =>
+      val input = s"$pipPlan, threshold $thr"
       val agg = SpatialJoin.pip(pts, z, GeoTables.JoinLevel, pipPlan)
         .groupBy("zone_id").agg(count(lit(1)).as("n"))
       val plan = agg.queryExecution.executedPlan.toString
 
       // the inner cell equi-join is a hash join keyed on cell, plus salt
-      // for the salted plans
+      // for the salted plans; PointBuild broadcasts the sf0.001 point side
+      // under the default threshold and shuffles it at -1
       val key = pipPlan match {
         case PipPlan.Salted(_) | PipPlan.Adaptive(_) => """cell#\d+L?, salt#\d+"""
         case _ => """cell#\d+L?"""
       }
-      val join = s"""(ShuffledHashJoin|BroadcastHashJoin) \\[$key\\], \\[$key\\], Inner""".r
-      assert(join.findFirstIn(plan).isDefined, s"$pipPlan: no hash join on [$key]\n$plan")
+      val op = (pipPlan, thr) match {
+        case (PipPlan.PointBuild, None) => "BroadcastHashJoin"
+        case (PipPlan.PointBuild, Some(_)) => "ShuffledHashJoin"
+        case _ => "ShuffledHashJoin|BroadcastHashJoin"
+      }
+      val join = s"""($op) \\[$key\\], \\[$key\\], Inner""".r
+      assert(join.findFirstIn(plan).isDefined, s"$input: no $op on [$key]\n$plan")
       // the exchanges feeding the join must not carry the WKT string: every
       // Exchange line's column list should be wkt-free (wkt appears only in
       // scans/projections of the general-polygon branch)
       val badExchange = plan.linesIterator
         .filter(_.trim.startsWith("+- Exchange hashpartitioning"))
         .exists(_.contains("wkt"))
-      assert(!badExchange, s"$pipPlan: wkt leaked into a shuffle exchange")
+      assert(!badExchange, s"$input: wkt leaked into a shuffle exchange")
       // partial aggregation before the final exchange (map-side combine)
       assert(plan.contains("HashAggregate"), plan)
     }
 
-    // the kernel runs the Shuffle plan: exactly one shuffle-hash join,
-    // built from the point side
-    val executed = new java.util.concurrent.LinkedBlockingQueue[SparkPlan]()
-    val listener = new QueryExecutionListener {
-      // the kernel's one action: a global (total, mrows) aggregate
-      def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit =
-        if (qe.analyzed.output.map(_.name) == Seq("total", "mrows")) executed.put(qe.executedPlan)
-      def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
+    // the kernel's executed plan on both sides of the broadcast threshold
+    def kernelPlan(): SparkPlan = {
+      val executed = new java.util.concurrent.LinkedBlockingQueue[SparkPlan]()
+      val listener = new QueryExecutionListener {
+        // the kernel's one action: a global (total, mrows) aggregate
+        def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit =
+          if (qe.analyzed.output.map(_.name) == Seq("total", "mrows")) executed.put(qe.executedPlan)
+        def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
+      }
+      spark.listenerManager.register(listener)
+      // listeners are called asynchronously: stay registered until the call
+      val kernel = try {
+        BenchKernel.run(spark, BenchKernel.prepareInput(spark, sf001))
+        executed.poll(60, java.util.concurrent.TimeUnit.SECONDS)
+      } finally spark.listenerManager.unregister(listener)
+      assert(kernel != null, "kernel action was not observed")
+      // the tile aggregate groups on primitive keys: a struct key turns off
+      // Spark's fast primitive-key aggregation map
+      val partial = collect(kernel) {
+        // a partial aggregate requires no child distribution
+        case a: HashAggregateExec if a.requiredChildDistributionExpressions.isEmpty &&
+            a.groupingExpressions.exists(_.references.exists(_.name == "poly_doc")) => a
+      }
+      assert(partial.size == 1, kernel.toString)
+      assert(!partial.head.groupingExpressions.exists(_.dataType.isInstanceOf[StructType]),
+        s"struct-typed grouping key in the kernel's partial aggregate\n$kernel")
+      kernel
     }
-    spark.listenerManager.register(listener)
-    // listeners are called asynchronously: stay registered until the call
-    val kernel = try {
-      BenchKernel.run(spark, BenchKernel.prepareInput(spark, sf001))
-      executed.poll(60, java.util.concurrent.TimeUnit.SECONDS)
-    } finally spark.listenerManager.unregister(listener)
-    assert(kernel != null, "kernel action was not observed")
-    val shj = collect(kernel) { case j: ShuffledHashJoinExec => j }
-    assert(shj.size == 1, kernel.toString)
-    assert(shj.head.buildSide == BuildLeft && shj.head.left.output.exists(_.name == "x"),
-      s"kernel join must build from the point side\n$kernel")
+    def fromPoints(p: SparkPlan) = p.output.exists(_.name == "x")
+
+    // default threshold: the sf0.001 point side is under it, so the one
+    // join is a broadcast built from the points and the poly-cell side is
+    // never exchanged on `cell`
+    val bcast = kernelPlan()
+    // (the docs assembly below it has a broadcast join of its own)
+    val bhj = collect(bcast) {
+      case j: BroadcastHashJoinExec if j.leftKeys.exists(_.references.exists(_.name == "cell")) => j
+    }
+    assert(bhj.size == 1, bcast.toString)
+    assert(fromPoints(if (bhj.head.buildSide == BuildLeft) bhj.head.left else bhj.head.right),
+      s"kernel join must build from the point side\n$bcast")
+    assert(collect(bcast) { case j: ShuffledHashJoinExec => j }.isEmpty, bcast.toString)
+    val joinKeys = (bhj.head.leftKeys ++ bhj.head.rightKeys).flatMap(_.references).toSet
+    val cellExchanges = collect(bcast) {
+      case e: ShuffleExchangeExec if (e.outputPartitioning match {
+        case h: HashPartitioning => h.expressions.exists(_.references.exists(joinKeys.contains))
+        case _ => false
+      }) => e
+    }
+    assert(cellExchanges.isEmpty, s"poly-cell side exchanged on cell\n$bcast")
+
+    // threshold -1: exactly one shuffle-hash join, built from the points
+    val shuffled = withBroadcastThreshold("-1")(kernelPlan())
+    val shj = collect(shuffled) { case j: ShuffledHashJoinExec => j }
+    assert(shj.size == 1, shuffled.toString)
+    assert(shj.head.buildSide == BuildLeft && fromPoints(shj.head.left),
+      s"kernel join must build from the point side\n$shuffled")
+
+    // the kernel's values, not just its counts: the tile aggregate's
+    // (poly_doc, tr, tc, n_pts, sum_val) multiset is the same on both sides
+    // of the threshold and equals a brute-force reference; (poly_doc, tr,
+    // tc) is the group key, so a duplicated group shows as a count of 2
+    def multiset(df: DataFrame): Map[Seq[Any], Int] =
+      df.collect().toSeq.map(_.toSeq).groupBy(identity).map { case (k, v) => k -> v.size }
+    val cols = Seq("poly_doc", "tr", "tc", "n_pts", "sum_val").map(col)
+    val docs = BenchKernel.prepareInput(spark, sf001)
+    def kernel() = multiset(BenchKernel.assigned(docs, GeoTables.JoinLevel).select(cols: _*))
+    val rowsBcast = kernel()
+    val rowsShuffled = withBroadcastThreshold("-1")(kernel())
+
+    // every point against every polygon by strict box interior, with no
+    // cell cover and no geometry parse: the box bounds come from the wkt
+    // text by regex
+    val spans = docs.select(
+      substring(col("doc_id"), 5, 9).cast("long").as("doc_key"), explode(col("spans")).as("s"))
+    val box = """POLYGON\(\((\d+) (\d+),(\d+) \d+,\d+ (\d+),"""
+    def bound(i: Int) = regexp_extract(col("wkt"), box, i).cast("double")
+    val boxes = GeoTables.polySpans(spans, col("doc_key"))
+      .select(col("poly_doc"), bound(1).as("bx0"), bound(2).as("by0"),
+              bound(3).as("bx1"), bound(4).as("by1"))
+    val docPts = GeoTables.pointSpans(spans, col("doc_key")).select("x", "y", "value")
+    val reference = multiset(docPts.crossJoin(boxes)
+      .where(col("x") > col("bx0") && col("x") < col("bx1") &&
+             col("y") > col("by0") && col("y") < col("by1"))
+      .groupBy(col("poly_doc"),
+        least(lit(7), floor((lit(100.0) - col("y")) / 12.5).cast("int")).as("tr"),
+        least(lit(7), floor(col("x") / 12.5).cast("int")).as("tc"))
+      .agg(count(lit(1)).as("n_pts"), sum(col("value")).as("sum_val"))
+      .select(cols: _*))
+
+    assert(reference.nonEmpty && reference.values.forall(_ == 1))
+    assert(rowsBcast == rowsShuffled, "broadcast and shuffle-hash kernels differ")
+    assert(rowsBcast == reference, "kernel differs from the brute-force reference")
   }
 
   test("sjoin emits pairs once: no dedup shuffle, no global window, hash joins only") {

@@ -41,6 +41,10 @@ class QueriesSpec extends SparkSpec {
     val plain = pipPairs(SpatialJoin.pip(pts, z, GeoTables.JoinLevel))
     for (plan <- Seq(PipPlan.Salted(4), PipPlan.Adaptive(1000L)))
       assert(pipPairs(SpatialJoin.pip(pts, z, GeoTables.JoinLevel, plan)) == plain, plan)
+    // the default plan broadcasts this point side; at threshold -1 it
+    // takes the shuffle-hash build
+    assert(withBroadcastThreshold("-1")(
+      pipPairs(SpatialJoin.pip(pts, z, GeoTables.JoinLevel))) == plain, "threshold -1")
   }
 
   test("pip equals pipBox on box zones (JTS refine vs codegen refine)") {
@@ -52,11 +56,11 @@ class QueriesSpec extends SparkSpec {
     val zones = GeoTables.zones(spark, sf001)
     val expected = bboxPairs(pts, zones)
     assert(expected.nonEmpty)
-    for (plan <- Seq(PipPlan.Shuffle, PipPlan.BroadcastPolys, PipPlan.Salted(4),
-                     PipPlan.Adaptive(1000L))) {
+    forPipInputs(Seq(PipPlan.PointBuild, PipPlan.BroadcastPolys, PipPlan.Salted(4),
+                     PipPlan.Adaptive(1000L))) { (plan, thr) =>
       val got = SpatialJoin.pip(pts, zones.select(col("zone_id"), col("wkt")),
         GeoTables.JoinLevel, plan)
-      assert(pipPairs(got) == expected, plan)
+      assert(pipPairs(got) == expected, s"$plan, threshold $thr")
     }
   }
 

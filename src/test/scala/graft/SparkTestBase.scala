@@ -3,6 +3,7 @@ package graft
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.BeforeAndAfterAll
+import graft.ops.PipPlan
 
 object SharedSpark {
   lazy val spark: SparkSession = {
@@ -33,6 +34,26 @@ abstract class SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
     * shows as count 2. */
   def pipPairs(df: DataFrame): Set[Seq[Any]] =
     rowSet(df.groupBy("zone_id", "point_id").count())
+
+  /** Runs `f` with `spark.sql.autoBroadcastJoinThreshold` set to `v`, then
+    * restores the session's value. -1 turns size-based broadcasts off. */
+  def withBroadcastThreshold[T](v: String)(f: => T): T = {
+    val key = "spark.sql.autoBroadcastJoinThreshold"
+    val prev = spark.conf.getOption(key)
+    spark.conf.set(key, v)
+    try f finally prev.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+  }
+
+  /** `plans` as PIP test inputs. Each runs under the session's broadcast
+    * threshold (`thr` None); `PipPlan.PointBuild` runs once more at -1
+    * (`thr` Some("-1")), because at sf0.001 its point side is always
+    * under the threshold and broadcasts, so only that input reaches its
+    * shuffle-hash side. */
+  def forPipInputs(plans: Seq[PipPlan])(f: (PipPlan, Option[String]) => Unit): Unit =
+    for (plan <- plans) {
+      f(plan, None)
+      if (plan == PipPlan.PointBuild) withBroadcastThreshold("-1")(f(plan, Some("-1")))
+    }
 
   /** Brute-force PIP reference for the axis-aligned box zones: every point
     * against every zone by strict box interior, with no cell cover and no
