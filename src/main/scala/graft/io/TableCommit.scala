@@ -65,9 +65,13 @@ object TableCommit {
   def read(spark: SparkSession, table: String, version: Int = -1): DataFrame = {
     val v = if (version < 0) currentVersion(table) else version
     require(v > 0, s"no snapshots in $table")
-    val dirs = Files.readString(Paths.get(f"${snapDir(table)}/v$v%06d.txt")).split("\n")
-    spark.read.parquet(dirs.toIndexedSeq: _*)
+    readDirs(spark, snapshotDirs(table, v))
   }
+
+  /** The data dirs as one frame, with the schema read from their footers
+    * on the driver: no schema-inference job. */
+  private def readDirs(spark: SparkSession, dirs: Seq[String]): DataFrame =
+    spark.read.schema(ParquetFooters.schema(spark, dirs)).parquet(dirs: _*)
 
   private def snapshotDirs(table: String, version: Int): Seq[String] =
     if (version <= 0) Seq.empty
@@ -90,7 +94,7 @@ object TableCommit {
     val newDirs = snapshotDirs(table, to)
       .diff(snapshotDirs(table, fromVersion))
     if (newDirs.isEmpty) read(spark, table, to).limit(0)
-    else spark.read.parquet(newDirs: _*)
+    else readDirs(spark, newDirs)
   }
 
   /** Compaction: rewrite the CURRENT snapshot as `numFiles` files in one
@@ -119,10 +123,14 @@ object TableCommit {
     * [[compact]]`(sortCols = keyCol :: _)` the dir ranges are disjoint, so
     * a point update rewrites ONE dir while the petabytes in the others are
     * carried into the new snapshot by reference (the Iceberg
-    * copy-on-write contract). Costs: one footer-level min/max per dir
-    * (parquet aggregate pushdown — no row reads), one manifest-sized
-    * range×key semi-join to pick touched dirs, one rewrite of
-    * touched-dirs ∖ update-keys ∪ updates. Older versions stay readable.
+    * copy-on-write contract). Costs: each dir's [min, max] from its parquet
+    * footers' row-group statistics, read on the driver (no job); one pass
+    * over `updates` that tests every update key against every range (one
+    * job); one rewrite of touched-dirs ∖ update-keys ∪ updates. A dir whose
+    * footers lack statistics for the key, or whose key type has no exact
+    * footer min/max (see [[ParquetFooters.keyRange]]), counts as touched:
+    * always correct, since rewriting a dir no update key hits carries its
+    * rows unchanged. Older versions stay readable.
     *
     * `updates` must be key-unique and schema-compatible with the table;
     * duplicate update keys would all survive the rewrite (same as
@@ -131,42 +139,31 @@ object TableCommit {
     * @return (new version, number of data dirs rewritten) */
   def merge(spark: SparkSession, table: String, updates: DataFrame,
             keyCol: String): (Int, Int) = {
-    import org.apache.spark.sql.functions.{col, min, max}
+    import org.apache.spark.sql.functions.{col, lit}
     val prev = currentVersion(table)
     val dirs = snapshotDirs(table, prev)
     require(dirs.nonEmpty, s"no snapshots in $table")
-    // footer-only stats scan per dir (no filter, flat column → pushes down)
-    val pushdown = "spark.sql.parquet.aggregatePushdown"
-    val saved = spark.conf.getOption(pushdown)
-    spark.conf.set(pushdown, "true")
-    val ranges =
-      try dirs.map { d =>
-        val r = spark.read.parquet(d)
-          .agg(min(col(keyCol)).as("mn"), max(col(keyCol)).as("mx")).head()
-        (d, r.get(0), r.get(1))
-      } finally saved match {
-        case Some(v) => spark.conf.set(pushdown, v)
-        case None    => spark.conf.unset(pushdown)
-      }
-    // touched = dirs whose range holds at least one update key; ONE
-    // manifest-sized job (|dirs| rows), not a per-dir probe
-    val kt = updates.schema(keyCol).dataType
-    val rangeSchema = org.apache.spark.sql.types.StructType(Seq(
-      org.apache.spark.sql.types.StructField("dir",
-        org.apache.spark.sql.types.StringType, nullable = false),
-      org.apache.spark.sql.types.StructField("mn", kt),
-      org.apache.spark.sql.types.StructField("mx", kt)))
-    val rows: java.util.List[org.apache.spark.sql.Row] =
-      java.util.Arrays.asList(ranges.map { case (d, mn, mx) =>
-        org.apache.spark.sql.Row(d, mn, mx) }: _*)
-    val rangeDf = spark.createDataFrame(rows, rangeSchema)
-    val touched = rangeDf.join(updates.select(col(keyCol).as("k")).distinct(),
-        col("k") >= col("mn") && col("k") <= col("mx"), "left_semi")
-      .select("dir").collect().map(_.getString(0)).toSeq
+    val ranges = dirs.map(d => d -> ParquetFooters.keyRange(spark, d, keyCol))
+    val bounded = ranges.collect { case (d, Some(Some((mn, mx)))) => (d, mn, mx) }
+    // one job: each partition of `updates` marks the ranges its keys fall
+    // in, and the driver ORs the marks
+    val n = bounded.size
+    val hit =
+      if (n == 0) Array.empty[Boolean]
+      else updates.select(bounded.map { case (_, mn, mx) =>
+          col(keyCol) >= lit(mn) && col(keyCol) <= lit(mx) }: _*)
+        .rdd.mapPartitions { rows =>
+          val marks = new Array[Boolean](n)
+          rows.foreach(r => (0 until n).foreach(i =>
+            marks(i) ||= !r.isNullAt(i) && r.getBoolean(i)))
+          Iterator(marks)
+        }.fold(new Array[Boolean](n))((a, b) => a.zip(b).map { case (x, y) => x || y })
+    val hitDirs = bounded.map(_._1).zip(hit).collect { case (d, true) => d }.toSet
+    val touched = ranges.collect { case (d, r) if r.isEmpty || hitDirs(d) => d }
     val untouched = dirs.diff(touched)
     val rewritten =
       if (touched.isEmpty) updates // pure insert
-      else spark.read.parquet(touched: _*)
+      else readDirs(spark, touched)
         .join(updates.select(col(keyCol)), Seq(keyCol), "left_anti")
         .unionByName(updates)
     val id = java.util.UUID.nameUUIDFromBytes((table + prev + "mrg").getBytes).toString

@@ -1,6 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Distributed BPE tokenizer training (Sennrich et al. 2016) — the one
@@ -71,51 +71,57 @@ object Bpe {
     // session's corpus-sized shuffle-partition count schedules dozens of
     // empty tasks per round — at 20 rounds × 2 AQE stage-jobs the
     // scheduling overhead WAS the query (measured 4.0 s → 2.5 s at
-    // sf0.1). Round 1 runs under the session settings (its action also
+    // sf0.1). Round 1 runs in the caller's session (its action also
     // materializes the corpus pass at full parallelism); the LOOP then
-    // adopts the materialized word table's own partition count — i.e.
-    // AQE's size-based coalescing of the vocabulary, the scale-adaptive
-    // answer — and turns AQE off for the remaining rounds only: the
+    // moves to a session of its own that adopts the materialized word
+    // table's own partition count — i.e. AQE's size-based coalescing of
+    // the vocabulary, the scale-adaptive answer — with AQE off: the
     // partitioning is already derived from the data, and AQE's
-    // stage-by-stage execution doubles the per-round job count.
-    val sessParts = spark.conf.get("spark.sql.shuffle.partitions")
-    val sessAqe = spark.conf.get("spark.sql.adaptive.enabled")
+    // stage-by-stage execution doubles the per-round job count. The
+    // caller's session is never changed, so queries it plans while the
+    // loop runs keep its settings.
+    var loop = spark
     val out = scala.collection.mutable.ArrayBuffer.empty[(Int, String, String, Long)]
-    try {
-      var r = 1
-      var done = false
-      while (r <= merges && !done) {
-        val top = pairCounts(seqs)
-          .orderBy(col("c").desc, col("pair").asc).limit(1).collect()
-        if (r == 1) {
-          val loopParts = math.max(1, seqs.rdd.getNumPartitions).toString
-          spark.conf.set("spark.sql.shuffle.partitions", loopParts)
-          spark.conf.set("spark.sql.adaptive.enabled", "false")
-        }
-        if (top.isEmpty || top(0).getLong(1) < 2) done = true
-        else {
-          val pair = top(0).getString(0)
-          val freq = top(0).getLong(1)
-          val merged = pair.replace(" ", "")
-          out += ((r, pair, merged, freq))
-          // the pair rides a broadcast 1-row frame, not a SQL literal: a
-          // per-round literal changes the generated code every round (20
-          // codegen compiles dominated the loop); with column arguments the
-          // plan shape — and the codegen cache entry — is identical across
-          // rounds. `replace` itself (the oracle's exact function) and the
-          // produced strings are unchanged.
-          val patDf = spark.createDataFrame(Seq((s" $pair ", s" $merged ")))
-            .toDF("pat", "rep")
-          seqs = Checkpoints.ephemeral(seqs.crossJoin(broadcast(patDf))
-            .select(expr("replace(seq, pat, rep)").as("seq"),
-              col("cnt"))).toDF()
-          r += 1
-        }
+    var r = 1
+    var done = false
+    while (r <= merges && !done) {
+      val top = pairCounts(seqs)
+        .orderBy(col("c").desc, col("pair").asc).limit(1).collect()
+      if (r == 1) {
+        loop = loopSession(spark, math.max(1, seqs.rdd.getNumPartitions))
+        seqs = loop.createDataFrame(seqs.rdd, seqs.schema)
       }
-    } finally {
-      spark.conf.set("spark.sql.shuffle.partitions", sessParts)
-      spark.conf.set("spark.sql.adaptive.enabled", sessAqe)
+      if (top.isEmpty || top(0).getLong(1) < 2) done = true
+      else {
+        val pair = top(0).getString(0)
+        val freq = top(0).getLong(1)
+        val merged = pair.replace(" ", "")
+        out += ((r, pair, merged, freq))
+        // the pair rides a broadcast 1-row frame, not a SQL literal: a
+        // per-round literal changes the generated code every round (20
+        // codegen compiles dominated the loop); with column arguments the
+        // plan shape — and the codegen cache entry — is identical across
+        // rounds. `replace` itself (the oracle's exact function) and the
+        // produced strings are unchanged.
+        val patDf = loop.createDataFrame(Seq((s" $pair ", s" $merged ")))
+          .toDF("pat", "rep")
+        seqs = Checkpoints.ephemeral(seqs.crossJoin(broadcast(patDf))
+          .select(expr("replace(seq, pat, rep)").as("seq"),
+            col("cnt"))).toDF()
+        r += 1
+      }
     }
     out.toSeq.toDF("rank", "pair", "merged", "freq")
+  }
+
+  /** A new session on the same context with the caller's settings, except
+    * `parts` shuffle partitions and AQE off. */
+  private def loopSession(spark: SparkSession, parts: Int): SparkSession = {
+    val s = spark.newSession()
+    spark.conf.getAll.foreach { case (k, v) =>
+      if (!s.conf.getOption(k).contains(v)) s.conf.set(k, v) }
+    s.conf.set("spark.sql.shuffle.partitions", parts.toString)
+    s.conf.set("spark.sql.adaptive.enabled", "false")
+    s
   }
 }

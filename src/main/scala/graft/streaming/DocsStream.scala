@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.streaming.Trigger
 
-import graft.io.GeoTables
+import graft.io.{GeoTables, ParquetFooters}
 import graft.ops.{PipPlan, SpatialJoin}
 
 /** Structured-Streaming ingest of the interleaved docs table (SURVEY.md
@@ -63,7 +63,8 @@ object DocsStream {
       .start()
     q.awaitTermination()
 
-    spark.read.parquet(sinkDir)
+    // the sink's schema from its footers: no inference job
+    spark.read.schema(ParquetFooters.schema(spark, Seq(sinkDir))).parquet(sinkDir)
       .groupBy(col("zone_id"))
       .agg(sum(col("n_pts")).as("n_pts"), sum(col("sum_val")).as("sum_val"))
       .createOrReplaceTempView(sinkTable)

@@ -208,6 +208,32 @@ class Ops23Spec extends SparkSpec {
       "early-stop path leaked the loop conf")
   }
 
+  test("BPE training leaves the caller's session settings alone while its round loop runs") {
+    import graft.ops.Bpe
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+    import scala.concurrent.{Await, Future}
+    import scala.concurrent.ExecutionContext.Implicits.global
+    val parts = spark.conf.get("spark.sql.shuffle.partitions")
+    val aqe = spark.conf.get("spark.sql.adaptive.enabled")
+    val text = Seq("low", "lower", "newest", "widest", "lowest", "newer", "wider",
+      "slowest", "snowiest").flatMap(w => Seq.fill(3)(w)).mkString(" ")
+    val docs = Seq((1L, text)).toDF("doc_id", "text")
+    val expected = Bpe.train(docs, 12).orderBy("rank").collect().toSeq
+    // plan queries on the caller's session while a second train() runs
+    val training = Future(Bpe.train(docs, 12).orderBy("rank").collect().toSeq)
+    val seen = scala.collection.mutable.ArrayBuffer.empty[(String, String, Boolean)]
+    while (!training.isCompleted) {
+      val plan = spark.range(100).groupBy(col("id") % 7).count().queryExecution.executedPlan
+      seen += ((spark.conf.get("spark.sql.shuffle.partitions"),
+        spark.conf.get("spark.sql.adaptive.enabled"), plan.isInstanceOf[AdaptiveSparkPlanExec]))
+      Thread.sleep(2)
+    }
+    assert(Await.result(training, scala.concurrent.duration.Duration.Inf) == expected)
+    assert(seen.nonEmpty)
+    assert(seen.forall(_ == ((parts, aqe, aqe.toBoolean))),
+      s"the caller's session changed mid-train: ${seen.distinct}")
+  }
+
   test("kmeans: two obvious clusters recovered, empty cluster keeps its centroid, invariance") {
     import graft.ops.Clustering
     def v(xs: Float*) = xs.toArray

@@ -21,6 +21,9 @@ class Ops4Spec extends SparkSpec {
       .groupBy(col("zone_id"))
       .agg(count(lit(1)).as("n_pts"), sum(col("value")).as("sum_val"))
     assert(rowSet(spark.table("stream_zonal")) == rowSet(batch))
+    // the sink is read back with its footer schema, equal to the inferred one
+    assert(spark.read.schema(graft.io.ParquetFooters.schema(spark, Seq(s"$tmp/sink")))
+      .parquet(s"$tmp/sink").schema == spark.read.parquet(s"$tmp/sink").schema)
   }
 
   test("adaptive salted PIP equals plain PIP on a Zipfian distribution") {

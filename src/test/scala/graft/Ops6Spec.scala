@@ -166,6 +166,107 @@ class Ops6Spec extends SparkSpec {
     assert(TableCommit.read(spark, dir).count() == 306)
   }
 
+  /** Data dirs of snapshot `v` of `table`. */
+  private def snapshot(table: String, v: Int): Seq[String] =
+    java.nio.file.Files.readString(java.nio.file.Paths
+      .get(f"$table/snapshots/v$v%06d.txt")).split("\n").toSeq
+
+  test("TableCommit and Lineage start no metadata jobs") {
+    import spark.implicits._
+    val tmp = java.nio.file.Files.createTempDirectory("tc-jobs").toString
+    val dir = s"$tmp/t"
+    Seq(0, 100, 200).foreach(lo => TableCommit.commit(
+      (lo until lo + 100).map(i => (i, s"a$i")).toDF("id", "v"), dir))
+    // building a read plans from footers: no schema-inference job
+    val (_, readJobs) = countJobs {
+      TableCommit.read(spark, dir)
+      TableCommit.read(spark, dir, 1)
+      TableCommit.readIncremental(spark, dir, 1)
+      TableCommit.readIncremental(spark, dir, 3) // empty diff
+    }
+    assert(readJobs == 0, s"building reads started $readJobs jobs")
+    // ranges from footers, touched dirs in one job, then the rewrite
+    val ((v, rewritten), mergeJobs) = countJobs(TableCommit.merge(spark, dir,
+      Seq((150, "UPD"), (1000, "new")).toDF("id", "v"), "id"))
+    assert(v == 4 && rewritten == 1)
+    assert(mergeJobs <= 5, s"merge started $mergeJobs jobs")
+    // a fresh checkpointed run: one aggregate (the manifest), the data
+    // write and the manifest write
+    val df = spark.range(1000).select(col("id"),
+      (col("id") % 8).as("bucket"), (col("id") * 31).as("cell"))
+    val ((n, t), lineageJobs) = countJobs(Lineage.runWithCheckpoint(spark, df, "bucket", s"$tmp/lin"))
+    assert(n == 8 && t == 8)
+    assert(lineageJobs <= 4, s"a fresh Lineage run started $lineageJobs jobs")
+  }
+
+  test("TableCommit.merge: a string key and a dir without footer stats equal a brute-force upsert") {
+    import spark.implicits._
+    import org.apache.parquet.hadoop.ParquetFileReader
+    import org.apache.parquet.hadoop.util.HadoopInputFile
+    import scala.jdk.CollectionConverters._
+    val tmp = java.nio.file.Files.createTempDirectory("tc-merge").toString
+    def rows(lo: Int) = (lo until lo + 50).map(i => (f"k$i%03d", i.toDouble))
+    def upsert(base: Seq[(String, Double)], upd: Seq[(String, Double)]) =
+      (base.filterNot(r => upd.exists(_._1 == r._1)) ++ upd).map(r => Seq[Any](r._1, r._2)).toSet
+    val upd = Seq(("k075", -1.0), ("k120", -2.0), ("zzz", -3.0))
+
+    // string key, every dir with stats: only the dirs holding k075 and k120
+    val strTable = s"$tmp/str"
+    Seq(0, 50, 100).foreach(lo => TableCommit.commit(rows(lo).toDF("k", "x"), strTable))
+    val (_, rwStr) = TableCommit.merge(spark, strTable, upd.toDF("k", "x"), "k")
+    assert(rwStr == 2)
+    assert(rowSet(TableCommit.read(spark, strTable)) == upsert(rows(0) ++ rows(50) ++ rows(100), upd))
+
+    // the third dir is written with column statistics off: its footers give
+    // no range, so it counts as touched and is rewritten
+    val table = s"$tmp/nostats"
+    Seq(0, 50).foreach(lo => TableCommit.commit(rows(lo).toDF("k", "x"), table))
+    val bare = s"$table/data/no-stats"
+    rows(100).toDF("k", "x").write.option("parquet.column.statistics.enabled", "false").parquet(bare)
+    java.nio.file.Files.writeString(java.nio.file.Paths.get(s"$table/snapshots/v000003.txt"),
+      (snapshot(table, 2) :+ bare).mkString("\n"))
+    val conf = spark.sparkContext.hadoopConfiguration
+    val files = java.nio.file.Files.list(java.nio.file.Paths.get(bare)).iterator().asScala
+      .map(_.toString).filter(_.endsWith(".parquet")).toSeq
+    assert(files.nonEmpty)
+    files.foreach { f =>
+      val reader = ParquetFileReader.open(HadoopInputFile.fromPath(new org.apache.hadoop.fs.Path(f), conf))
+      try reader.getFooter.getBlocks.asScala.flatMap(_.getColumns.asScala).foreach(c =>
+        assert(c.getStatistics == null || !c.getStatistics.hasNonNullValue, s"$f has stats"))
+      finally reader.close()
+    }
+    val (v, rw) = TableCommit.merge(spark, table, Seq(("k010", -1.0)).toDF("k", "x"), "k")
+    assert(v == 4 && rw == 2) // the hit dir and the one without stats
+    assert(!snapshot(table, 4).contains(bare) && snapshot(table, 4).size == 2)
+    assert(rowSet(TableCommit.read(spark, table)) ==
+      upsert(rows(0) ++ rows(50) ++ rows(100), Seq(("k010", -1.0))))
+  }
+
+  test("TableCommit and Lineage read schemas equal Spark's inferred ones") {
+    import spark.implicits._
+    val tmp = java.nio.file.Files.createTempDirectory("tc-schema").toString
+    val dir = s"$tmp/t"
+    // nested, non-nullable input fields: Spark reads every field back nullable
+    Seq(1, 2, 3).foreach(i => TableCommit.commit(
+      Seq((i, s"n$i", Seq(i.toDouble), (i.toLong, Option(s"s$i")))).toDF("id", "name", "arr", "st"), dir))
+    def inferred(dirs: Seq[String]) = spark.read.parquet(dirs: _*).schema
+    assert(TableCommit.read(spark, dir).schema == inferred(snapshot(dir, 3)))
+    assert(TableCommit.read(spark, dir, 1).schema == inferred(snapshot(dir, 1)))
+    assert(TableCommit.readIncremental(spark, dir, 1).schema == inferred(snapshot(dir, 3).drop(1)))
+    assert(TableCommit.readIncremental(spark, dir, 3).schema == inferred(snapshot(dir, 3)))
+    val v = TableCommit.compact(spark, dir, numFiles = 2)
+    assert(TableCommit.read(spark, dir).schema == inferred(snapshot(dir, v)))
+    // the manifest: read with its explicit schema, and written with the
+    // column order and types of the planned manifest aggregate
+    val df = spark.range(100).select((col("id") % 4).as("bucket"), (col("id") * 7).as("cell"))
+    Lineage.runWithCheckpoint(spark, df, "bucket", s"$tmp/lin")
+    val planned = s"$tmp/planned"
+    Lineage.manifest(df, "bucket").write.parquet(planned)
+    assert(inferred(Seq(s"$tmp/lin/_manifest")) == inferred(Seq(planned)))
+    assert(spark.read.schema(Lineage.manifest(df, "bucket").schema)
+      .parquet(s"$tmp/lin/_manifest").schema == inferred(Seq(s"$tmp/lin/_manifest")))
+  }
+
   test("TableCommit.expireSnapshots: reaps orphaned dirs, keeps live ones") {
     import spark.implicits._
     val dir = java.nio.file.Files.createTempDirectory("tc").toString + "/t5"

@@ -55,6 +55,23 @@ abstract class SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
       if (plan == PipPlan.PointBuild) withBroadcastThreshold("-1")(f(plan, Some("-1")))
     }
 
+  /** `f`'s value and the number of Spark jobs it started. */
+  def countJobs[T](f: => T): (T, Int) = {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val sc = spark.sparkContext
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = jobs.incrementAndGet()
+    }
+    org.apache.spark.ListenerBusShim.drain(sc)
+    sc.addSparkListener(listener)
+    try {
+      val r = f
+      org.apache.spark.ListenerBusShim.drain(sc)
+      (r, jobs.get)
+    } finally sc.removeSparkListener(listener)
+  }
+
   /** Brute-force PIP reference for the axis-aligned box zones: every point
     * against every zone by strict box interior, with no cell cover and no
     * wkt, so it shares no code with the join it checks. */
