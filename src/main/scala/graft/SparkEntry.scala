@@ -50,17 +50,14 @@ object SparkEntry {
         .where(col("x") > 20 && col("x") < 60 && col("y") > 30 && col("y") < 70)),
 
     // §2.4 flagship: PIP spatial join (cell equi-prejoin + JTS refine)
-    // + §2.5 zonal stats groupBy
-    "q_zonal_stats_points" -> ((s, dir) => {
-      val joined = SpatialJoin.pip(
-        GeoTables.points(s, dir),
-        GeoTables.zones(s, dir).select(col("zone_id"), col("wkt")),
-        GeoTables.JoinLevel)
-      joined.groupBy(col("zone_id")).agg(
-        count(lit(1)).as("n_pts"),
-        sum(col("value")).as("sum_val"),
-        round(avg(col("value")), 3).as("avg_val"))
-    }),
+    // + §2.5 zonal stats, as one zonal aggregate per zone
+    "q_zonal_stats_points" -> ((s, dir) =>
+      SpatialJoin.zonalAgg(
+          GeoTables.points(s, dir),
+          GeoTables.zones(s, dir).select(col("zone_id"), col("wkt")),
+          GeoTables.JoinLevel, Nil, col("value"))
+        .select(col("zone_id"), col("n_pts"), col("sum_val"),
+          round(col("sum_val") / col("n_pts"), 3).as("avg_val"))),
 
     // same join, uniformly salted (PipPlan.Salted) — must agree
     "q_zonal_stats_salted" -> ((s, dir) => {

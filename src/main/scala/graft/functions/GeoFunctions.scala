@@ -97,12 +97,14 @@ object GeoFunctions extends Serializable {
     * through the prep cache — replaces the st_envelope + st_is_rect +
     * geom_cover triple parse in the PIP join's polygon annotation (and
     * the cache is shared with the refine's st_contains_xy). */
-  val st_env_rect = udf((wkt: String) => {
+  def envRect(wkt: String): (Double, Double, Double, Double, Boolean) = {
     val p = prep(wkt)
     (p.minx, p.miny, p.maxx, p.maxy, p.isRect)
-  }).asNonNullable() // never null ⇒ inferred isnotnull(UDF(...)._N) join
-                     // constraints constant-fold instead of re-running the
-                     // parse once per extracted field in a pushed filter
+  }
+  // never null ⇒ inferred isnotnull(UDF(...)._N) join constraints
+  // constant-fold instead of re-running the parse once per extracted field
+  // in a pushed filter
+  val st_env_rect = udf(envRect _).asNonNullable()
   val st_make_valid = udf((wkt: String) =>
     new WKTWriter().write(org.locationtech.jts.geom.util.GeometryFixer.fix(parse(wkt))))
   val st_npoints = udf((wkt: String) => parse(wkt).getNumPoints)

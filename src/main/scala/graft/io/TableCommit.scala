@@ -31,17 +31,28 @@ object TableCommit {
     }
   }
 
+  /** The data dir a commit of kind `tag` writes when the table is at
+    * version `prev`: a UUID of (table, prev, tag), deterministic per
+    * version. */
+  private[graft] def dataDir(table: String, prev: Int, tag: String): String =
+    s"$table/data/${java.util.UUID.nameUUIDFromBytes((table + prev + tag).getBytes)}"
+
+  /** Writes `df` as the data dir of version `prev + 1`. That version has no
+    * snapshot yet, so a dir already under this name is the uncommitted
+    * write of an attempt that crashed before its snapshot file: it is
+    * replaced, and the commit can be retried. */
+  private def writeData(df: DataFrame, table: String, prev: Int, tag: String): String = {
+    val dir = dataDir(table, prev, tag)
+    df.write.mode(SaveMode.Overwrite).parquet(dir)
+    dir
+  }
+
   /** Append-commit: write df as a new data dir, snapshot = previous dirs +
     * the new one. Returns the new version. */
   def commit(df: DataFrame, table: String): Int = {
-    val id = java.util.UUID.nameUUIDFromBytes(
-      (table + currentVersion(table)).getBytes).toString // deterministic per version
-    val dataDir = s"$table/data/$id"
-    df.write.mode(SaveMode.ErrorIfExists).parquet(dataDir)
     val prev = currentVersion(table)
-    val prevDirs =
-      if (prev == 0) Seq.empty
-      else Files.readString(Paths.get(f"${snapDir(table)}/v$prev%06d.txt")).split("\n").toSeq
+    val dataDir = writeData(df, table, prev, "")
+    val prevDirs = snapshotDirs(table, prev)
     Files.createDirectories(Paths.get(snapDir(table)))
     val v = prev + 1
     Files.writeString(Paths.get(f"${snapDir(table)}/v$v%06d.txt"),
@@ -52,9 +63,7 @@ object TableCommit {
   /** Overwrite-commit: snapshot contains only the new data dir. */
   def commitOverwrite(df: DataFrame, table: String): Int = {
     val prev = currentVersion(table)
-    val id = java.util.UUID.nameUUIDFromBytes((table + prev + "ow").getBytes).toString
-    val dataDir = s"$table/data/$id"
-    df.write.mode(SaveMode.ErrorIfExists).parquet(dataDir)
+    val dataDir = writeData(df, table, prev, "ow")
     Files.createDirectories(Paths.get(snapDir(table)))
     val v = prev + 1
     Files.writeString(Paths.get(f"${snapDir(table)}/v$v%06d.txt"), dataDir)
@@ -166,9 +175,7 @@ object TableCommit {
       else readDirs(spark, touched)
         .join(updates.select(col(keyCol)), Seq(keyCol), "left_anti")
         .unionByName(updates)
-    val id = java.util.UUID.nameUUIDFromBytes((table + prev + "mrg").getBytes).toString
-    val dataDir = s"$table/data/$id"
-    rewritten.write.mode(SaveMode.ErrorIfExists).parquet(dataDir)
+    val dataDir = writeData(rewritten, table, prev, "mrg")
     Files.createDirectories(Paths.get(snapDir(table)))
     val v = prev + 1
     Files.writeString(Paths.get(f"${snapDir(table)}/v$v%06d.txt"),

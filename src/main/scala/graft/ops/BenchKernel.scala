@@ -18,7 +18,7 @@ object BenchKernel {
   /** Tile assignment: the fixed 8×8 dem tile of a matched point, as two
     * int columns `tr`, `tc` — a primitive grouping key (a struct key turns
     * off Spark's fast primitive-key aggregation map). */
-  private def tileOf(xc: String, yc: String) = Seq(
+  private[graft] def tileOf(xc: String, yc: String) = Seq(
     least(lit(7), floor((lit(100.0) - col(yc)) / 12.5).cast("int")).as("tr"),
     least(lit(7), floor(col(xc) / 12.5).cast("int")).as("tc"))
 
@@ -37,8 +37,8 @@ object BenchKernel {
   }
 
   /** The kernel's tile aggregate over a prepared docs table:
-    * (poly_doc, tr, tc, n_pts, sum_val), one row per polygon and tile its
-    * matched points fall in. `level` is the PIP join's cell-cover level. */
+    * (poly_doc, wkt, tr, tc, n_pts, sum_val), one row per polygon and tile
+    * its matched points fall in. `level` is the PIP join's cell-cover level. */
   private[graft] def assigned(docs: DataFrame, level: Int): DataFrame = {
     // long doc keys through the hot join/agg path: hashing + row width of
     // a bigint beats a 13-char string at 10^8-row scale
@@ -49,19 +49,17 @@ object BenchKernel {
     val polys = GeoTables.polySpans(spans, col("doc_key"))
     val pts = GeoTables.pointSpans(spans, col("doc_key"))
 
-    // PIP spatial join + tile assignment. The point side is the join's
-    // hash build (`PipPlan.PointBuild`). At or below Spark's broadcast
-    // threshold it is broadcast: the poly-cell side is never exchanged, and
-    // each polygon's groups are complete in the task that exploded its
-    // cells, so the partial aggregate already emits the final groups. On a
-    // 4-core host at perfbench kernel scale (90k points, a 6.6 MB estimated
-    // point side) this and the primitive (tr, tc) key took the median task
-    // CPU per pass from 3.4 s to 1.6 s and the shuffle write from 14.1 MB to
-    // 0.6 MB (BENCH.md); either half alone fell short. Above the threshold
-    // (graft.Bench at sf0.1: 44 MB) the shuffle-hash build on `cell` stays.
-    SpatialJoin.pip(pts, polys, level)
-      .groupBy(col("poly_doc") +: tileOf("x", "y"): _*)
-      .agg(count(lit(1)).as("n_pts"), sum(col("value")).as("sum_val"))
+    // PIP spatial join + tile assignment as one zonal aggregate keyed on
+    // the primitive (tr, tc). At or below Spark's broadcast threshold
+    // (perfbench kernel scale: 90k points, a 6.6 MB estimated point side)
+    // it is fused: the point side is collected and broadcast as a
+    // cell-sorted index, and one pass over the polygon rows probes it per
+    // polygon and emits that polygon's final tile groups, with no hash
+    // join, hash aggregate or exchange. On a 4-core host this took the
+    // median task CPU per pass from 1.41 s to 0.44 s (BENCH.md). Above the
+    // threshold (graft.Bench at sf0.1: 44 MB) it is the point-side
+    // shuffle-hash join plus a hash aggregate.
+    SpatialJoin.zonalAgg(pts, polys, level, tileOf("x", "y"), col("value"))
   }
 
   /** Run the kernel over a prepared docs table. Returns

@@ -2,6 +2,7 @@ package graft.ops
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DataType, DoubleType, FloatType, LongType, StructField, StructType}
 import graft.functions.GeoFunctions._
 
 /** How [[SpatialJoin.pip]] distributes its cell equi-join. Every plan
@@ -97,9 +98,7 @@ object SpatialJoin {
     // emission is unchanged)
     val (left, right, keys) = plan match {
       case PipPlan.PointBuild =>
-        val broadcastable = ptCells.queryExecution.optimizedPlan.stats.sizeInBytes <=
-          ptCells.sparkSession.sessionState.conf.autoBroadcastJoinThreshold
-        (if (broadcastable) broadcast(ptCells) else ptCells.hint("shuffle_hash"),
+        (if (broadcastable(ptCells)) broadcast(ptCells) else ptCells.hint("shuffle_hash"),
          cells, Seq("cell"))
       case PipPlan.BroadcastPolys => (ptCells, broadcast(cells), Seq("cell"))
       case PipPlan.Salted(n) => salted(_.withColumn("salt_n", lit(n)))
@@ -115,6 +114,71 @@ object SpatialJoin {
       .where(col("gen_geom").isNull ||
              st_contains_xy(col("gen_geom"), col("x"), col("y")))
       .drop(keys ++ Seq("e0", "e1", "e2", "e3", "gen_geom"): _*)
+  }
+
+  /** Spark's rule for a join without a hint: the estimated size of `df`
+    * is at most `spark.sql.autoBroadcastJoinThreshold` (decided at planning
+    * time, no job run; -1 turns it off). */
+  private def broadcastable(df: DataFrame): Boolean =
+    df.queryExecution.optimizedPlan.stats.sizeInBytes <=
+      df.sparkSession.sessionState.conf.autoBroadcastJoinThreshold
+
+  /** Zonal aggregate: per polygon ROW and point-side group key, the count
+    * and the value sum of the points [[pip]] matches. Returns the polygon
+    * columns, the `keys` (expressions over the point columns, named apart
+    * from the polygon columns), `n_pts` and `sum_val` (the sum of `value`
+    * as a double: null values are counted, not summed, and a group of
+    * only null values has a null `sum_val`). These are the rows of
+    * `pip(points, polys, level).groupBy(<polygon row>, keys)`; two equal
+    * polygon rows give two rows each, and a polygon with no hit gives none.
+    *
+    * When the projected point side `(cell, x, y, value, keys)` is
+    * broadcastable by [[PipPlan.PointBuild]]'s size rule, the aggregate is
+    * fused: the point side is collected once (one job), indexed by cell on
+    * the driver ([[CellPoints]]) and broadcast, and one pass over the
+    * polygon rows probes the index per polygon and emits that polygon's
+    * final groups — no hash join, no hash aggregate, no exchange. Sums may
+    * then add in another order than the join's. Above the threshold it is
+    * `pip(PointBuild)` plus a hash aggregate on a polygon row id. */
+  def zonalAgg(points: DataFrame, polys: DataFrame, level: Int,
+               keys: Seq[Column], value: Column): DataFrame = {
+    // -0.0/0.0 and NaN payloads are one group key, as in Spark's groupBy
+    def normalized(c: Column, t: DataType) = t match {
+      case DoubleType | FloatType =>
+        when(isnan(c), lit(Double.NaN).cast(t)).when(c === 0, lit(0).cast(t)).otherwise(c)
+      case _ => c
+    }
+    val v = "_zonal_val"
+    val keyed = points.select(Seq(col("x"), col("y"), value.cast("double").as(v)) ++ keys: _*)
+    val keyFields = keyed.schema.fields.drop(3)
+    val pts = keyed.select(Seq(col("x"), col("y"), col(v)) ++
+      keyFields.map(f => normalized(col(f.name), f.dataType).as(f.name)): _*)
+    val keyNames = keyFields.map(_.name).toSeq
+    val side = pts.select(graft.plans.CellOfExpr.cellOfNative(col("x"), col("y"), lit(level))
+      .as("cell") +: pts.columns.toSeq.map(col): _*)
+
+    if (broadcastable(side)) {
+      val spark = polys.sparkSession
+      val keyTypes = keyFields.map(_.dataType).toSeq
+      val index = spark.sparkContext.broadcast(CellPoints.build(side.queryExecution.toRdd
+        .mapPartitions(rows => Iterator(CellPoints.part(rows, keyTypes))).collect()))
+      val wktAt = polys.schema.fieldIndex("wkt")
+      val rows = polys.queryExecution.toRdd.mapPartitions(
+        polyRows => index.value.aggregate(polyRows, wktAt, level))
+      org.apache.spark.sql.GraftShim.dataFrame(spark, rows, StructType(
+        polys.schema.fields ++ side.schema.fields.drop(4) ++ Seq(
+          StructField("n_pts", LongType, nullable = false),
+          StructField("sum_val", DoubleType, nullable = true))))
+    } else {
+      // the row id keeps equal polygon rows apart; the other polygon
+      // columns ride the key (functionally dependent on the id), except the
+      // geometry, which the aggregate carries only if a consumer reads it
+      val rid = "_zonal_row"
+      pip(pts, polys.withColumn(rid, monotonically_increasing_id()), level)
+        .groupBy((Seq(rid) ++ polys.columns.filter(_ != "wkt") ++ keyNames).map(col): _*)
+        .agg(count(lit(1)).as("n_pts"), sum(col(v)).as("sum_val"), first(col("wkt")).as("wkt"))
+        .select((polys.columns.toSeq ++ keyNames :+ "n_pts" :+ "sum_val").map(col): _*)
+    }
   }
 
   /** Uniformly salted [[pip]]: `pip(..., PipPlan.Salted(salt))`. */

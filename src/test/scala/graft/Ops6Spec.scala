@@ -166,6 +166,34 @@ class Ops6Spec extends SparkSpec {
     assert(TableCommit.read(spark, dir).count() == 306)
   }
 
+  test("TableCommit commit, commitOverwrite and merge can be retried after a crash before the snapshot") {
+    import spark.implicits._
+    val tmp = java.nio.file.Files.createTempDirectory("tc-retry").toString
+    def base(table: String): Unit = Seq(0, 100).foreach(lo => TableCommit.commit(
+      (lo until lo + 100).map(i => (i, s"a$i")).toDF("id", "v"), table))
+    // each op at version 2, with the tag that names its data dir
+    val ops: Seq[(String, String, String => Int)] = Seq(
+      ("commit", "", t => TableCommit.commit(Seq((500, "c")).toDF("id", "v"), t)),
+      ("commitOverwrite", "ow", t => TableCommit.commitOverwrite(Seq((600, "o")).toDF("id", "v"), t)),
+      ("merge", "mrg", t => TableCommit.merge(spark, t,
+        Seq((150, "UPD"), (700, "new")).toDF("id", "v"), "id")._1))
+    for ((name, tag, op) <- ops) {
+      val clean = s"$tmp/$name-clean"
+      base(clean)
+      assert(op(clean) == 3)
+      // the first attempt wrote its data dir (rows of its own), then
+      // crashed before writing snapshot v3
+      val crashed = s"$tmp/$name-crashed"
+      base(crashed)
+      Seq((-1, "attempt 1"), (150, "attempt 1")).toDF("id", "v")
+        .write.parquet(TableCommit.dataDir(crashed, 2, tag))
+      assert(TableCommit.currentVersion(crashed) == 2)
+      assert(op(crashed) == 3, name)
+      def rows(t: String) = TableCommit.read(spark, t).collect().map(r => (r.getInt(0), r.getString(1))).sorted.toSeq
+      assert(rows(crashed) == rows(clean), name)
+    }
+  }
+
   /** Data dirs of snapshot `v` of `table`. */
   private def snapshot(table: String, v: Int): Seq[String] =
     java.nio.file.Files.readString(java.nio.file.Paths

@@ -5,13 +5,14 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
 import graft.io.GeoTables
 import graft.ops.{BenchKernel, PipPlan, SpatialJoin}
+import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.optimizer.BuildLeft
-import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
-import org.apache.spark.sql.execution.{QueryExecution, SparkPlan}
+import org.apache.spark.sql.catalyst.plans.physical.{HashPartitioning, SinglePartition}
+import org.apache.spark.sql.execution.{QueryExecution, RDDScanExec, SparkPlan}
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
-import org.apache.spark.sql.execution.aggregate.HashAggregateExec
+import org.apache.spark.sql.execution.aggregate.{BaseAggregateExec, HashAggregateExec}
 import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
-import org.apache.spark.sql.execution.joins.{BroadcastHashJoinExec, ShuffledHashJoinExec}
+import org.apache.spark.sql.execution.joins.{BaseJoinExec, ShuffledHashJoinExec}
 import org.apache.spark.sql.util.QueryExecutionListener
 
 /** Plan-shape regression guards: the perf-critical properties verified by
@@ -54,7 +55,7 @@ class PlanSpec extends SparkSpec with AdaptiveSparkPlanHelper {
     }
 
     // the kernel's executed plan on both sides of the broadcast threshold
-    def kernelPlan(): SparkPlan = {
+    def kernelPlan(docs: DataFrame): SparkPlan = {
       val executed = new java.util.concurrent.LinkedBlockingQueue[SparkPlan]()
       val listener = new QueryExecutionListener {
         // the kernel's one action: a global (total, mrows) aggregate
@@ -65,58 +66,63 @@ class PlanSpec extends SparkSpec with AdaptiveSparkPlanHelper {
       spark.listenerManager.register(listener)
       // listeners are called asynchronously: stay registered until the call
       val kernel = try {
-        BenchKernel.run(spark, BenchKernel.prepareInput(spark, sf001))
+        BenchKernel.run(spark, docs)
         executed.poll(60, java.util.concurrent.TimeUnit.SECONDS)
       } finally spark.listenerManager.unregister(listener)
       assert(kernel != null, "kernel action was not observed")
-      // the tile aggregate groups on primitive keys: a struct key turns off
-      // Spark's fast primitive-key aggregation map
-      val partial = collect(kernel) {
-        // a partial aggregate requires no child distribution
-        case a: HashAggregateExec if a.requiredChildDistributionExpressions.isEmpty &&
-            a.groupingExpressions.exists(_.references.exists(_.name == "poly_doc")) => a
-      }
-      assert(partial.size == 1, kernel.toString)
-      assert(!partial.head.groupingExpressions.exists(_.dataType.isInstanceOf[StructType]),
-        s"struct-typed grouping key in the kernel's partial aggregate\n$kernel")
       kernel
     }
     def fromPoints(p: SparkPlan) = p.output.exists(_.name == "x")
+    def refs(es: Seq[Expression]) = es.flatMap(_.references.map(_.name)).toSet
 
-    // default threshold: the sf0.001 point side is under it, so the one
-    // join is a broadcast built from the points and the poly-cell side is
-    // never exchanged on `cell`
-    val bcast = kernelPlan()
-    // (the docs assembly below it has a broadcast join of its own)
-    val bhj = collect(bcast) {
-      case j: BroadcastHashJoinExec if j.leftKeys.exists(_.references.exists(_.name == "cell")) => j
-    }
-    assert(bhj.size == 1, bcast.toString)
-    assert(fromPoints(if (bhj.head.buildSide == BuildLeft) bhj.head.left else bhj.head.right),
-      s"kernel join must build from the point side\n$bcast")
-    assert(collect(bcast) { case j: ShuffledHashJoinExec => j }.isEmpty, bcast.toString)
-    val joinKeys = (bhj.head.leftKeys ++ bhj.head.rightKeys).flatMap(_.references).toSet
-    val cellExchanges = collect(bcast) {
-      case e: ShuffleExchangeExec if (e.outputPartitioning match {
-        case h: HashPartitioning => h.expressions.exists(_.references.exists(joinKeys.contains))
-        case _ => false
-      }) => e
-    }
-    assert(cellExchanges.isEmpty, s"poly-cell side exchanged on cell\n$bcast")
+    // default threshold: the sf0.001 point side is under it, so the zonal
+    // aggregate is fused. The action reads the fused polygon pass as one
+    // RDD scan; it has no join keyed on cell, no aggregate grouped on
+    // poly_doc, and exchanges only for the two metric aggregates. A run on
+    // cached docs starts at most 4 jobs: the point-side collect and the
+    // action's stages.
+    val cached = BenchKernel.prepareInput(spark, sf001).cache()
+    try {
+      cached.count()
+      val (fused, jobs) = countJobs(kernelPlan(cached))
+      assert(jobs <= 4, s"a fused kernel run started $jobs jobs\n$fused")
+      assert(collect(fused) { case r: RDDScanExec => r }.size == 1, fused.toString)
+      assert(collect(fused) {
+        case j: BaseJoinExec if refs(j.leftKeys ++ j.rightKeys)("cell") => j
+      }.isEmpty, s"join keyed on cell in the fused kernel\n$fused")
+      assert(collect(fused) {
+        case a: BaseAggregateExec if refs(a.groupingExpressions)("poly_doc") => a
+      }.isEmpty, s"aggregate grouped on poly_doc in the fused kernel\n$fused")
+      val exchanges = collect(fused) { case e: ShuffleExchangeExec => e.outputPartitioning }
+      assert(exchanges.size == 2 && exchanges.forall {
+        // (spark_partition_id(), the level-4 histogram cell)
+        case h: HashPartitioning => h.expressions.size == 2 && refs(h.expressions)("cell") &&
+          !refs(h.expressions)("poly_doc")
+        case p => p == SinglePartition
+      }, s"exchanges other than the metric aggregates'\n$fused")
+    } finally cached.unpersist(true)
 
     // threshold -1: exactly one shuffle-hash join, built from the points
-    val shuffled = withBroadcastThreshold("-1")(kernelPlan())
+    val shuffled = withBroadcastThreshold("-1")(kernelPlan(BenchKernel.prepareInput(spark, sf001)))
     val shj = collect(shuffled) { case j: ShuffledHashJoinExec => j }
     assert(shj.size == 1, shuffled.toString)
     assert(shj.head.buildSide == BuildLeft && fromPoints(shj.head.left),
       s"kernel join must build from the point side\n$shuffled")
+    // the tile aggregate groups on primitive keys: a struct key turns off
+    // Spark's fast primitive-key aggregation map
+    val partial = collect(shuffled) {
+      // a partial aggregate requires no child distribution
+      case a: HashAggregateExec if a.requiredChildDistributionExpressions.isEmpty &&
+          a.groupingExpressions.exists(_.references.exists(_.name == "poly_doc")) => a
+    }
+    assert(partial.size == 1, shuffled.toString)
+    assert(!partial.head.groupingExpressions.exists(_.dataType.isInstanceOf[StructType]),
+      s"struct-typed grouping key in the kernel's partial aggregate\n$shuffled")
 
     // the kernel's values, not just its counts: the tile aggregate's
     // (poly_doc, tr, tc, n_pts, sum_val) multiset is the same on both sides
     // of the threshold and equals a brute-force reference; (poly_doc, tr,
     // tc) is the group key, so a duplicated group shows as a count of 2
-    def multiset(df: DataFrame): Map[Seq[Any], Int] =
-      df.collect().toSeq.map(_.toSeq).groupBy(identity).map { case (k, v) => k -> v.size }
     val cols = Seq("poly_doc", "tr", "tc", "n_pts", "sum_val").map(col)
     val docs = BenchKernel.prepareInput(spark, sf001)
     def kernel() = multiset(BenchKernel.assigned(docs, GeoTables.JoinLevel).select(cols: _*))

@@ -24,13 +24,22 @@ class QueriesSpec extends SparkSpec {
   test("zonal stats is partition-invariant (chunked == base)") {
     import graft.io.GeoTables
     import graft.ops.SpatialJoin
+    def inputs(parts: Int) =
+      (GeoTables.points(spark, sf001).repartition(parts),
+       GeoTables.zones(spark, sf001).select(col("zone_id"), col("wkt")).repartition(parts))
     def run(parts: Int) = {
-      val pts = GeoTables.points(spark, sf001).repartition(parts)
-      val z = GeoTables.zones(spark, sf001).select(col("zone_id"), col("wkt")).repartition(parts)
+      val (pts, z) = inputs(parts)
       SpatialJoin.pip(pts, z, GeoTables.JoinLevel)
         .groupBy("zone_id").agg(count(lit(1)).as("n"), sum("value").as("s"))
     }
     assert(rowSet(run(1)) == rowSet(run(16)))
+    def zonal(parts: Int) = {
+      val (pts, z) = inputs(parts)
+      SpatialJoin.zonalAgg(pts, z, GeoTables.JoinLevel, Nil, col("value"))
+        .select("zone_id", "n_pts", "sum_val")
+    }
+    assert(rowSet(zonal(1)) == rowSet(zonal(16)))
+    assert(rowSet(zonal(1)) == rowSet(run(1)))
   }
 
   test("salted PIP join equals unsalted") {

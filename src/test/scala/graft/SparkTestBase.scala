@@ -30,6 +30,10 @@ abstract class SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
       case x => x
     }).toSet
 
+  /** Row multiset: a row present twice shows as a count of 2. */
+  def multiset(df: DataFrame): Map[Seq[Any], Int] =
+    df.collect().toSeq.map(_.toSeq).groupBy(identity).map { case (k, v) => k -> v.size }
+
   /** (zone, point) pair multiset of a PIP result: a pair emitted twice
     * shows as count 2. */
   def pipPairs(df: DataFrame): Set[Seq[Any]] =
