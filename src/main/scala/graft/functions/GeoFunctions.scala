@@ -2,7 +2,7 @@ package graft.functions
 
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions.udf
-import org.locationtech.jts.geom.{Coordinate, Geometry, GeometryFactory}
+import org.locationtech.jts.geom.{Coordinate, Envelope, Geometry, GeometryFactory}
 import org.locationtech.jts.geom.prep.{PreparedGeometry, PreparedGeometryFactory}
 import org.locationtech.jts.io.{WKTReader, WKTWriter}
 
@@ -55,11 +55,12 @@ object GeoFunctions extends Serializable {
       gf.createPoint(new Coordinate(0, 0)))
 
   /** Interior containment of a point — boundary excluded, matching the
-    * strict-inequality oracle predicate. Rectangles (the common zone case)
-    * short-circuit to pure envelope compares. */
+    * strict-inequality oracle predicate; a NaN coordinate is never inside.
+    * Rectangles (the common zone case) short-circuit to pure envelope
+    * compares. */
   def containsXy(wkt: String, x: Double, y: Double): Boolean = {
     val p = prep(wkt)
-    if (x <= p.minx || x >= p.maxx || y <= p.miny || y >= p.maxy) false
+    if (!(x > p.minx && x < p.maxx && y > p.miny && y < p.maxy)) false
     else if (p.isRect) true
     else {
       val pt = localPoint.get()
@@ -68,6 +69,13 @@ object GeoFunctions extends Serializable {
       p.geom.contains(pt)
     }
   }
+
+  /** Whether the closed box lies in the geometry's interior (JTS prepared
+    * `containsProperly`); a degenerate box is tested as a point or a
+    * segment. Then every point in the box passes [[containsXy]]. */
+  def containsBoxProperly(wkt: String, minx: Double, miny: Double,
+                          maxx: Double, maxy: Double): Boolean =
+    prep(wkt).geom.containsProperly(gf.toGeometry(new Envelope(minx, maxx, miny, maxy)))
 
   val st_contains_xy = udf(containsXy _)
   // both sides go through the parse cache: candidate pairs repeat geometries
@@ -82,7 +90,6 @@ object GeoFunctions extends Serializable {
   val st_simplify = udf((wkt: String, tol: Double) =>
     new WKTWriter().write(org.locationtech.jts.simplify.DouglasPeuckerSimplifier.simplify(parse(wkt), tol)))
   val st_convex_hull = udf((wkt: String) => new WKTWriter().write(parse(wkt).convexHull()))
-  val st_union2 = udf((a: String, b: String) => new WKTWriter().write(parse(a).union(parse(b))))
   val st_intersection = udf((a: String, b: String) => new WKTWriter().write(parse(a).intersection(parse(b))))
   val st_difference = udf((a: String, b: String) => new WKTWriter().write(parse(a).difference(parse(b))))
   val st_distance = udf((a: String, b: String) => parse(a).distance(parse(b)))
@@ -90,7 +97,6 @@ object GeoFunctions extends Serializable {
     val e = parse(wkt).getEnvelopeInternal
     Array(e.getMinX, e.getMinY, e.getMaxX, e.getMaxY)
   })
-  val st_is_valid = udf((wkt: String) => parse(wkt).isValid)
   val st_is_rect = udf((wkt: String) => parse(wkt).isRectangle)
 
   /** One-parse polygon annotation (envelope corners + rectangle flag)
@@ -105,8 +111,6 @@ object GeoFunctions extends Serializable {
   // constant-fold instead of re-running the parse once per extracted field
   // in a pushed filter
   val st_env_rect = udf(envRect _).asNonNullable()
-  val st_make_valid = udf((wkt: String) =>
-    new WKTWriter().write(org.locationtech.jts.geom.util.GeometryFixer.fix(parse(wkt))))
   val st_npoints = udf((wkt: String) => parse(wkt).getNumPoints)
 
   // ---- §2.9 geometric transforms (JTS 1:1 wrappers over WKT) ----------
@@ -115,9 +119,7 @@ object GeoFunctions extends Serializable {
   val st_representative_point = udf((wkt: String) => {
     val p = parse(wkt).getInteriorPoint; Array(p.getX, p.getY)
   })
-  val st_normalize = udf((wkt: String) => { val g = parse(wkt); g.normalize(); w(g) })
   val st_reverse = udf((wkt: String) => w(parse(wkt).reverse()))
-  val st_boundary = udf((wkt: String) => w(parse(wkt).getBoundary))
   val st_rotate = udf((wkt: String, theta: Double, cx: Double, cy: Double) =>
     w(org.locationtech.jts.geom.util.AffineTransformation
       .rotationInstance(theta, cx, cy).transform(parse(wkt))))
@@ -129,8 +131,6 @@ object GeoFunctions extends Serializable {
       .translationInstance(dx, dy).transform(parse(wkt))))
   val st_segmentize = udf((wkt: String, tol: Double) =>
     w(org.locationtech.jts.densify.Densifier.densify(parse(wkt), tol)))
-  val st_remove_repeated = udf((wkt: String) =>
-    w(org.locationtech.jts.geom.util.GeometryFixer.fix(parse(wkt))))
   val st_min_bounding_circle_radius = udf((wkt: String) =>
     new org.locationtech.jts.algorithm.MinimumBoundingCircle(parse(wkt)).getRadius)
   val st_min_rotated_rect = udf((wkt: String) =>
@@ -138,15 +138,6 @@ object GeoFunctions extends Serializable {
   val st_delaunay = udf((wkt: String) => {
     val b = new org.locationtech.jts.triangulate.DelaunayTriangulationBuilder()
     b.setSites(parse(wkt)); w(b.getTriangles(gf))
-  })
-  val st_voronoi = udf((wkt: String) => {
-    val b = new org.locationtech.jts.triangulate.VoronoiDiagramBuilder()
-    b.setSites(parse(wkt)); w(b.getDiagram(gf))
-  })
-  val st_line_merge = udf((wkt: String) => {
-    val m = new org.locationtech.jts.operation.linemerge.LineMerger()
-    m.add(parse(wkt))
-    w(gf.buildGeometry(m.getMergedLineStrings))
   })
   val st_interpolate = udf((wkt: String, frac: Double) => {
     val g = parse(wkt)
@@ -158,7 +149,6 @@ object GeoFunctions extends Serializable {
 
   // ---- per-row accessors / predicates (vector.py:453-651) ---------------
   val st_geom_type = udf((wkt: String) => parse(wkt).getGeometryType)
-  val st_is_empty = udf((wkt: String) => parse(wkt).isEmpty)
   val st_is_simple = udf((wkt: String) => parse(wkt).isSimple)
   val st_is_ring = udf((wkt: String) => parse(wkt) match {
     case l: org.locationtech.jts.geom.LineString => l.isRing
@@ -258,10 +248,6 @@ object GeoFunctions extends Serializable {
     w(gf.createMultiPointFromCoords(
       seen.toArray.map { case (x, y) => new Coordinate(x, y) }))
   })
-  val st_explode = udf((wkt: String) => {
-    val g = parse(wkt)
-    (0 until g.getNumGeometries).map(i => w(g.getGeometryN(i))).toArray
-  })
 
   // ---- §2.4 distance-join refinements ----------------------------------
   val st_hausdorff = udf((a: String, b: String) =>
@@ -275,9 +261,6 @@ object GeoFunctions extends Serializable {
       .nearestPoints(parse(a), parse(b))
     Array(pts(0).x, pts(0).y, pts(1).x, pts(1).y)
   })
-  val st_snap = udf((a: String, b: String, tol: Double) =>
-    w(org.locationtech.jts.operation.overlay.snap.GeometrySnapper
-      .snap(parse(a), parse(b), tol)(0)))
 
   /** buffer_metric (geoutils `vector/geometric.py:34-56`): reproject
     * lon/lat WKT to its local UTM zone, buffer in meters, reproject back. */
@@ -362,7 +345,4 @@ object GeoFunctions extends Serializable {
 
   /** Ring-k cell neighborhood (kNN candidate expansion). */
   val cell_ring = udf((cell: Long, k: Int) => CellIndex.ring(cell, k))
-
-  /** SplitMix64 keyed hash (chunk-invariant sampling key). */
-  val smix_hash = udf((idx: Long, seed: Long) => graft.geo.SplitMix64.hash(idx, seed))
 }

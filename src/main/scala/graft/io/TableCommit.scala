@@ -1,6 +1,7 @@
 package graft.io
 
-import java.nio.file.{Files, Paths}
+import java.nio.file.{Files, Paths, StandardCopyOption}
+import scala.jdk.CollectionConverters._
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 
 /** Iceberg-like snapshot/manifest semantics over plain parquet (no Iceberg
@@ -17,18 +18,31 @@ object TableCommit {
 
   private def snapDir(table: String) = s"$table/snapshots"
 
-  def currentVersion(table: String): Int = {
+  private val SnapshotName = """v(\d+)\.txt""".r
+
+  /** The versions whose snapshot files exist, ascending. Only `vNNNNNN.txt`
+    * names count: a temp file of [[writeSnapshot]] is not a version. */
+  private def versions(table: String): Seq[Int] = {
     val d = Paths.get(snapDir(table))
-    if (!Files.exists(d)) 0
+    if (!Files.exists(d)) Seq.empty
     else {
-      val it = Files.list(d).iterator()
-      var v = 0
-      while (it.hasNext) {
-        val name = it.next().getFileName.toString
-        if (name.startsWith("v")) v = math.max(v, name.stripPrefix("v").stripSuffix(".txt").toInt)
-      }
-      v
+      val names = Files.list(d)
+      try names.iterator().asScala.map(_.getFileName.toString)
+        .collect { case SnapshotName(v) => v.toInt }.toSeq.sorted
+      finally names.close()
     }
+  }
+
+  def currentVersion(table: String): Int = versions(table).lastOption.getOrElse(0)
+
+  /** Writes snapshot `v` listing `dirs`: to a temp file first, then one
+    * atomic rename, so a crash leaves either no snapshot file or a whole
+    * one, never a truncated one that [[currentVersion]] would take. */
+  private def writeSnapshot(table: String, v: Int, dirs: Seq[String]): Unit = {
+    val d = Files.createDirectories(Paths.get(snapDir(table)))
+    val tmp = Files.createTempFile(d, "_tmp", ".txt")
+    Files.writeString(tmp, dirs.mkString("\n"))
+    Files.move(tmp, d.resolve(f"v$v%06d.txt"), StandardCopyOption.ATOMIC_MOVE)
   }
 
   /** The data dir a commit of kind `tag` writes when the table is at
@@ -52,22 +66,15 @@ object TableCommit {
   def commit(df: DataFrame, table: String): Int = {
     val prev = currentVersion(table)
     val dataDir = writeData(df, table, prev, "")
-    val prevDirs = snapshotDirs(table, prev)
-    Files.createDirectories(Paths.get(snapDir(table)))
-    val v = prev + 1
-    Files.writeString(Paths.get(f"${snapDir(table)}/v$v%06d.txt"),
-      (prevDirs :+ dataDir).mkString("\n"))
-    v
+    writeSnapshot(table, prev + 1, snapshotDirs(table, prev) :+ dataDir)
+    prev + 1
   }
 
   /** Overwrite-commit: snapshot contains only the new data dir. */
   def commitOverwrite(df: DataFrame, table: String): Int = {
     val prev = currentVersion(table)
-    val dataDir = writeData(df, table, prev, "ow")
-    Files.createDirectories(Paths.get(snapDir(table)))
-    val v = prev + 1
-    Files.writeString(Paths.get(f"${snapDir(table)}/v$v%06d.txt"), dataDir)
-    v
+    writeSnapshot(table, prev + 1, Seq(writeData(df, table, prev, "ow")))
+    prev + 1
   }
 
   /** Read a snapshot (default: latest). Time travel = pass a version. */
@@ -175,12 +182,8 @@ object TableCommit {
       else readDirs(spark, touched)
         .join(updates.select(col(keyCol)), Seq(keyCol), "left_anti")
         .unionByName(updates)
-    val dataDir = writeData(rewritten, table, prev, "mrg")
-    Files.createDirectories(Paths.get(snapDir(table)))
-    val v = prev + 1
-    Files.writeString(Paths.get(f"${snapDir(table)}/v$v%06d.txt"),
-      (untouched :+ dataDir).mkString("\n"))
-    (v, touched.size)
+    writeSnapshot(table, prev + 1, untouched :+ writeData(rewritten, table, prev, "mrg"))
+    (prev + 1, touched.size)
   }
 
   /** Snapshot expiry + vacuum: keep the newest `keep` snapshot files,
@@ -193,12 +196,13 @@ object TableCommit {
     * period in production. */
   def expireSnapshots(table: String, keep: Int = 1): Seq[String] = {
     require(keep >= 1, s"keep must be >= 1, got $keep")
-    val cur = currentVersion(table)
-    val cutoff = cur - keep + 1
-    val live = (cutoff to cur).flatMap(v => snapshotDirs(table, v)).toSet
-    val dead = (1 until cutoff)
-      .flatMap(v => snapshotDirs(table, v)).distinct.filterNot(live)
-    (1 until cutoff).foreach { v =>
+    // only the snapshot files that exist: an earlier expire deleted the
+    // older ones
+    val vs = versions(table)
+    val (expired, kept) = vs.splitAt(vs.size - keep)
+    val live = kept.flatMap(v => snapshotDirs(table, v)).toSet
+    val dead = expired.flatMap(v => snapshotDirs(table, v)).distinct.filterNot(live)
+    expired.foreach { v =>
       Files.deleteIfExists(Paths.get(f"${snapDir(table)}/v$v%06d.txt"))
     }
     dead.foreach { d =>

@@ -55,9 +55,12 @@ object BenchKernel {
     // it is fused: the point side is collected and broadcast as a
     // cell-sorted index, and one pass over the polygon rows probes it per
     // polygon and emits that polygon's final tile groups, with no hash
-    // join, hash aggregate or exchange. On a 4-core host this took the
-    // median task CPU per pass from 1.41 s to 0.44 s (BENCH.md). Above the
-    // threshold (graft.Bench at sf0.1: 44 MB) it is the point-side
+    // join, hash aggregate or exchange. The probe finds each cover cell in
+    // a hashed directory and adds whole-cell totals where a cell's points
+    // all lie inside the polygon; at perfbench kernel scale 7.7M of the
+    // 10.1M points in cells it does not skip are counted that way
+    // (BENCH.md). Above
+    // the threshold (graft.Bench at sf0.1: 44 MB) it is the point-side
     // shuffle-hash join plus a hash aggregate.
     SpatialJoin.zonalAgg(pts, polys, level, tileOf("x", "y"), col("value"))
   }

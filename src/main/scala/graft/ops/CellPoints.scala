@@ -9,25 +9,63 @@ import graft.functions.GeoFunctions
 import graft.geo.CellIndex
 
 /** A point side indexed by owning cell, in CSR form: the broadcast build of
-  * [[SpatialJoin.zonalAgg]]'s fused path. `cells` are the sorted distinct
-  * cells; the points of `cells(k)` are rows `offsets(k) until
-  * offsets(k + 1)` of the per-point arrays. A null value is a set
+  * [[SpatialJoin.zonalAgg]]'s fused path. The points of the `k`-th smallest
+  * distinct cell are rows `offsets(k) until offsets(k + 1)` of the
+  * per-point arrays. A null value is a set
   * `valueNull` bit. Point-side group keys are dictionary-encoded:
-  * `keyIds(j)` indexes `keys`, the distinct key rows. */
-private[ops] final class CellPoints(
-    val cells: Array[Long], val offsets: Array[Int],
-    val xs: Array[Double], val ys: Array[Double],
-    val values: Array[Double], val valueNull: Array[Boolean],
-    val keyIds: Array[Int], val keys: Array[UnsafeRow]) extends Serializable {
-  def size: Int = xs.length
+  * `keyIds(j)` indexes `keys`, the distinct key rows.
+  *
+  * Per indexed cell `k`, [[CellPoints.build]] also derives:
+  *  - a slot in a hashed directory (open addressing over `dirCells`, with
+  *    `dirSlots` holding `k + 1` and 0 for an empty slot; load ≤ 0.5), so
+  *    that [[slot]] finds a cell in O(1);
+  *  - `box(4k until 4k + 4)`: min x, min y, max x, max y of the cell's own
+  *    points, NaN if any of them has a NaN coordinate;
+  *  - its per-key totals, rows `totOffsets(k) until totOffsets(k + 1)`:
+  *    key id, point count, sum of the non-null values and whether any
+  *    value was non-null. */
+private[graft] final class CellPoints(
+    val offsets: Array[Int],
+    xs: Array[Double], ys: Array[Double],
+    values: Array[Double], valueNull: Array[Boolean],
+    keyIds: Array[Int], keys: Array[UnsafeRow],
+    dirCells: Array[Long], dirSlots: Array[Int], box: Array[Double],
+    totOffsets: Array[Int], totKeys: Array[Int], totCnt: Array[Int],
+    totSum: Array[Double], totSummed: Array[Boolean]) extends Serializable {
+
+  /** The CSR index `k` of `cell`, or -1 if no point lies in it. */
+  def slot(cell: Long): Int = CellPoints.find(dirCells, dirSlots, cell)
+
+  /** How the probe treats indexed cell `k` under a polygon (`wkt`, its
+    * envelope `e0..e3`, `rect` if it is its envelope), by the cell's point
+    * bounds against the open envelope:
+    *  - [[CellPoints.Skip]]: the bounds miss it, so no point can pass the
+    *    strict bbox test;
+    *  - [[CellPoints.Totals]]: the bounds lie strictly inside it and, for a
+    *    non-rectangle, in the polygon's interior (JTS prepared
+    *    `containsProperly`), so every point is a hit;
+    *  - [[CellPoints.Loop]]: anything else, NaN bounds included.
+    * The bounds are those of the indexed points, never the cell's nominal
+    * square, so points clamped into an edge cell are decided exactly. */
+  def coverCase(k: Int, e0: Double, e1: Double, e2: Double, e3: Double,
+                rect: Boolean, wkt: String): Int = {
+    val x0 = box(4 * k); val y0 = box(4 * k + 1)
+    val x1 = box(4 * k + 2); val y1 = box(4 * k + 3)
+    if (x1 <= e0 || x0 >= e2 || y1 <= e1 || y0 >= e3) CellPoints.Skip
+    else if (x0 > e0 && x1 < e2 && y0 > e1 && y1 < e3 &&
+             (rect || GeoFunctions.containsBoxProperly(wkt, x0, y0, x1, y1))) CellPoints.Totals
+    else CellPoints.Loop
+  }
 
   /** The zonal aggregate of one partition of polygon rows (`wkt` at
-    * ordinal `wktAt`). Each row's cover cells at `level` are looked up by
-    * binary search; their points pass the strict bbox test on primitive
-    * doubles and, for a non-rectangle, the JTS refine. Hits are counted and
-    * summed per key in arrays indexed by key id, reset after the row.
-    * Emits (polygon row, key row, n_pts, sum_val) per key with a hit;
-    * `sum_val` is null when every hit's value is null. */
+    * ordinal `wktAt`). Each row's cover cells at `level` are looked up in
+    * the directory. A found cell is skipped, adds its per-key totals, or
+    * runs the per-point loop, as [[coverCase]] says; the loop applies the
+    * strict bbox test on primitive doubles and, for a non-rectangle, the
+    * JTS refine. Hits are counted and summed per key in arrays indexed by
+    * key id, reset after the row. Emits (polygon row, key row, n_pts,
+    * sum_val) per key with a hit; `sum_val` is null when every hit's value
+    * is null. */
   def aggregate(polys: Iterator[InternalRow], wktAt: Int, level: Int): Iterator[InternalRow] = {
     val cnt = new Array[Long](keys.length)
     val sum = new Array[Double](keys.length)
@@ -40,20 +78,33 @@ private[ops] final class CellPoints(
       var hit = 0
       var c = 0
       while (c < cover.length) {
-        val k = java.util.Arrays.binarySearch(cells, cover(c))
+        val k = slot(cover(c))
         if (k >= 0) {
-          var j = offsets(k)
-          val end = offsets(k + 1)
-          while (j < end) {
-            val x = xs(j); val y = ys(j)
-            if (x > e0 && x < e2 && y > e1 && y < e3 &&
-                (rect || GeoFunctions.containsXy(wkt, x, y))) {
-              val g = keyIds(j)
+          val how = coverCase(k, e0, e1, e2, e3, rect, wkt)
+          if (how == CellPoints.Totals) {
+            var t = totOffsets(k)
+            val end = totOffsets(k + 1)
+            while (t < end) {
+              val g = totKeys(t)
               if (cnt(g) == 0) { touched(hit) = g; hit += 1 }
-              cnt(g) += 1
-              if (!valueNull(j)) { sum(g) += values(j); summed(g) = true }
+              cnt(g) += totCnt(t)
+              if (totSummed(t)) { sum(g) += totSum(t); summed(g) = true }
+              t += 1
             }
-            j += 1
+          } else if (how == CellPoints.Loop) {
+            var j = offsets(k)
+            val end = offsets(k + 1)
+            while (j < end) {
+              val x = xs(j); val y = ys(j)
+              if (x > e0 && x < e2 && y > e1 && y < e3 &&
+                  (rect || GeoFunctions.containsXy(wkt, x, y))) {
+                val g = keyIds(j)
+                if (cnt(g) == 0) { touched(hit) = g; hit += 1 }
+                cnt(g) += 1
+                if (!valueNull(j)) { sum(g) += values(j); summed(g) = true }
+              }
+              j += 1
+            }
           }
         }
         c += 1
@@ -76,7 +127,20 @@ private[ops] final class CellPoints(
   }
 }
 
-private[ops] object CellPoints {
+private[graft] object CellPoints {
+
+  /** The cases of [[CellPoints.coverCase]]. */
+  final val Skip = 0
+  final val Totals = 1
+  final val Loop = 2
+
+  /** One partition of the projected point side, in input order, with
+    * partition-local key ids: the input of [[build]]. */
+  final class Part(val cells: Array[Long], val xs: Array[Double], val ys: Array[Double],
+                   val values: Array[Double], val valueNull: Array[Boolean],
+                   val keyIds: Array[Int], val keys: Array[UnsafeRow]) extends Serializable {
+    def size: Int = xs.length
+  }
 
   /** Distinct key rows and their ids, in first-seen order. */
   private final class Dict {
@@ -94,11 +158,24 @@ private[ops] object CellPoints {
     }
   }
 
+  /** The home slot of `cell` in a directory of `2^bits` slots: the top
+    * bits of a Fibonacci (multiplicative) hash. */
+  @inline private def home(cell: Long, bits: Int): Int =
+    ((cell * 0x9E3779B97F4A7C15L) >>> (64 - bits)).toInt
+
+  /** Linear probing from the home slot; -1 if `cell` is absent. */
+  @inline private def find(dirCells: Array[Long], dirSlots: Array[Int], cell: Long): Int = {
+    val mask = dirSlots.length - 1
+    var h = home(cell, Integer.numberOfTrailingZeros(dirSlots.length))
+    var s = dirSlots(h)
+    while (s != 0 && dirCells(h) != cell) { h = (h + 1) & mask; s = dirSlots(h) }
+    s - 1
+  }
+
   /** One partition of the projected point side `(cell, x, y, value,
-    * keys...)`, in input order and with partition-local key ids (the
-    * `offsets` are unset). Points with a null x or y are dropped: their
-    * cell is null, and a null cell joins nothing. */
-  def part(rows: Iterator[InternalRow], keyTypes: Seq[DataType]): CellPoints = {
+    * keys...)`. Points with a null x or y are dropped: their cell is null,
+    * and a null cell joins nothing. */
+  def part(rows: Iterator[InternalRow], keyTypes: Seq[DataType]): Part = {
     val keyOf = UnsafeProjection.create(keyTypes.zipWithIndex.map { case (t, i) =>
       BoundReference(4 + i, t, nullable = true) })
     val dict = new Dict
@@ -114,15 +191,15 @@ private[ops] object CellPoints {
         keyIds += dict.id(keyOf(r))
       }
     }
-    new CellPoints(cells.result(), Array.emptyIntArray, xs.result(), ys.result(),
-      values.result(), valueNull.result(), keyIds.result(), dict.rows.result())
+    new Part(cells.result(), xs.result(), ys.result(), values.result(), valueNull.result(),
+      keyIds.result(), dict.rows.result())
   }
 
-  /** The index of all partitions: key ids re-mapped to one dictionary, and
-    * the points counting-sorted by cell. Primitive arrays throughout: one
-    * `long[]` sort for the distinct cells, one binary search per point for
-    * its bucket. */
-  def build(parts: Array[CellPoints]): CellPoints = {
+  /** The index of all partitions: key ids re-mapped to one dictionary, the
+    * points counting-sorted by cell, and the per-cell directory, bounds and
+    * totals. Primitive arrays throughout and O(n) after one `long[]` sort
+    * for the distinct cells. */
+  def build(parts: Array[Part]): CellPoints = {
     val n = parts.map(_.size).sum
     val cell = new Array[Long](n)
     val x, y, v = new Array[Double](n)
@@ -142,6 +219,7 @@ private[ops] object CellPoints {
       while (i < m) { kid(o + i) = remap(p.keyIds(i)); i += 1 }
       o += m
     }
+    val keys = dict.rows.result()
 
     val sorted = cell.clone()
     java.util.Arrays.sort(sorted)
@@ -153,11 +231,24 @@ private[ops] object CellPoints {
     }
     val cells = java.util.Arrays.copyOf(sorted, d)
 
+    var bits = 1
+    while ((1 << bits) < 2 * d) bits += 1
+    val dirCells = new Array[Long](1 << bits)
+    val dirSlots = new Array[Int](1 << bits)
+    val mask = (1 << bits) - 1
+    var k = 0
+    while (k < d) {
+      var h = home(cells(k), bits)
+      while (dirSlots(h) != 0) h = (h + 1) & mask
+      dirCells(h) = cells(k); dirSlots(h) = k + 1
+      k += 1
+    }
+
     val bucket = new Array[Int](n)
     val offsets = new Array[Int](d + 1)
     i = 0
     while (i < n) {
-      val b = java.util.Arrays.binarySearch(cells, cell(i))
+      val b = find(dirCells, dirSlots, cell(i))
       bucket(i) = b; offsets(b + 1) += 1
       i += 1
     }
@@ -174,6 +265,39 @@ private[ops] object CellPoints {
       xs(j) = x(i); ys(j) = y(i); values(j) = v(i); valueNull(j) = vNull(i); keyIds(j) = kid(i)
       i += 1
     }
-    new CellPoints(cells, offsets, xs, ys, values, valueNull, keyIds, dict.rows.result())
+
+    // per cell: the points' bounds (Math.min/max keep a NaN) and the
+    // per-key totals; `at(g)` is key g's total row while `seen(g) == k`
+    val box = new Array[Double](4 * d)
+    val totOffsets = new Array[Int](d + 1)
+    val totKeys, totCnt = new Array[Int](n)
+    val totSum = new Array[Double](n)
+    val totSummed = new Array[Boolean](n)
+    val seen = Array.fill(keys.length)(-1)
+    val at = new Array[Int](keys.length)
+    var t = 0
+    k = 0
+    while (k < d) {
+      totOffsets(k) = t
+      var j = offsets(k)
+      var x0, x1 = xs(j)
+      var y0, y1 = ys(j)
+      while (j < offsets(k + 1)) {
+        x0 = math.min(x0, xs(j)); x1 = math.max(x1, xs(j))
+        y0 = math.min(y0, ys(j)); y1 = math.max(y1, ys(j))
+        val g = keyIds(j)
+        if (seen(g) != k) { seen(g) = k; at(g) = t; totKeys(t) = g; t += 1 }
+        totCnt(at(g)) += 1
+        if (!valueNull(j)) { totSum(at(g)) += values(j); totSummed(at(g)) = true }
+        j += 1
+      }
+      box(4 * k) = x0; box(4 * k + 1) = y0; box(4 * k + 2) = x1; box(4 * k + 3) = y1
+      k += 1
+    }
+    totOffsets(d) = t
+    new CellPoints(offsets, xs, ys, values, valueNull, keyIds, keys,
+      dirCells, dirSlots, box, totOffsets, java.util.Arrays.copyOf(totKeys, t),
+      java.util.Arrays.copyOf(totCnt, t), java.util.Arrays.copyOf(totSum, t),
+      java.util.Arrays.copyOf(totSummed, t))
   }
 }

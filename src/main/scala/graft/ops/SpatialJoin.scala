@@ -137,9 +137,13 @@ object SpatialJoin {
     * fused: the point side is collected once (one job), indexed by cell on
     * the driver ([[CellPoints]]) and broadcast, and one pass over the
     * polygon rows probes the index per polygon and emits that polygon's
-    * final groups — no hash join, no hash aggregate, no exchange. Sums may
-    * then add in another order than the join's. Above the threshold it is
-    * `pip(PointBuild)` plus a hash aggregate on a polygon row id. */
+    * final groups — no hash join, no hash aggregate, no exchange. The
+    * probe finds each cover cell in a hashed directory, skips a cell whose
+    * points all miss the polygon's envelope, adds the per-key totals of a
+    * cell whose points all lie in its interior, and tests the points of
+    * any other cell one by one. Sums may then add in another order than
+    * the join's. Above the threshold it is `pip(PointBuild)` plus a hash
+    * aggregate on a polygon row id. */
   def zonalAgg(points: DataFrame, polys: DataFrame, level: Int,
                keys: Seq[Column], value: Column): DataFrame = {
     // -0.0/0.0 and NaN payloads are one group key, as in Spark's groupBy

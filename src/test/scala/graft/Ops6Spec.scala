@@ -315,4 +315,49 @@ class Ops6Spec extends SparkSpec {
       TableCommit.read(spark, dir, 1).collect()
     }
   }
+
+  test("TableCommit.expireSnapshots: a second expire walks only the snapshots left") {
+    import spark.implicits._
+    import java.nio.file.{Files, Paths}
+    val dir = Files.createTempDirectory("tc").toString + "/t6"
+    def rows() = TableCommit.read(spark, dir).collect().map(_.getInt(0)).toSet
+    TableCommit.commit(Seq(1).toDF("a"), dir)
+    TableCommit.commit(Seq(2).toDF("a"), dir)
+    assert(TableCommit.expireSnapshots(dir, keep = 1).isEmpty) // v2 lists both dirs
+    TableCommit.commit(Seq(3).toDF("a"), dir)
+    assert(TableCommit.expireSnapshots(dir, keep = 1).isEmpty) // v1 is gone already
+    assert(rows() === Set(1, 2, 3))
+    val older = TableCommit.read(spark, dir).inputFiles.map(f => Paths.get(new java.net.URI(f))
+      .getParent.toString).toSet
+    TableCommit.commitOverwrite(Seq(4).toDF("a"), dir) // orphans the three dirs
+    val dead = TableCommit.expireSnapshots(dir, keep = 1)
+    assert(dead.map(d => Paths.get(d).toAbsolutePath.toString).toSet === older)
+    dead.foreach(d => assert(!Files.exists(Paths.get(d)), s"$d not deleted"))
+    assert(rows() === Set(4))
+    TableCommit.commit(Seq(5).toDF("a"), dir)
+    assert(TableCommit.expireSnapshots(dir, keep = 2).isEmpty)
+    assert(rows() === Set(4, 5))
+    assert(TableCommit.currentVersion(dir) === 5)
+  }
+
+  test("TableCommit snapshots are renamed into place: a stray temp file is no version") {
+    import spark.implicits._
+    import java.nio.file.{Files, Paths}
+    val dir = Files.createTempDirectory("tc").toString + "/t7"
+    TableCommit.commit(Seq(1).toDF("a"), dir)
+    TableCommit.merge(spark, dir, Seq(2).toDF("a"), "a")
+    TableCommit.commitOverwrite(Seq(3).toDF("a"), dir)
+    val snaps = Paths.get(dir, "snapshots")
+    def names() = { val s = Files.list(snaps); try s.toArray.map(_.toString.split('/').last).toSet finally s.close() }
+    assert(names() === Set("v000001.txt", "v000002.txt", "v000003.txt"), "a temp file was left")
+    // what a crash between the temp write and its rename leaves: a whole
+    // or partial listing under a temp name
+    Files.writeString(snaps.resolve("_tmp4242.txt"), s"$dir/data/nowhere")
+    assert(TableCommit.currentVersion(dir) === 3)
+    assert(TableCommit.read(spark, dir).collect().map(_.getInt(0)).toSet === Set(3))
+    assert(TableCommit.commit(Seq(4).toDF("a"), dir) === 4)
+    assert(TableCommit.read(spark, dir).collect().map(_.getInt(0)).toSet === Set(3, 4))
+    assert(TableCommit.expireSnapshots(dir, keep = 1).length === 2) // v1, v2's dirs; not the stray
+    assert(TableCommit.read(spark, dir).collect().map(_.getInt(0)).toSet === Set(3, 4))
+  }
 }

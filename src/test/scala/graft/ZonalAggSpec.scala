@@ -3,8 +3,11 @@ package graft
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import graft.functions.GeoFunctions.st_contains_xy
+import org.apache.spark.sql.catalyst.InternalRow
+import graft.functions.GeoFunctions
+import graft.geo.{CellIndex, SplitMix64}
 import graft.io.GeoTables
-import graft.ops.{BenchKernel, SpatialJoin}
+import graft.ops.{BenchKernel, CellPoints, SpatialJoin}
 
 /** `SpatialJoin.zonalAgg` on both of its paths — fused (the point side
   * under the broadcast threshold) and the join + aggregate fallback
@@ -26,9 +29,9 @@ class ZonalAggSpec extends SparkSpec {
 
   /** The fused and the fallback result, each checked to have taken its
     * path: the fused plan is one RDD scan, with no join and no aggregate. */
-  private def bothPaths(points: DataFrame, polys: DataFrame, keys: Seq[Column],
-                        value: Column): (Map[Seq[Any], Int], Map[Seq[Any], Int]) = {
-    def run() = SpatialJoin.zonalAgg(points, polys, GeoTables.JoinLevel, keys, value)
+  private def bothPaths(points: DataFrame, polys: DataFrame, keys: Seq[Column], value: Column,
+                        level: Int = GeoTables.JoinLevel): (Map[Seq[Any], Int], Map[Seq[Any], Int]) = {
+    def run() = SpatialJoin.zonalAgg(points, polys, level, keys, value)
     val fused = run()
     val fusedPlan = fused.queryExecution.executedPlan.toString
     assert(fusedPlan.contains("ExistingRDD") && !fusedPlan.contains("Join") &&
@@ -96,5 +99,127 @@ class ZonalAggSpec extends SparkSpec {
     // an empty point side gives no rows on either path
     val none = pts.where(lit(false))
     assert(bothPaths(none, polys, Seq(col("k")), col("value")) == ((Map.empty, Map.empty)))
+  }
+
+  /** A probe index built straight from (x, y, value) points at `level`,
+    * with no key, as [[SpatialJoin.zonalAgg]] builds it. */
+  private def index(points: Seq[(Double, Double, Option[Double])], level: Int): CellPoints =
+    CellPoints.build(Array(CellPoints.part(points.iterator.map { case (x, y, v) =>
+      InternalRow(CellIndex.cellOf(x, y, level), x, y, v.getOrElse(null))
+    }, Nil)))
+
+  /** The [[CellPoints.coverCase]] of every indexed cover cell of `wkt`,
+    * with the cell's nominal square. */
+  private def coverCases(ix: CellPoints, wkt: String, level: Int): Seq[(Int, Long)] = {
+    val (e0, e1, e2, e3, rect) = GeoFunctions.envRect(wkt)
+    CellIndex.cover(e0, e1, e2, e3, level).toSeq.map(c => (ix.slot(c), c)).collect {
+      case (k, c) if k >= 0 => (ix.coverCase(k, e0, e1, e2, e3, rect, wkt), c)
+    }
+  }
+
+  test("zonalAgg probe: skipped, whole and looped cells on a 0.25 grid, with NaN, ±Inf and clamped points") {
+    import spark.implicits._
+    // 16 points per level-7 cell; the key changes every 0.5 in x, so each
+    // cell straddles a key boundary; cell (14, 14) has only null values
+    val grid = for (i <- 0 until 128; j <- 0 until 128) yield {
+      val x = i * 0.25; val y = j * 0.25
+      val v = if (i / 4 == 14 && j / 4 == 14 || (i + j) % 7 == 0) None else Some(i % 5 * 0.5)
+      (x, y, v, i / 2 % 3)
+    }
+    // NaN and ±Inf coordinates, and points outside the [0, 128) domain
+    // that clamp into edge cells
+    val odd = Seq(
+      (Double.NaN, 5.5, Some(1.0), 0), (5.5, Double.NaN, Some(1.0), 0),
+      (Double.NegativeInfinity, 5.25, Some(1.0), 0), (Double.PositiveInfinity, 6.5, Some(1.0), 0),
+      (5.5, Double.PositiveInfinity, Some(1.0), 0), (6.5, Double.NegativeInfinity, Some(1.0), 0),
+      (-3.0, 5.5, Some(2.0), 1), (-3.0, -3.0, Some(2.0), 1),
+      (200.0, 5.5, Some(4.0), 2), (5.5, 130.0, Some(4.0), 2))
+    val pts = (grid ++ odd).toDF("x", "y", "value", "k")
+    def box(x0: Double, y0: Double, x1: Double, y1: Double) =
+      s"POLYGON (($x0 $y0, $x1 $y0, $x1 $y1, $x0 $y1, $x0 $y0))"
+    val rects = Seq(
+      1 -> box(2.1, 2.1, 9.9, 9.9), // whole interior cells, looped edge cells
+      2 -> box(2.8, 2.8, 8.1, 8.1), // the x = 2 column's points miss it: skipped
+      5 -> box(13.95, 13.95, 14.9, 14.9), // one whole cell, all values null
+      6 -> box(-5, 4, 1.5, 7), // a NaN x, -Inf x and a clamped x = -3 in cell (0, 5)
+      7 -> box(-10, -10, 0.9, 0.9), // cell (0, 0) whole, with the clamped (-3, -3)
+      8 -> box(126, 5, 300, 6), // (200, 5.5) whole in cell (127, 5); (+Inf, 6.5) skipped
+      9 -> box(4, 126, 7, 200), // (5.5, 130) and (5.5, +Inf) in cell (5, 127)
+      10 -> box(4.9, -1, 5.95, 0.9)) // cell (5, 0) would be whole, but for its NaN y
+    val shapes = Seq(
+      3 -> "POLYGON ((10 1, 19 10, 10 19, 1 10, 10 1))", // diamond
+      4 -> "POLYGON ((20.9 0.9, 30.1 0.9, 30.1 4.1, 24.1 4.1, 24.1 10.1, 20.9 10.1, 20.9 0.9))") // L
+    val polys = (rects ++ shapes).toDF("zone_id", "wkt")
+
+    // every case is hit on rectangles and on non-rectangles; for these,
+    // containsProperly is both true and false on cells inside the envelope
+    val ix = index((grid ++ odd).map { case (x, y, v, _) => (x, y, v) }, GeoTables.JoinLevel)
+    def cases(zones: Seq[(Int, String)]) =
+      zones.flatMap { case (_, w) => coverCases(ix, w, GeoTables.JoinLevel) }
+    val all = Set(CellPoints.Skip, CellPoints.Totals, CellPoints.Loop)
+    assert(cases(rects).map(_._1).toSet == all)
+    assert(cases(shapes).map(_._1).toSet == all)
+    val inside = shapes.flatMap { case (_, w) =>
+      val (e0, e1, e2, e3, _) = GeoFunctions.envRect(w)
+      coverCases(ix, w, GeoTables.JoinLevel).filter { case (_, c) =>
+        val (x0, y0, x1, y1) = CellIndex.cellBounds(c)
+        x0 > e0 && x1 < e2 && y0 > e1 && y1 < e3
+      }.map(_._1)
+    }
+    assert(inside.contains(CellPoints.Totals) && inside.contains(CellPoints.Loop))
+    assert(coverCases(ix, rects(2)._2, GeoTables.JoinLevel).map(_._1).contains(CellPoints.Totals))
+
+    for (keys <- Seq(Seq(col("k")), Nil)) {
+      val expected = reference(pts, polys, keys, col("value"))
+      val (fused, fallback) = bothPaths(pts, polys, keys, col("value"))
+      assert(fused == expected, s"fused, keys $keys")
+      assert(fallback == expected, s"fallback, keys $keys")
+      def zone(z: Int) = expected.keys.toSeq.filter(_.head == z).map(_.takeRight(2))
+      assert(zone(5).nonEmpty && zone(5).forall(_(1) == null), "the all-null cell counts, with no sum")
+      assert(zone(5).map(_.head.asInstanceOf[Long]).sum == 16)
+      assert(zone(6).map(_.head.asInstanceOf[Long]).sum > 0 && zone(8) == Seq(Seq(1L, 4.0)))
+      assert(zone(7).nonEmpty && zone(9) == Seq(Seq(1L, 4.0)))
+      assert(zone(10).map(_.head.asInstanceOf[Long]).sum == 16)
+    }
+  }
+
+  test("zonalAgg at level 12: tens of thousands of distinct point cells") {
+    import spark.implicits._
+    val level = 12
+    val raw = (0 until 40000).map { i =>
+      (SplitMix64.uniform(i, 3L) * 64, SplitMix64.uniform(i, 5L) * 64, (i % 7).toDouble, i % 2)
+    }
+    val pts = raw.toDF("x", "y", "value", "k")
+    val polys = Seq(
+      (1, "POLYGON ((10 10, 14.3 10, 14.3 13.7, 10 13.7, 10 10))"),
+      (2, "POLYGON ((40 30, 44 34, 40 38, 36 34, 40 30))"),
+      (3, "POLYGON ((50.01 0.5, 50.09 0.5, 50.09 63.5, 50.01 63.5, 50.01 0.5))"))
+      .toDF("zone_id", "wkt")
+    val ix = index(raw.map { case (x, y, v, _) => (x, y, Some(v)) }, level)
+    assert(ix.offsets.length - 1 > 30000) // distinct point cells
+    val expected = reference(pts, polys, Seq(col("k")), col("value"))
+    val (fused, fallback) = bothPaths(pts, polys, Seq(col("k")), col("value"), level)
+    assert(expected.keys.map(_.head).toSet == Set(1, 2, 3))
+    assert(fused == expected, "fused zonalAgg differs from the brute-force reference")
+    assert(fallback == expected, "fallback zonalAgg differs from the brute-force reference")
+  }
+
+  test("CellPoints directory: every indexed cell is found at its CSR index, an absent cell is not") {
+    val rng = new scala.util.Random(7)
+    def cell() = CellIndex.encode(12, rng.nextInt(4096), rng.nextInt(4096))
+    val cells = Array.fill(60000)(cell())
+    // three partitions, as the collected point side arrives
+    val ix = CellPoints.build(cells.grouped(20000).map(part =>
+      CellPoints.part(part.iterator.map(c => InternalRow(c, 1.0, 2.0, 3.0)), Nil)).toArray)
+    val distinct = cells.distinct.sorted
+    assert(ix.offsets.length == distinct.length + 1)
+    assert(distinct.indices.forall(k => ix.slot(distinct(k)) == k), "an indexed cell is lost")
+    val counts = cells.groupBy(identity).map { case (c, cs) => c -> cs.length }
+    assert(distinct.indices.forall(k => ix.offsets(k + 1) - ix.offsets(k) == counts(distinct(k))))
+    val present = distinct.toSet
+    val absent = Iterator.continually(cell()).filterNot(present).take(60000).toSeq ++
+      distinct.take(1000).map(c => c ^ (1L << 58)) // the same (ix, iy) one level off
+    assert(absent.forall(ix.slot(_) == -1), "an absent cell is found")
+    assert(CellPoints.build(Array.empty).slot(cells(0)) == -1)
   }
 }
