@@ -2,7 +2,7 @@ package graft.functions
 
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions.udf
-import org.locationtech.jts.geom.{Coordinate, Envelope, Geometry, GeometryFactory}
+import org.locationtech.jts.geom.{Coordinate, Geometry, GeometryFactory}
 import org.locationtech.jts.geom.prep.{PreparedGeometry, PreparedGeometryFactory}
 import org.locationtech.jts.io.{WKTReader, WKTWriter}
 
@@ -69,13 +69,6 @@ object GeoFunctions extends Serializable {
       p.geom.contains(pt)
     }
   }
-
-  /** Whether the closed box lies in the geometry's interior (JTS prepared
-    * `containsProperly`); a degenerate box is tested as a point or a
-    * segment. Then every point in the box passes [[containsXy]]. */
-  def containsBoxProperly(wkt: String, minx: Double, miny: Double,
-                          maxx: Double, maxy: Double): Boolean =
-    prep(wkt).geom.containsProperly(gf.toGeometry(new Envelope(minx, maxx, miny, maxy)))
 
   val st_contains_xy = udf(containsXy _)
   // both sides go through the parse cache: candidate pairs repeat geometries

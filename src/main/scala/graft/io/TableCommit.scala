@@ -37,11 +37,14 @@ object TableCommit {
 
   /** Writes snapshot `v` listing `dirs`: to a temp file first, then one
     * atomic rename, so a crash leaves either no snapshot file or a whole
-    * one, never a truncated one that [[currentVersion]] would take. */
+    * one, never a truncated one that [[currentVersion]] would take. The
+    * temp file is created with the process umask, as the data files are
+    * (`createTempFile` would make it owner-only), and the rename keeps
+    * that mode. */
   private def writeSnapshot(table: String, v: Int, dirs: Seq[String]): Unit = {
     val d = Files.createDirectories(Paths.get(snapDir(table)))
-    val tmp = Files.createTempFile(d, "_tmp", ".txt")
-    Files.writeString(tmp, dirs.mkString("\n"))
+    val tmp = Files.writeString(d.resolve(s"_tmp-v$v-${java.util.UUID.randomUUID}.txt"),
+      dirs.mkString("\n"))
     Files.move(tmp, d.resolve(f"v$v%06d.txt"), StandardCopyOption.ATOMIC_MOVE)
   }
 

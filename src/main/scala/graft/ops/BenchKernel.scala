@@ -57,11 +57,10 @@ object BenchKernel {
     // polygon and emits that polygon's final tile groups, with no hash
     // join, hash aggregate or exchange. The probe finds each cover cell in
     // a hashed directory and adds whole-cell totals where a cell's points
-    // all lie inside the polygon; at perfbench kernel scale 7.7M of the
-    // 10.1M points in cells it does not skip are counted that way
-    // (BENCH.md). Above
-    // the threshold (graft.Bench at sf0.1: 44 MB) it is the point-side
-    // shuffle-hash join plus a hash aggregate.
+    // all lie inside the polygon, a rectangle here; at perfbench kernel
+    // scale 7.7M of the 10.1M points in cells it does not skip are counted
+    // that way (BENCH.md). Above the threshold (graft.Bench at sf0.1:
+    // 44 MB) it is the point-side shuffle-hash join plus a hash aggregate.
     SpatialJoin.zonalAgg(pts, polys, level, tileOf("x", "y"), col("value"))
   }
 

@@ -9,23 +9,26 @@ import graft.functions.GeoFunctions
 import graft.geo.CellIndex
 
 /** A point side indexed by owning cell, in CSR form: the broadcast build of
-  * [[SpatialJoin.zonalAgg]]'s fused path. The points of the `k`-th smallest
-  * distinct cell are rows `offsets(k) until offsets(k + 1)` of the
-  * per-point arrays. A null value is a set
-  * `valueNull` bit. Point-side group keys are dictionary-encoded:
-  * `keyIds(j)` indexes `keys`, the distinct key rows.
+  * [[SpatialJoin.zonalAgg]]'s fused path. The points of the cell at CSR
+  * index `k` are rows `offsets(k) until offsets(k + 1)` of the per-point
+  * arrays. A null value is a set `valueNull` bit. Point-side group keys
+  * are dictionary-encoded: `keyIds(j)` indexes `keys`, the distinct key
+  * rows.
   *
-  * Per indexed cell `k`, [[CellPoints.build]] also derives:
-  *  - a slot in a hashed directory (open addressing over `dirCells`, with
-  *    `dirSlots` holding `k + 1` and 0 for an empty slot; load ≤ 0.5), so
-  *    that [[slot]] finds a cell in O(1);
+  * [[CellPoints.build]] also derives a hashed directory from cell to `k`
+  * (open addressing over `dirCells`, with `dirSlots` holding `k + 1` and 0
+  * for an empty slot; load ≤ 0.5), so that [[slot]] finds a cell in O(1).
+  * The cells with two or more points come first, `k < totOffsets.length -
+  * 1`, and only they carry:
   *  - `box(4k until 4k + 4)`: min x, min y, max x, max y of the cell's own
   *    points, NaN if any of them has a NaN coordinate;
-  *  - its per-key totals, rows `totOffsets(k) until totOffsets(k + 1)`:
+  *  - their per-key totals, rows `totOffsets(k) until totOffsets(k + 1)`:
   *    key id, point count, sum of the non-null values and whether any
-  *    value was non-null. */
+  *    value was non-null.
+  * A single-point cell needs neither: the loop's test on its point is the
+  * test on its bounds. */
 private[graft] final class CellPoints(
-    val offsets: Array[Int],
+    offsets: Array[Int],
     xs: Array[Double], ys: Array[Double],
     values: Array[Double], valueNull: Array[Boolean],
     keyIds: Array[Int], keys: Array[UnsafeRow],
@@ -33,29 +36,36 @@ private[graft] final class CellPoints(
     totOffsets: Array[Int], totKeys: Array[Int], totCnt: Array[Int],
     totSum: Array[Double], totSummed: Array[Boolean]) extends Serializable {
 
+  import CellPoints.{Loop, Skip, Totals}
+
   /** The CSR index `k` of `cell`, or -1 if no point lies in it. */
   def slot(cell: Long): Int = CellPoints.find(dirCells, dirSlots, cell)
 
-  /** How the probe treats indexed cell `k` under a polygon (`wkt`, its
-    * envelope `e0..e3`, `rect` if it is its envelope), by the cell's point
-    * bounds against the open envelope:
-    *  - [[CellPoints.Skip]]: the bounds miss it, so no point can pass the
-    *    strict bbox test;
-    *  - [[CellPoints.Totals]]: the bounds lie strictly inside it and, for a
-    *    non-rectangle, in the polygon's interior (JTS prepared
-    *    `containsProperly`), so every point is a hit;
-    *  - [[CellPoints.Loop]]: anything else, NaN bounds included.
+  /** The number of indexed cells. */
+  def cellCount: Int = offsets.length - 1
+
+  /** How the probe treats indexed cell `k` under a polygon with envelope
+    * `e0..e3` (`rect` if it is its envelope):
+    *  - `Skip`: the cell's point bounds miss the open envelope, so no point
+    *    can pass the strict bbox test;
+    *  - `Totals`: the polygon is a rectangle and the bounds lie strictly
+    *    inside it, so every point is a hit;
+    *  - `Loop`: anything else: a single-point cell, NaN bounds, or a
+    *    non-rectangle whose envelope holds the bounds. (A JTS
+    *    `containsProperly` of the bounds box cost more than the loop at 4
+    *    or fewer points per cell and saved under a third at 16; BENCH.md.)
     * The bounds are those of the indexed points, never the cell's nominal
     * square, so points clamped into an edge cell are decided exactly. */
-  def coverCase(k: Int, e0: Double, e1: Double, e2: Double, e3: Double,
-                rect: Boolean, wkt: String): Int = {
-    val x0 = box(4 * k); val y0 = box(4 * k + 1)
-    val x1 = box(4 * k + 2); val y1 = box(4 * k + 3)
-    if (x1 <= e0 || x0 >= e2 || y1 <= e1 || y0 >= e3) CellPoints.Skip
-    else if (x0 > e0 && x1 < e2 && y0 > e1 && y1 < e3 &&
-             (rect || GeoFunctions.containsBoxProperly(wkt, x0, y0, x1, y1))) CellPoints.Totals
-    else CellPoints.Loop
-  }
+  private def coverCase(k: Int, e0: Double, e1: Double, e2: Double, e3: Double,
+                        rect: Boolean): Int =
+    if (k >= totOffsets.length - 1) Loop
+    else {
+      val x0 = box(4 * k); val y0 = box(4 * k + 1)
+      val x1 = box(4 * k + 2); val y1 = box(4 * k + 3)
+      if (x1 <= e0 || x0 >= e2 || y1 <= e1 || y0 >= e3) Skip
+      else if (rect && x0 > e0 && x1 < e2 && y0 > e1 && y1 < e3) Totals
+      else Loop
+    }
 
   /** The zonal aggregate of one partition of polygon rows (`wkt` at
     * ordinal `wktAt`). Each row's cover cells at `level` are looked up in
@@ -80,8 +90,8 @@ private[graft] final class CellPoints(
       while (c < cover.length) {
         val k = slot(cover(c))
         if (k >= 0) {
-          val how = coverCase(k, e0, e1, e2, e3, rect, wkt)
-          if (how == CellPoints.Totals) {
+          val how = coverCase(k, e0, e1, e2, e3, rect)
+          if (how == Totals) {
             var t = totOffsets(k)
             val end = totOffsets(k + 1)
             while (t < end) {
@@ -91,7 +101,7 @@ private[graft] final class CellPoints(
               if (totSummed(t)) { sum(g) += totSum(t); summed(g) = true }
               t += 1
             }
-          } else if (how == CellPoints.Loop) {
+          } else if (how == Loop) {
             var j = offsets(k)
             val end = offsets(k + 1)
             while (j < end) {
@@ -130,9 +140,9 @@ private[graft] final class CellPoints(
 private[graft] object CellPoints {
 
   /** The cases of [[CellPoints.coverCase]]. */
-  final val Skip = 0
-  final val Totals = 1
-  final val Loop = 2
+  private final val Skip = 0
+  private final val Totals = 1
+  private final val Loop = 2
 
   /** One partition of the projected point side, in input order, with
     * partition-local key ids: the input of [[build]]. */
@@ -196,9 +206,9 @@ private[graft] object CellPoints {
   }
 
   /** The index of all partitions: key ids re-mapped to one dictionary, the
-    * points counting-sorted by cell, and the per-cell directory, bounds and
-    * totals. Primitive arrays throughout and O(n) after one `long[]` sort
-    * for the distinct cells. */
+    * points counting-sorted by CSR index, the directory, and the bounds and
+    * totals of the multi-point cells. Primitive arrays throughout and O(n)
+    * after one `long[]` sort for the distinct cells. */
   def build(parts: Array[Part]): CellPoints = {
     val n = parts.map(_.size).sum
     val cell = new Array[Long](n)
@@ -221,26 +231,37 @@ private[graft] object CellPoints {
     }
     val keys = dict.rows.result()
 
+    // the distinct cells, each with its point count
     val sorted = cell.clone()
     java.util.Arrays.sort(sorted)
+    val runs = new Array[Int](n)
     var d = 0
     var i = 0
     while (i < n) {
       if (d == 0 || sorted(i) != sorted(d - 1)) { sorted(d) = sorted(i); d += 1 }
+      runs(d - 1) += 1
       i += 1
     }
-    val cells = java.util.Arrays.copyOf(sorted, d)
 
+    // CSR order: the `multi` cells with two or more points first, as only
+    // they get bounds and totals; each group in cell order
+    var multi = 0
+    var k = 0
+    while (k < d) { if (runs(k) > 1) multi += 1; k += 1 }
     var bits = 1
     while ((1 << bits) < 2 * d) bits += 1
     val dirCells = new Array[Long](1 << bits)
     val dirSlots = new Array[Int](1 << bits)
     val mask = (1 << bits) - 1
-    var k = 0
+    var nextMulti = 0
+    var nextSingle = multi
+    k = 0
     while (k < d) {
-      var h = home(cells(k), bits)
+      var h = home(sorted(k), bits)
       while (dirSlots(h) != 0) h = (h + 1) & mask
-      dirCells(h) = cells(k); dirSlots(h) = k + 1
+      dirCells(h) = sorted(k)
+      if (runs(k) > 1) { nextMulti += 1; dirSlots(h) = nextMulti }
+      else { nextSingle += 1; dirSlots(h) = nextSingle }
       k += 1
     }
 
@@ -266,10 +287,11 @@ private[graft] object CellPoints {
       i += 1
     }
 
-    // per cell: the points' bounds (Math.min/max keep a NaN) and the
-    // per-key totals; `at(g)` is key g's total row while `seen(g) == k`
-    val box = new Array[Double](4 * d)
-    val totOffsets = new Array[Int](d + 1)
+    // per multi-point cell: the points' bounds (Math.min/max keep a NaN)
+    // and the per-key totals; `at(g)` is key g's total row while
+    // `seen(g) == k`
+    val box = new Array[Double](4 * multi)
+    val totOffsets = new Array[Int](multi + 1)
     val totKeys, totCnt = new Array[Int](n)
     val totSum = new Array[Double](n)
     val totSummed = new Array[Boolean](n)
@@ -277,7 +299,7 @@ private[graft] object CellPoints {
     val at = new Array[Int](keys.length)
     var t = 0
     k = 0
-    while (k < d) {
+    while (k < multi) {
       totOffsets(k) = t
       var j = offsets(k)
       var x0, x1 = xs(j)
@@ -294,7 +316,7 @@ private[graft] object CellPoints {
       box(4 * k) = x0; box(4 * k + 1) = y0; box(4 * k + 2) = x1; box(4 * k + 3) = y1
       k += 1
     }
-    totOffsets(d) = t
+    totOffsets(multi) = t
     new CellPoints(offsets, xs, ys, values, valueNull, keyIds, keys,
       dirCells, dirSlots, box, totOffsets, java.util.Arrays.copyOf(totKeys, t),
       java.util.Arrays.copyOf(totCnt, t), java.util.Arrays.copyOf(totSum, t),

@@ -140,8 +140,8 @@ object SpatialJoin {
     * final groups — no hash join, no hash aggregate, no exchange. The
     * probe finds each cover cell in a hashed directory, skips a cell whose
     * points all miss the polygon's envelope, adds the per-key totals of a
-    * cell whose points all lie in its interior, and tests the points of
-    * any other cell one by one. Sums may then add in another order than
+    * cell whose points all lie inside a rectangular polygon, and tests the
+    * points of any other cell one by one. Sums may then add in another order than
     * the join's. Above the threshold it is `pip(PointBuild)` plus a hash
     * aggregate on a polygon row id. */
   def zonalAgg(points: DataFrame, polys: DataFrame, level: Int,

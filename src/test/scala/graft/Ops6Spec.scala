@@ -350,6 +350,11 @@ class Ops6Spec extends SparkSpec {
     val snaps = Paths.get(dir, "snapshots")
     def names() = { val s = Files.list(snaps); try s.toArray.map(_.toString.split('/').last).toSet finally s.close() }
     assert(names() === Set("v000001.txt", "v000002.txt", "v000003.txt"), "a temp file was left")
+    // a snapshot file has the mode of any file the process writes (its
+    // umask), not the owner-only mode of a JDK temp file
+    val plain = Files.writeString(Paths.get(dir, "plain.txt"), "x")
+    def mode(p: java.nio.file.Path) = Files.getPosixFilePermissions(p)
+    assert(names().forall(n => mode(snaps.resolve(n)) == mode(plain)), "a snapshot's mode differs")
     // what a crash between the temp write and its rename leaves: a whole
     // or partial listing under a temp name
     Files.writeString(snaps.resolve("_tmp4242.txt"), s"$dir/data/nowhere")

@@ -108,13 +108,22 @@ class ZonalAggSpec extends SparkSpec {
       InternalRow(CellIndex.cellOf(x, y, level), x, y, v.getOrElse(null))
     }, Nil)))
 
-  /** The [[CellPoints.coverCase]] of every indexed cover cell of `wkt`,
-    * with the cell's nominal square. */
-  private def coverCases(ix: CellPoints, wkt: String, level: Int): Seq[(Int, Long)] = {
+  /** The probe's case for each cover cell of `wkt` that holds two or more
+    * of `points`, worked out from those points: "skip" if their bounds miss
+    * the open envelope, "totals" if `wkt` is a rectangle that holds them
+    * strictly, else "loop". A NaN coordinate makes the bounds NaN. */
+  private def cellCases(points: Seq[(Double, Double)], wkt: String, level: Int): Set[String] = {
     val (e0, e1, e2, e3, rect) = GeoFunctions.envRect(wkt)
-    CellIndex.cover(e0, e1, e2, e3, level).toSeq.map(c => (ix.slot(c), c)).collect {
-      case (k, c) if k >= 0 => (ix.coverCase(k, e0, e1, e2, e3, rect, wkt), c)
-    }
+    val cover = CellIndex.cover(e0, e1, e2, e3, level).toSet
+    points.groupBy { case (x, y) => CellIndex.cellOf(x, y, level) }.collect {
+      case (c, ps) if ps.size > 1 && cover(c) =>
+        val (xs, ys) = ps.unzip
+        val (x0, x1) = (xs.reduce((a, b) => math.min(a, b)), xs.reduce((a, b) => math.max(a, b)))
+        val (y0, y1) = (ys.reduce((a, b) => math.min(a, b)), ys.reduce((a, b) => math.max(a, b)))
+        if (x1 <= e0 || x0 >= e2 || y1 <= e1 || y0 >= e3) "skip"
+        else if (rect && x0 > e0 && x1 < e2 && y0 > e1 && y1 < e3) "totals"
+        else "loop"
+    }.toSet
   }
 
   test("zonalAgg probe: skipped, whole and looped cells on a 0.25 grid, with NaN, ±Inf and clamped points") {
@@ -151,23 +160,15 @@ class ZonalAggSpec extends SparkSpec {
       4 -> "POLYGON ((20.9 0.9, 30.1 0.9, 30.1 4.1, 24.1 4.1, 24.1 10.1, 20.9 10.1, 20.9 0.9))") // L
     val polys = (rects ++ shapes).toDF("zone_id", "wkt")
 
-    // every case is hit on rectangles and on non-rectangles; for these,
-    // containsProperly is both true and false on cells inside the envelope
-    val ix = index((grid ++ odd).map { case (x, y, v, _) => (x, y, v) }, GeoTables.JoinLevel)
+    // the fixture reaches every probe case on the rectangles, and skips
+    // and loops on the non-rectangles
+    val xy = (grid ++ odd).map { case (x, y, _, _) => (x, y) }
     def cases(zones: Seq[(Int, String)]) =
-      zones.flatMap { case (_, w) => coverCases(ix, w, GeoTables.JoinLevel) }
-    val all = Set(CellPoints.Skip, CellPoints.Totals, CellPoints.Loop)
-    assert(cases(rects).map(_._1).toSet == all)
-    assert(cases(shapes).map(_._1).toSet == all)
-    val inside = shapes.flatMap { case (_, w) =>
-      val (e0, e1, e2, e3, _) = GeoFunctions.envRect(w)
-      coverCases(ix, w, GeoTables.JoinLevel).filter { case (_, c) =>
-        val (x0, y0, x1, y1) = CellIndex.cellBounds(c)
-        x0 > e0 && x1 < e2 && y0 > e1 && y1 < e3
-      }.map(_._1)
-    }
-    assert(inside.contains(CellPoints.Totals) && inside.contains(CellPoints.Loop))
-    assert(coverCases(ix, rects(2)._2, GeoTables.JoinLevel).map(_._1).contains(CellPoints.Totals))
+      zones.flatMap { case (_, w) => cellCases(xy, w, GeoTables.JoinLevel) }.toSet
+    assert(cases(rects) == Set("skip", "totals", "loop"))
+    assert(cases(shapes) == Set("skip", "loop"))
+    assert(cases(rects.filter(_._1 == 5)).contains("totals")) // the all-null cell
+    assert(!cases(rects.filter(_._1 == 10)).contains("totals")) // the NaN y loops
 
     for (keys <- Seq(Seq(col("k")), Nil)) {
       val expected = reference(pts, polys, keys, col("value"))
@@ -196,7 +197,7 @@ class ZonalAggSpec extends SparkSpec {
       (3, "POLYGON ((50.01 0.5, 50.09 0.5, 50.09 63.5, 50.01 63.5, 50.01 0.5))"))
       .toDF("zone_id", "wkt")
     val ix = index(raw.map { case (x, y, v, _) => (x, y, Some(v)) }, level)
-    assert(ix.offsets.length - 1 > 30000) // distinct point cells
+    assert(ix.cellCount > 30000) // distinct point cells
     val expected = reference(pts, polys, Seq(col("k")), col("value"))
     val (fused, fallback) = bothPaths(pts, polys, Seq(col("k")), col("value"), level)
     assert(expected.keys.map(_.head).toSet == Set(1, 2, 3))
@@ -211,11 +212,9 @@ class ZonalAggSpec extends SparkSpec {
     // three partitions, as the collected point side arrives
     val ix = CellPoints.build(cells.grouped(20000).map(part =>
       CellPoints.part(part.iterator.map(c => InternalRow(c, 1.0, 2.0, 3.0)), Nil)).toArray)
-    val distinct = cells.distinct.sorted
-    assert(ix.offsets.length == distinct.length + 1)
-    assert(distinct.indices.forall(k => ix.slot(distinct(k)) == k), "an indexed cell is lost")
-    val counts = cells.groupBy(identity).map { case (c, cs) => c -> cs.length }
-    assert(distinct.indices.forall(k => ix.offsets(k + 1) - ix.offsets(k) == counts(distinct(k))))
+    val distinct = cells.distinct
+    assert(ix.cellCount == distinct.length)
+    assert(distinct.map(ix.slot).sorted.sameElements(0 until ix.cellCount), "an indexed cell is lost")
     val present = distinct.toSet
     val absent = Iterator.continually(cell()).filterNot(present).take(60000).toSeq ++
       distinct.take(1000).map(c => c ^ (1L << 58)) // the same (ix, iy) one level off
