@@ -20,12 +20,19 @@ object SparkEntry {
     val sfDir = "/root/testdata/sf0.001"
     val docs = GeoTables.docs(spark, sfDir)
     val spans = docs.select(col("doc_id"), explode(col("spans")).as("s"))
-    SpatialJoin.pip(GeoTables.pointSpans(spans, col("doc_id")),
-        GeoTables.polySpans(spans, col("doc_id")), GeoTables.JoinLevel,
-        PipPlan.BroadcastPolys)
+    SpatialJoin.zonalAgg(GeoTables.pointSpans(spans, col("doc_id")),
+        GeoTables.polySpans(spans, col("doc_id")), GeoTables.JoinLevel, Nil, col("value"))
       .groupBy(col("poly_doc"))
-      .agg(count(lit(1)).as("n_pts"), round(sum(col("value")), 3).as("sum_val"))
+      .agg(sum(col("n_pts")).as("n_pts"), round(sum(col("sum_val")), 3).as("sum_val"))
   }
+
+  /** The zonal stats of the points per zone through [[SpatialJoin.pip]]
+    * under a pinned `plan`, in place of the size-driven `zonalAgg`. */
+  private def pinnedZonal(s: SparkSession, dir: String, plan: PipPlan): DataFrame =
+    SpatialJoin.pip(GeoTables.points(s, dir),
+        GeoTables.zones(s, dir).select(col("zone_id"), col("wkt")), GeoTables.JoinLevel, plan)
+      .groupBy(col("zone_id"))
+      .agg(count(lit(1)).as("n_pts"), sum(col("value")).as("sum_val"))
 
   // ---------------------------------------------------------------------
 
@@ -60,27 +67,12 @@ object SparkEntry {
           round(col("sum_val") / col("n_pts"), 3).as("avg_val"))),
 
     // same join, uniformly salted (PipPlan.Salted) — must agree
-    "q_zonal_stats_salted" -> ((s, dir) => {
-      val joined = SpatialJoin.pip(
-        GeoTables.points(s, dir),
-        GeoTables.zones(s, dir).select(col("zone_id"), col("wkt")),
-        GeoTables.JoinLevel, PipPlan.Salted(4))
-      joined.groupBy(col("zone_id")).agg(
-        count(lit(1)).as("n_pts"),
-        sum(col("value")).as("sum_val"))
-    }),
+    "q_zonal_stats_salted" -> ((s, dir) => pinnedZonal(s, dir, PipPlan.Salted(4))),
 
     // same join again through the per-cell ADAPTIVE salting path (north
     // rule: repartition by measured cell density, salt only hot cells)
-    "q_zonal_stats_adaptive" -> ((s, dir) => {
-      val joined = SpatialJoin.pip(
-        GeoTables.points(s, dir),
-        GeoTables.zones(s, dir).select(col("zone_id"), col("wkt")),
-        GeoTables.JoinLevel, PipPlan.Adaptive(targetRowsPerTask = 2000L))
-      joined.groupBy(col("zone_id")).agg(
-        count(lit(1)).as("n_pts"),
-        sum(col("value")).as("sum_val"))
-    }),
+    "q_zonal_stats_adaptive" -> ((s, dir) =>
+      pinnedZonal(s, dir, PipPlan.Adaptive(targetRowsPerTask = 2000L))),
 
     // §2.5 per-cell histogram (north-rule metric): level-4 cells (size 8)
     "q_cell_histogram" -> ((s, dir) => {

@@ -19,19 +19,23 @@ object TableCommit {
   private def snapDir(table: String) = s"$table/snapshots"
 
   private val SnapshotName = """v(\d+)\.txt""".r
+  private val TempName = """_tmp-v(\d+)-.+\.txt""".r // writeSnapshot's temp file
 
-  /** The versions whose snapshot files exist, ascending. Only `vNNNNNN.txt`
-    * names count: a temp file of [[writeSnapshot]] is not a version. */
-  private def versions(table: String): Seq[Int] = {
+  /** The file names in the snapshot dir; none if it does not exist. */
+  private def snapshotNames(table: String): Seq[String] = {
     val d = Paths.get(snapDir(table))
     if (!Files.exists(d)) Seq.empty
     else {
       val names = Files.list(d)
-      try names.iterator().asScala.map(_.getFileName.toString)
-        .collect { case SnapshotName(v) => v.toInt }.toSeq.sorted
+      try names.iterator().asScala.map(_.getFileName.toString).toList
       finally names.close()
     }
   }
+
+  /** The versions whose snapshot files exist, ascending. Only `vNNNNNN.txt`
+    * names count: a temp file of [[writeSnapshot]] is not a version. */
+  private def versions(table: String): Seq[Int] =
+    snapshotNames(table).collect { case SnapshotName(v) => v.toInt }.sorted
 
   def currentVersion(table: String): Int = versions(table).lastOption.getOrElse(0)
 
@@ -192,7 +196,9 @@ object TableCommit {
   /** Snapshot expiry + vacuum: keep the newest `keep` snapshot files,
     * delete older ones, then delete every data dir no surviving snapshot
     * references (the unbounded-growth reaper — compaction and overwrite
-    * commits orphan their inputs, which otherwise live forever).
+    * commits orphan their inputs, which otherwise live forever). Also
+    * deletes the snapshot temp files a crashed writer left for versions up
+    * to the current one (the next version's may still be in flight).
     * Returns the deleted data dirs. Time travel to an expired version
     * fails by design; readers mid-scan on just-expired data are the same
     * hazard Iceberg's expire_snapshots documents — run it with a grace
@@ -207,6 +213,11 @@ object TableCommit {
     val dead = expired.flatMap(v => snapshotDirs(table, v)).distinct.filterNot(live)
     expired.foreach { v =>
       Files.deleteIfExists(Paths.get(f"${snapDir(table)}/v$v%06d.txt"))
+    }
+    snapshotNames(table).foreach {
+      case n @ TempName(v) if vs.lastOption.exists(BigInt(v) <= _) =>
+        Files.deleteIfExists(Paths.get(snapDir(table), n))
+      case _ =>
     }
     dead.foreach { d =>
       val p = Paths.get(d)

@@ -7,7 +7,8 @@ import graft.functions.GeoFunctions._
 
 /** How [[SpatialJoin.pip]] distributes its cell equi-join. Every plan
   * runs the same annotate, cover, join and refine; the plan picks only the
-  * exchange shape and the per-cell salt fan-out.
+  * exchange shape and the per-cell salt fan-out. Three plans; a zonal
+  * caller picks none and calls [[SpatialJoin.zonalAgg]] instead.
   *
   *  - `PointBuild`: the point side is the hash build. It is broadcast when
   *    Spark's estimate of its size is at most
@@ -16,9 +17,6 @@ import graft.functions.GeoFunctions._
   *    poly-cell side is never exchanged and each polygon's candidates stay
   *    in the task that exploded its cells; above the threshold (or with it
   *    at -1) it is a shuffle-hash join keyed on `cell`.
-  *  - `BroadcastPolys`: broadcast the poly-cell side so the point side
-  *    never shuffles (the analog of the reference caching one STRtree per
-  *    worker); for a small polygon side.
   *  - `Salted(n)`: every cell fans out `n` ways, for skewed cells.
   *  - `Adaptive(targetRowsPerTask)`: only hot cells fan out, in proportion
   *    to their measured point count ([[AdaptiveSkew.saltFactors]]).
@@ -26,7 +24,6 @@ import graft.functions.GeoFunctions._
 sealed trait PipPlan
 object PipPlan {
   case object PointBuild extends PipPlan
-  case object BroadcastPolys extends PipPlan
   final case class Salted(n: Int) extends PipPlan {
     require(n >= 1, s"salt count $n must be >= 1")
   }
@@ -43,7 +40,8 @@ object PipPlan {
   * points key by owning cell, equi-join on `cell` (hash-partitioned — the
   * scalable path), then JTS prepared-geometry refine. The equi pre-join is
   * what Catalyst can shuffle/broadcast/AQE-skew-optimize; the refine is a
-  * cheap scalar UDF on surviving candidates only.
+  * cheap scalar UDF on surviving candidates only. Zonal callers (`entry`,
+  * the kernel, `DocsStream`, `q_zonal_stats_points`) use [[zonalAgg]].
   */
 object SpatialJoin {
 
@@ -100,7 +98,6 @@ object SpatialJoin {
       case PipPlan.PointBuild =>
         (if (broadcastable(ptCells)) broadcast(ptCells) else ptCells.hint("shuffle_hash"),
          cells, Seq("cell"))
-      case PipPlan.BroadcastPolys => (ptCells, broadcast(cells), Seq("cell"))
       case PipPlan.Salted(n) => salted(_.withColumn("salt_n", lit(n)))
       case PipPlan.Adaptive(target) =>
         // hot cells only; a cell missing from the histogram gets 1

@@ -393,12 +393,7 @@ object TextOps {
     // reliable mode recomputes rather than writing corpus-sized postings
     // to DFS
     val grams = Checkpoints.ephemeral(docs
-      .select(col("doc_id"), expr("filter(split(text, ' '), t -> t <> '')").as("ts"))
-      .select(col("doc_id"), explode(expr(
-        s"CASE WHEN size(ts) >= $k THEN array_distinct(transform(" +
-        s"sequence(1, size(ts) - ${k - 1}), i -> " +
-        s"CAST(conv(substring(md5(concat_ws(' ', slice(ts, i, $k))), 1, 15), 16, 10) AS BIGINT)" +
-        s")) ELSE array() END")).as("h")))
+      .select(col("doc_id"), explode(array_distinct(gramHashes(k))).as("h")))
 
     val ceilTs: Column => Column = s => ceil(lit(threshold) * s - lit(1e-9))
 
@@ -456,24 +451,24 @@ object TextOps {
       .select(col("a_id"), col("b_id"), round(col("jaccard"), 4).as("jaccard"))
   }
 
-  /** Positional token k-grams as 60-bit md5-prefix hashes:
-    * (doc_id, pos, h) with pos 1-based; docs shorter than k tokens emit
-    * nothing. THE single source of the cross-op gram-hash contract:
-    * `winnow`, `dupSpans`, `contamination`, and `repetitionStats` all
-    * read their grams here (`jaccardJoin` inlines the same md5-prefix
-    * hash inside a per-row `array_distinct` — cheaper than explode-then-
-    * distinct — and its oracle pins the equality), so an external SQL
-    * engine replays every one of them with the same `md5` prefix. */
+  /** A doc's positional token k-gram hashes from its `text`: per gram, the
+    * top 60 bits of the md5 of its k space-joined tokens, as BIGINT; empty
+    * under k tokens. THE one gram hash of `jaccardJoin` and
+    * [[gramPositions]], which the SQL oracles replay with the same `md5`. */
+  private def gramHashes(k: Int): Column =
+    // the outer one-element transform binds the tokens once per doc: the
+    // per-gram lambda reads that variable instead of splitting again
+    element_at(transform(array(tokens(col("text"))), ts =>
+      when(size(ts) >= k, transform(sequence(lit(1), size(ts) - (k - 1)), i =>
+          conv(substring(md5(concat_ws(" ", slice(ts, i, lit(k)))), 1, 15), 16, 10)
+            .cast("bigint")))
+        .otherwise(array().cast("array<bigint>"))), 1)
+
+  /** Positional token k-grams as (doc_id, pos, h), pos 1-based, h from
+    * [[gramHashes]]; docs shorter than k tokens emit nothing. */
   private def gramPositions(docs: DataFrame, k: Int): DataFrame =
-    docs
-      .select(col("doc_id"),
-        expr("filter(split(text, ' '), t -> t <> '')").as("ts"))
-      .select(col("doc_id"), posexplode(expr(
-        s"CASE WHEN size(ts) >= $k THEN transform(sequence(1, size(ts) - ${k - 1}), " +
-        s"i -> concat_ws(' ', slice(ts, i, $k))) ELSE array() END")))
-      .toDF("doc_id", "pos0", "gram")
-      .select(col("doc_id"), (col("pos0") + 1).cast("long").as("pos"),
-        expr("CAST(conv(substring(md5(gram), 1, 15), 16, 10) AS BIGINT)").as("h"))
+    docs.select(col("doc_id"), posexplode(gramHashes(k)))
+      .select(col("doc_id"), (col("pos") + 1).cast("long").as("pos"), col("col").as("h"))
 
   /** Gaps-and-islands merge of flagged k-gram start positions into
     * maximal covered token intervals: two k-windows at starts p1 < p2

@@ -6,18 +6,18 @@ import org.apache.spark.sql.types._
 import org.apache.spark.sql.streaming.Trigger
 
 import graft.io.{GeoTables, ParquetFooters}
-import graft.ops.{PipPlan, SpatialJoin}
+import graft.ops.SpatialJoin
 
 /** Structured-Streaming ingest of the interleaved docs table (SURVEY.md
   * §2.11 — the reference has only chunked-batch incrementality; we expose
   * the same pipeline as an incremental stream).
   *
-  * Shape: `readStream.parquet(docsDir)` → explode spans → PIP join against
-  * a broadcast polygon side → per-batch zonal counts folded into a result
-  * sink via foreachBatch (the `MultiprocConfig(outfile=...)` analog:
-  * tiles/batches land as they complete). `Trigger.AvailableNow` drains the
-  * backlog and stops — the resumable-batch mode a 10^12-doc backfill wants;
-  * checkpointLocation gives exactly-once across restarts.
+  * Shape: `readStream.parquet(docsDir)` → explode spans → zonal aggregate
+  * per polygon ([[SpatialJoin.zonalAgg]]) → per-batch zonal counts folded
+  * into a result sink via foreachBatch (the `MultiprocConfig(outfile=...)`
+  * analog: tiles/batches land as they complete). `Trigger.AvailableNow`
+  * drains the backlog and stops — the resumable-batch mode a 10^12-doc
+  * backfill wants; checkpointLocation gives exactly-once across restarts.
   */
 object DocsStream {
 
@@ -27,10 +27,10 @@ object DocsStream {
       StructField("kind", StringType), StructField("text", StringType),
       StructField("media_ref", StringType), StructField("offset", IntegerType)))))))
 
-  /** Stream docs parquet from `docsDir`, PIP-join points against `polys`
-    * (small side, broadcast), write per-batch zonal partials to a DURABLE
-    * batchId-keyed parquet sink under `sinkDir` and register the
-    * roll-up view `sinkTable`.
+  /** Stream docs parquet from `docsDir`, sum each batch's zonal aggregate
+    * over `polys` ([[SpatialJoin.zonalAgg]]) per `zone_id`, write these
+    * per-batch partials to a DURABLE batchId-keyed parquet sink under
+    * `sinkDir` and register the roll-up view `sinkTable`.
     *
     * Exactly-once: foreachBatch is at-least-once on retry, so the sink is
     * idempotent per batch — each batch (over)writes its OWN partition
@@ -48,10 +48,9 @@ object DocsStream {
       .trigger(Trigger.AvailableNow())
       .option("checkpointLocation", checkpointDir)
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val joined = SpatialJoin.pip(batch, polys, GeoTables.JoinLevel,
-          PipPlan.BroadcastPolys)
-        joined.groupBy(col("zone_id"))
-          .agg(count(lit(1)).as("n_pts"), sum(col("value")).as("sum_val"))
+        SpatialJoin.zonalAgg(batch, polys, GeoTables.JoinLevel, Nil, col("value"))
+          .groupBy(col("zone_id"))
+          .agg(sum(col("n_pts")).as("n_pts"), sum(col("sum_val")).as("sum_val"))
           .withColumn("batch_id", lit(batchId))
           .write
           .partitionBy("batch_id")

@@ -41,7 +41,7 @@ class GeoFunctionsSpec extends SparkSpec {
     assert(r.getSeq[Double](3) == Seq(10.0, -5.0, 14.0, -3.0))
   }
 
-  test("segmentize/interpolate/reverse/normalize/representative point") {
+  test("segmentize/interpolate/reverse/representative point") {
     import spark.implicits._
     val line = Seq("LINESTRING(0 0,10 0)").toDF("wkt")
     val r = one(line.select(
@@ -55,7 +55,7 @@ class GeoFunctionsSpec extends SparkSpec {
     assert(rp(0) > 0 && rp(0) < 4 && rp(1) > 0 && rp(1) < 2)
   }
 
-  test("delaunay/voronoi/min rectangle/bounding circle on a point set") {
+  test("delaunay/min rectangle/bounding circle on a point set") {
     import spark.implicits._
     val mp = Seq("MULTIPOINT((0 0),(4 0),(0 3),(4 3),(2 1))").toDF("wkt")
     val r = one(mp.select(

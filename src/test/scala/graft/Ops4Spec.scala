@@ -24,6 +24,11 @@ class Ops4Spec extends SparkSpec {
     // the sink is read back with its footer schema, equal to the inferred one
     assert(spark.read.schema(graft.io.ParquetFooters.schema(spark, Seq(s"$tmp/sink")))
       .parquet(s"$tmp/sink").schema == spark.read.parquet(s"$tmp/sink").schema)
+    // a batch above the broadcast threshold takes the zonal aggregate's
+    // hash-join fallback: the same rows
+    withBroadcastThreshold("-1")(graft.streaming.DocsStream.runAvailableNow(spark, docsDir,
+      polys, s"$tmp/ck-nobc", "stream_zonal_nobc", s"$tmp/sink-nobc"))
+    assert(rowSet(spark.table("stream_zonal_nobc")) == rowSet(batch))
   }
 
   test("adaptive salted PIP equals plain PIP on a Zipfian distribution") {
@@ -44,7 +49,7 @@ class Ops4Spec extends SparkSpec {
     // cover)
     val expected = bboxPairs(pts, zones)
     assert(expected.nonEmpty)
-    forPipInputs(Seq(PipPlan.PointBuild, PipPlan.BroadcastPolys, PipPlan.Salted(4),
+    forPipInputs(Seq(PipPlan.PointBuild, PipPlan.Salted(4),
                      PipPlan.Adaptive(1000L))) { (plan, thr) =>
       val got = SpatialJoin.pip(pts, zones.select(col("zone_id"), col("wkt")),
         GeoTables.JoinLevel, plan)

@@ -364,5 +364,14 @@ class Ops6Spec extends SparkSpec {
     assert(TableCommit.read(spark, dir).collect().map(_.getInt(0)).toSet === Set(3, 4))
     assert(TableCommit.expireSnapshots(dir, keep = 1).length === 2) // v1, v2's dirs; not the stray
     assert(TableCommit.read(spark, dir).collect().map(_.getInt(0)).toSet === Set(3, 4))
+    // expire reaps the temp files of taken versions (<= 4, a crashed
+    // writer's); the next version's may be in flight, and a name that does
+    // not parse is not a temp file's
+    val stale = Seq(2, 4).map(v => s"_tmp-v$v-${java.util.UUID.randomUUID}.txt")
+    val inFlight = s"_tmp-v5-${java.util.UUID.randomUUID}.txt"
+    (stale :+ inFlight).foreach(n => Files.writeString(snaps.resolve(n), s"$dir/data/nowhere"))
+    assert(TableCommit.expireSnapshots(dir, keep = 1).isEmpty)
+    assert(names() === Set("v000004.txt", "_tmp4242.txt", inFlight))
+    assert(TableCommit.read(spark, dir).collect().map(_.getInt(0)).toSet === Set(3, 4))
   }
 }

@@ -22,7 +22,7 @@ class PlanSpec extends SparkSpec with AdaptiveSparkPlanHelper {
   test("PIP rect branch prunes wkt and uses a hash join keyed on cell") {
     val pts = GeoTables.points(spark, sf001)
     val z = GeoTables.zones(spark, sf001).select(col("zone_id"), col("wkt"))
-    forPipInputs(Seq(PipPlan.PointBuild, PipPlan.BroadcastPolys, PipPlan.Salted(4),
+    forPipInputs(Seq(PipPlan.PointBuild, PipPlan.Salted(4),
                      PipPlan.Adaptive(2000L))) { (pipPlan, thr) =>
       val input = s"$pipPlan, threshold $thr"
       val agg = SpatialJoin.pip(pts, z, GeoTables.JoinLevel, pipPlan)

@@ -8,6 +8,15 @@ class QueriesSpec extends SparkSpec {
   test("entry (flagship) returns rows") {
     val df = SparkEntry.entry(spark)
     assert(df.count() > 0)
+    // the rows of a PIP join grouped per polygon doc
+    import graft.io.GeoTables
+    import graft.ops.SpatialJoin
+    val spans = GeoTables.docs(spark, sf001).select(col("doc_id"), explode(col("spans")).as("s"))
+    val expected = SpatialJoin.pip(GeoTables.pointSpans(spans, col("doc_id")),
+        GeoTables.polySpans(spans, col("doc_id")), GeoTables.JoinLevel)
+      .groupBy(col("poly_doc"))
+      .agg(count(lit(1)).as("n_pts"), round(sum(col("value")), 3).as("sum_val"))
+    assert(rowSet(df) == rowSet(expected))
   }
 
   test("every query runs at sf0.001 and every oracle key exists") {
@@ -65,7 +74,7 @@ class QueriesSpec extends SparkSpec {
     val zones = GeoTables.zones(spark, sf001)
     val expected = bboxPairs(pts, zones)
     assert(expected.nonEmpty)
-    forPipInputs(Seq(PipPlan.PointBuild, PipPlan.BroadcastPolys, PipPlan.Salted(4),
+    forPipInputs(Seq(PipPlan.PointBuild, PipPlan.Salted(4),
                      PipPlan.Adaptive(1000L))) { (plan, thr) =>
       val got = SpatialJoin.pip(pts, zones.select(col("zone_id"), col("wkt")),
         GeoTables.JoinLevel, plan)
