@@ -6,7 +6,7 @@ import org.apache.spark.sql.functions._
 /** Distributed Lloyd's k-means over an embedding table — the classic
   * Spark iteration shape: centroids are tiny driver state (k·dim
   * doubles, bounded by the MODEL size, never by the data), assignment is
-  * a map-side argmin against broadcast centroid literals, and the update
+  * a map-side argmin UDF over the driver's centroid array, and the update
   * is one (cid, dim)-keyed aggregation per round. Compare `Similarity`'s
   * IVF trainer, which deliberately runs on a bounded SAMPLE as a coarse
   * quantizer: this one assigns EVERY corpus vector each round.
@@ -65,14 +65,14 @@ object Clustering {
 
   /** Run `iters` Lloyd rounds with k clusters; returns the final
     * assignment (vec_id, cid, dist) with dist the rounded squared
-    * euclidean distance to the winning centroid. The assignment builds
-    * one codegen'd struct column per centroid, so k is expected in the
-    * tens-to-hundreds (document clustering); for thousands of cells use
-    * the IVF coarse quantizer in `Similarity`, whose assignment is a
-    * broadcast-array scan. */
+    * euclidean distance to the winning centroid. The assignment is one
+    * UDF that scans all k centroids per vector, and every round collects
+    * k·dim means to the driver, so k is expected in the tens-to-hundreds
+    * (document clustering); for thousands of cells use the IVF coarse
+    * quantizer in `Similarity`, which trains on a bounded sample. */
   def kmeansAssign(corpus: DataFrame, k: Int, iters: Int): DataFrame = {
     require(k > 0 && iters > 0, s"k=$k iters=$iters must be positive")
-    require(k <= 512, s"k=$k: expression-per-centroid assignment is for small k; use Similarity.ivfTopK's quantizer beyond that")
+    require(k <= 512, s"k=$k: the per-vector UDF scan of every centroid is for small k; use Similarity.ivfTopK's quantizer beyond that")
     var cents: Array[Array[Double]] = corpus.orderBy(col("vec_id")).limit(k)
       .select(col("embedding")).collect()
       .map(_.getSeq[Float](0).toArray.map(_.toDouble))

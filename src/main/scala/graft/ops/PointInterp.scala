@@ -104,7 +104,7 @@ object PointInterp {
       case "nearest" => 1; case "bilinear" => 4; case "cubic" => 16
       case "quintic" => 36
     }
-    inGrid.join(RasterOps.pixelSideFor(tiles, width, height), Seq("si", "sj"), "left")
+    inGrid.join(RasterOps.pixelSide(tiles, width, height), Seq("si", "sj"), "left")
       .groupBy(col("pid"))
       .agg(sum(col("w") * col("v")).as("wsum"),
            count(col("v")).as("n_ok"), count(lit(1)).as("n_exp"))

@@ -331,18 +331,12 @@ object RasterOps {
     cells(tiles).toDF("si", "sj", "v")
 
   /** Broadcast the per-pixel relation when the raster is small enough
-    * (cells ≤ spark.graft.raster.broadcastCells, default 2^20 ≈ 34 MB of
-    * build rows): the point side then never shuffles. Larger rasters fall
-    * back to the planner's shuffle join — the right shape when the raster
-    * side is itself cluster-scale. */
-  private[ops] def pixelSideFor(tiles: Dataset[RasterTile], width: Int, height: Int): DataFrame =
-    pixelSide(tiles, width, height)
-
-  private def pixelSide(tiles: Dataset[RasterTile], width: Int, height: Int): DataFrame = {
+    * (cells ≤ 2^20 ≈ 34 MB of build rows): the point side then never
+    * shuffles. Larger rasters fall back to the planner's shuffle join —
+    * the right shape when the raster side is itself cluster-scale. */
+  private[ops] def pixelSide(tiles: Dataset[RasterTile], width: Int, height: Int): DataFrame = {
     val rel = pixelRows(tiles)
-    val thr = tiles.sparkSession.conf
-      .getOption("spark.graft.raster.broadcastCells").map(_.toLong).getOrElse(1L << 20)
-    if (width.toLong * height <= thr) broadcast(rel) else rel
+    if (width.toLong * height <= (1L << 20)) broadcast(rel) else rel
   }
 
   /** Shared window-pixel plan: each point expands to its (2r+1)² window

@@ -12,7 +12,8 @@ import graft.geo.SplitMix64
   * streamed; dot products in double via zip_with/aggregate (codegen, no
   * UDF). Scale path: BANDED signed-random-projection signatures — a
   * signature of `bands × rowsPerBand` sign bits, candidates share ≥1 exact
-  * band value. `rowsPerBand` controls bucket count per band
+  * band value (`TextOps.bucketPairs`, the bucket join MinHash and SimHash
+  * use too, here with no hot-bucket cap). `rowsPerBand` controls bucket count per band
   * (2^rowsPerBand — size it ≈ log2(corpus) so expected bucket size stays
   * O(n/2^r)); `bands` buys recall. The round-1 single-table 8-bit bucket
   * (256 buckets total) was a demo setting, not an index — banding is what
@@ -190,7 +191,7 @@ object Similarity {
                        rowsPerBand: Int, seed: Long): DataFrame = {
     val bUdf = udf((emb: Seq[Float]) =>
       srpBands(emb.toArray, bands, rowsPerBand, seed))
-    df.select(col(idCol), posexplode(bUdf(col("embedding"))).as(Seq("band", "bval")))
+    df.select(col(idCol), posexplode(bUdf(col("embedding"))).as(Seq("band", "bkey")))
   }
 
   /** LSH-banded ANN top-k: candidates share ≥1 band, then exact cosine on
@@ -205,9 +206,7 @@ object Similarity {
     val qb = bandedDf(queries.select(col("vec_id").as("qid"), col("embedding")),
       "qid", bands, rowsPerBand, seed)
     // id pairs only through the distinct — no embedding payload
-    val candIds = cb.join(qb, Seq("band", "bval"))
-      .where(col("vec_id") =!= col("qid"))
-      .select(col("qid"), col("vec_id")).distinct()
+    val candIds = TextOps.bucketPairs(cb, qb, col("vec_id") =!= col("qid"))
     rescoreTopK(candIds
       .join(qSide(queries), Seq("qid"))
       .join(cSide(corpus), Seq("vec_id")), k)
@@ -336,11 +335,7 @@ object Similarity {
                      rowsPerBand: Int = 16, bands: Int = 16,
                      seed: Long = 0x5eed0000L): DataFrame = {
     val b = bandedDf(corpus, "vec_id", bands, rowsPerBand, seed)
-    val l = b.select(col("vec_id").as("qid"), col("band"), col("bval"))
-    val candIds = b.join(l, Seq("band", "bval"))
-      .where(col("vec_id") < col("qid"))
-      .select(col("qid"), col("vec_id")).distinct()
-    candIds
+    TextOps.bucketPairs(b, b.toDF("qid", "band", "bkey"), col("vec_id") < col("qid"))
       .join(qSide(corpus), Seq("qid"))
       .join(cSide(corpus), Seq("vec_id"))
       .withColumn("cosine", cosineCol)

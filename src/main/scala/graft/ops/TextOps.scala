@@ -57,9 +57,7 @@ object TextOps {
 
   /** Exact dedup: content-hash groups, keeper = min doc_id
     * (hash-groupBy; shuffle keyed on digest — uniform by construction). */
-  def exactDedup(docs: DataFrame): DataFrame =
-    docs.groupBy(md5(col("text").cast("binary")).as("content_hash"))
-      .agg(count(lit(1)).as("n_docs"), min(col("doc_id")).as("keeper_id"))
+  def exactDedup(docs: DataFrame): DataFrame = hashDedup(docs, col("text"))
 
   /** Exact dedup after CANONICAL-FORM normalization (CCNet/RefinedWeb
     * practice: near-identical docs differing only in case, punctuation,
@@ -67,12 +65,15 @@ object TextOps {
     * collapse runs of spaces → trim, then the same md5 groupBy as
     * `exactDedup`. Pure codegen (two regexp_replace + md5), one uniform
     * hash shuffle — the same 100-TB shape as exact dedup. */
-  def normDedup(docs: DataFrame): DataFrame = {
-    val canon = trim(regexp_replace(
-      regexp_replace(lower(col("text")), "[^a-z0-9 ]", ""), " +", " "))
-    docs.groupBy(md5(canon.cast("binary")).as("content_hash"))
+  def normDedup(docs: DataFrame): DataFrame =
+    hashDedup(docs, trim(regexp_replace(
+      regexp_replace(lower(col("text")), "[^a-z0-9 ]", ""), " +", " ")))
+
+  /** The content-hash grouping of both exact dedups: per md5 of `text`,
+    * the doc count and the min doc_id as keeper. */
+  private def hashDedup(docs: DataFrame, text: Column): DataFrame =
+    docs.groupBy(md5(text.cast("binary")).as("content_hash"))
       .agg(count(lit(1)).as("n_docs"), min(col("doc_id")).as("keeper_id"))
-  }
 
   // ---- MinHash + LSH near-dup ----------------------------------------
 
@@ -107,34 +108,52 @@ object TextOps {
     sig
   }
 
-  /** LSH candidate pairs: band the signature, bucket-join on band hash,
-    * emit doc pairs sharing ≥1 band. Self-join is on (band, bandHash) —
-    * an equi shuffle join that scales.
-    *
-    * `maxBucket` caps the self-join blowup on hot buckets: one viral
-    * boilerplate text at web scale puts millions of docs in one bucket ⇒
-    * O(m²) pairs from a single reducer. Buckets above the cap are dropped
-    * from THIS band only — a doc pair colliding in an over-full band
-    * almost surely collides in another (the standard doc-frequency filter
-    * trade; exact dedup upstream removes identical texts anyway). */
-  def minhashPairs(docs: DataFrame, k: Int = 3, numPerm: Int = 32, bands: Int = 8,
-                   maxBucket: Int = 10000): DataFrame = {
-    val rowsPerBand = numPerm / bands
-    val sigUdf = udf((t: String) => minhashSig(t, k, numPerm))
-    val sigs = docs.select(col("doc_id"), sigUdf(col("text")).as("sig"))
-    val banded = sigs.select(col("doc_id"), posexplode(
-      expr(s"transform(sequence(0, ${bands - 1}), b -> " +
-           s"xxhash64(concat_ws(',', slice(sig, b*$rowsPerBand + 1, $rowsPerBand)), b))")))
-      .toDF("doc_id", "band", "bhash")
-    val capped = banded
-      .withColumn("bsz", count(lit(1)).over(
-        org.apache.spark.sql.expressions.Window.partitionBy(col("band"), col("bhash"))))
+  /** The banded-LSH bucket step (Rajaraman & Ullman, Mining of Massive
+    * Datasets ch. 3) behind every banded candidate generator — MinHash,
+    * SimHash and SRP: join two `(id…, band, bkey)` frames on the bucket
+    * (band, bkey), keep the rows passing `keep`, drop the bucket columns
+    * and return the distinct rows. An equi shuffle join that scales; each
+    * caller brings its own signature, pair predicate and verify step. */
+  private[ops] def bucketPairs(a: DataFrame, b: DataFrame, keep: Column): DataFrame =
+    a.join(b, Seq("band", "bkey")).where(keep).drop("band", "bkey").distinct()
+
+  /** Hot-bucket cap on a `(id…, band, bkey)` frame: drops every bucket
+    * holding more than `maxBucket` rows. One viral boilerplate text at web
+    * scale puts millions of docs in one bucket ⇒ O(m²) pairs from a single
+    * reducer. The bucket goes from THIS band only — a doc pair colliding in
+    * an over-full band almost surely collides in another (the standard
+    * doc-frequency filter trade; exact dedup upstream removes identical
+    * texts anyway). */
+  private def capped(bands: DataFrame, maxBucket: Int): DataFrame =
+    bands.withColumn("bsz", count(lit(1)).over(
+        org.apache.spark.sql.expressions.Window.partitionBy(col("band"), col("bkey"))))
       .where(col("bsz") <= maxBucket)
       .drop("bsz")
-    val l = capped.toDF("a_id", "band", "bhash")
-    val r = capped.toDF("b_id", "band", "bhash")
-    l.join(r, Seq("band", "bhash")).where(col("a_id") < col("b_id"))
-      .select(col("a_id"), col("b_id")).distinct()
+
+  /** MinHash bands as (idN, band, bkey): the `numPerm`-slot signature is
+    * cut into `bands` bands of numPerm/bands slots, and bkey is the
+    * xxhash64 of a band's slots, seeded with the band index. */
+  private def minhashBands(docs: DataFrame, idN: String, k: Int, numPerm: Int,
+                           bands: Int): DataFrame = {
+    require(numPerm % bands == 0,
+      s"bands=$bands must evenly divide numPerm=$numPerm (trailing signature " +
+      "permutations would silently be ignored)")
+    val rowsPerBand = numPerm / bands
+    val sigUdf = udf((t: String) => minhashSig(t, k, numPerm))
+    docs.select(col("doc_id").as(idN), sigUdf(col("text")).as("sig"))
+      .select(col(idN), posexplode(
+        expr(s"transform(sequence(0, ${bands - 1}), b -> " +
+             s"xxhash64(concat_ws(',', slice(sig, b*$rowsPerBand + 1, $rowsPerBand)), b))")))
+      .toDF(idN, "band", "bkey")
+  }
+
+  /** LSH candidate pairs: doc pairs sharing ≥1 MinHash band — a
+    * [[capped]] self-join of [[minhashBands]] through [[bucketPairs]];
+    * `maxBucket` is the hot-bucket cap. */
+  def minhashPairs(docs: DataFrame, k: Int = 3, numPerm: Int = 32, bands: Int = 8,
+                   maxBucket: Int = 10000): DataFrame = {
+    val banded = capped(minhashBands(docs, "a_id", k, numPerm, bands), maxBucket)
+    bucketPairs(banded, banded.toDF("b_id", "band", "bkey"), col("a_id") < col("b_id"))
   }
 
   /** Exact Jaccard similarity on word k-shingles for candidate pairs. */
@@ -180,27 +199,10 @@ object TextOps {
                       numPerm: Int = 32, bands: Int = 8,
                       threshold: Double = 0.5,
                       maxBucket: Int = 10000): DataFrame = {
-    require(numPerm % bands == 0,
-      s"bands=$bands must evenly divide numPerm=$numPerm (trailing signature " +
-      "permutations would silently be ignored)")
-    val rowsPerBand = numPerm / bands
-    val sigUdf = udf((t: String) => minhashSig(t, k, numPerm))
-    def banded(docs: DataFrame, idN: String) =
-      docs.select(col("doc_id").as(idN), sigUdf(col("text")).as("sig"))
-        .select(col(idN), posexplode(
-          expr(s"transform(sequence(0, ${bands - 1}), b -> " +
-               s"xxhash64(concat_ws(',', slice(sig, b*$rowsPerBand + 1, $rowsPerBand)), b))")))
-        .toDF(idN, "band", "bhash")
     // cap hot buckets on the CORPUS side only — a viral boilerplate text
     // lives there; the probe slice is the small side by construction
-    val cb = banded(corpus, "match_id")
-      .withColumn("bsz", count(lit(1)).over(
-        org.apache.spark.sql.expressions.Window.partitionBy(col("band"), col("bhash"))))
-      .where(col("bsz") <= maxBucket)
-      .drop("bsz")
-    val cand = banded(probe, "probe_id")
-      .join(cb, Seq("band", "bhash"))
-      .select(col("probe_id"), col("match_id")).distinct()
+    val cand = bucketPairs(minhashBands(probe, "probe_id", k, numPerm, bands),
+      capped(minhashBands(corpus, "match_id", k, numPerm, bands), maxBucket), lit(true))
     val jacUdf = udf((a: String, b: String) => jaccard(a, b, k))
     val best = cand
       .join(probe.select(col("doc_id").as("probe_id"), col("text").as("p_text")), "probe_id")
@@ -253,28 +255,23 @@ object TextOps {
   /** SimHash near-dup pairs within Hamming distance ≤ maxDist: the 4-table
     * bit-chunk bucketing join. Split the 60-bit fingerprint into
     * `maxDist+1` chunks — by pigeonhole, any pair within maxDist shares at
-    * least one chunk EXACTLY, so candidates come from equi-joins on
-    * (chunk_index, chunk_value) and only candidates pay the popcount
-    * verify. Scales like MinHash banding: n²/2^chunkBits expected
+    * least one chunk EXACTLY, so candidates come from the [[bucketPairs]]
+    * join on (chunk index, chunk value) and only candidates pay the
+    * popcount verify. No hot-bucket cap. Scales like MinHash banding: n²/2^chunkBits expected
     * candidates per chunk table. */
   def simhashPairs(docs: DataFrame, maxDist: Int = 3): DataFrame = {
     val chunks = maxDist + 1
     val bits = SimhashBits / chunks // chunk c = bits [c*bits, (c+1)*bits)
-    val sh = udf(simhash _)
-    val fps = docs.select(col("doc_id"), sh(col("text")).as("simhash"))
-    val chunked = fps.select(col("doc_id"), col("simhash"),
+    // band = chunk index, bkey = the unsigned chunk value; the last chunk
+    // keeps the leftover high bits. The fingerprints ride along as payload
+    val chunked = simhashDf(docs).select(col("doc_id"), col("simhash"),
       posexplode(expr(
         s"transform(sequence(0, ${chunks - 1}), c -> " +
-        // unsigned chunk extract; last chunk keeps the leftover high bits
         s"CASE WHEN c = ${chunks - 1} THEN shiftrightunsigned(simhash, c*$bits) " +
         s"ELSE shiftrightunsigned(simhash, c*$bits) & ${(1L << bits) - 1} END)"))
-        .as(Seq("chunk", "cval")))
-    val l = chunked.select(col("doc_id").as("a_id"), col("simhash").as("a_sh"),
-      col("chunk"), col("cval"))
-    val r = chunked.select(col("doc_id").as("b_id"), col("simhash").as("b_sh"),
-      col("chunk"), col("cval"))
-    l.join(r, Seq("chunk", "cval")).where(col("a_id") < col("b_id"))
-      .select(col("a_id"), col("b_id"), col("a_sh"), col("b_sh")).distinct()
+        .as(Seq("band", "bkey")))
+    bucketPairs(chunked.toDF("a_id", "a_sh", "band", "bkey"),
+        chunked.toDF("b_id", "b_sh", "band", "bkey"), col("a_id") < col("b_id"))
       .withColumn("hamming", expr("bit_count(a_sh ^ b_sh)"))
       .where(col("hamming") <= maxDist)
       .select(col("a_id"), col("b_id"), col("hamming"))

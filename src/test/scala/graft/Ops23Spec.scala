@@ -116,6 +116,28 @@ class Ops23Spec extends SparkSpec {
     assert(a == b && a.nonEmpty)
   }
 
+  test("minhashPairs rejects bands that do not divide numPerm") {
+    import graft.ops.TextOps
+    val docs = Seq((1L, "alpha beta gamma delta")).toDF("doc_id", "text")
+    intercept[IllegalArgumentException] {
+      TextOps.minhashPairs(docs, numPerm = 32, bands = 6)
+    }
+  }
+
+  test("MinHash hot-bucket cap drops over-full buckets, on the corpus side only for nearDupsAgainst") {
+    import graft.ops.TextOps
+    val t = "alpha beta gamma delta epsilon zeta eta theta"
+    val corpus = Seq((10L, t), (11L, t)).toDF("doc_id", "text")
+    val probe = Seq((5L, t)).toDF("doc_id", "text")
+    // the two corpus docs share every band: each bucket holds 2 docs
+    assert(TextOps.minhashPairs(corpus, maxBucket = 1).count() == 0)
+    assert(rowSet(TextOps.minhashPairs(corpus)) == Set(Seq(10L, 11L)))
+    assert(TextOps.nearDupsAgainst(corpus, probe, maxBucket = 1).count() == 0)
+    // with the probe counted a bucket would hold 3 > 2 docs and be dropped
+    val r = TextOps.nearDupsAgainst(corpus, probe, maxBucket = 2).collect()
+    assert(r.length == 1 && r(0).getLong(0) == 5L && r(0).getLong(1) == 10L)
+  }
+
   test("normDedup: case/punctuation/whitespace variants hash together, exactDedup keeps them apart") {
     import graft.ops.TextOps
     val docs = Seq(
