@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 
 import graft.functions.GeoFunctions
 import graft.io.{GeoTables, Layout, RasterGen}
+import graft.model.GridSpec
 import graft.ops._
 
 /** Driver contract (SURVEY.md §7). Every operator ships as a `queries`
@@ -257,9 +258,7 @@ object SparkEntry {
 
     // §2.8/§2.5 zonal stats raster×vector (BASELINE flagship kernel)
     "q_raster_zonal" -> ((s, dir) =>
-      RasterOps.zonalBox(RasterGen.tiles(s), GeoTables.zones(s, dir),
-          rasterYmax = 100.0, tileSpanX = 12.5, tileSpanY = 12.5,
-          tilesX = RasterGen.TilesX, tilesY = RasterGen.TilesY)
+      RasterOps.zonalBox(RasterGen.tiles(s), GeoTables.zones(s, dir), RasterGen.Grid)
         .select(col("zone_id"), col("n_cells"), col("sum_val"),
           round(col("sum_val") / col("n_cells"), 3).as("avg_val"))),
 
@@ -286,9 +285,8 @@ object SparkEntry {
     // §2.10 reproject (nearest, 2× coarser grid) — the shuffle op; full
     // DuckDB oracle via the integer-exact src-index mapping
     "q_reproject" -> ((s, _) => {
-      val srcGrid = Reproject.GridSpec(0.25, 0.25, 0, 100, 400, 400, 50, 50, "EPSG:32645")
-      val dst = Reproject.GridSpec(0.5, 0.5, 0, 100, 200, 200, 50, 50, "EPSG:32645")
-      RasterOps.cells(Reproject.resample(RasterGen.tiles(s), srcGrid, dst, "nearest"))
+      val dst = GridSpec(0.5, 0.5, 0, 100, 200, 200, 50, 50, "EPSG:32645")
+      RasterOps.cells(Reproject.resample(RasterGen.tiles(s), RasterGen.Grid, dst, "nearest"))
     }),
 
     // §2.10 reproject `average` (rasterio Resampling.average, the
@@ -296,9 +294,8 @@ object SparkEntry {
     // its 2×2 valid src pixels — integer sums / counts ≤4, so both engines
     // produce bit-identical doubles (no rounding needed)
     "q_reproject_avg" -> ((s, _) => {
-      val srcGrid = Reproject.GridSpec(0.25, 0.25, 0, 100, 400, 400, 50, 50, "EPSG:32645")
-      val dst = Reproject.GridSpec(0.5, 0.5, 0, 100, 200, 200, 50, 50, "EPSG:32645")
-      RasterOps.cells(Reproject.resample(RasterGen.tiles(s), srcGrid, dst, "average"))
+      val dst = GridSpec(0.5, 0.5, 0, 100, 200, 200, 50, 50, "EPSG:32645")
+      RasterOps.cells(Reproject.resample(RasterGen.tiles(s), RasterGen.Grid, dst, "average"))
     }),
 
     // §2.10 reproject `cubic_spline` (rasterio Resampling.cubic_spline, the
@@ -309,9 +306,8 @@ object SparkEntry {
     // m/2304 with integer m, so scaling by 2304 and rounding makes the
     // compare exact despite different summation orders.
     "q_reproject_spline" -> ((s, _) => {
-      val srcGrid = Reproject.GridSpec(0.25, 0.25, 0, 100, 400, 400, 50, 50, "EPSG:32645")
-      val dst = Reproject.GridSpec(0.5, 0.5, 0, 100, 200, 200, 50, 50, "EPSG:32645")
-      RasterOps.cells(Reproject.resample(RasterGen.tiles(s), srcGrid, dst, "cubic_spline"))
+      val dst = GridSpec(0.5, 0.5, 0, 100, 200, 200, 50, 50, "EPSG:32645")
+      RasterOps.cells(Reproject.resample(RasterGen.tiles(s), RasterGen.Grid, dst, "cubic_spline"))
         .select(col("i"), col("j"),
           round(col("val") * 2304).cast("long").as("sval"))
     }),
@@ -320,9 +316,8 @@ object SparkEntry {
     // integer kernel at the nearest src pixel, renormalized over valid
     // contributors — integer num/den ⇒ bit-exact across engines, no rounding
     "q_reproject_gauss" -> ((s, _) => {
-      val srcGrid = Reproject.GridSpec(0.25, 0.25, 0, 100, 400, 400, 50, 50, "EPSG:32645")
-      val dst = Reproject.GridSpec(0.5, 0.5, 0, 100, 200, 200, 50, 50, "EPSG:32645")
-      RasterOps.cells(Reproject.resample(RasterGen.tiles(s), srcGrid, dst, "gauss"))
+      val dst = GridSpec(0.5, 0.5, 0, 100, 200, 200, 50, 50, "EPSG:32645")
+      RasterOps.cells(Reproject.resample(RasterGen.tiles(s), RasterGen.Grid, dst, "gauss"))
     }),
 
     // §1.4 interleaved docs codec: per-row span-sequence digest

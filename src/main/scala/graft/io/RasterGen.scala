@@ -1,8 +1,7 @@
 package graft.io
 
 import org.apache.spark.sql.{Dataset, SparkSession}
-import graft.geo.{Affine, CellIndex}
-import graft.model.{RasterTile, TileCodec}
+import graft.model.{GridSpec, RasterTile, TileCodec}
 
 /** Deterministic synthetic raster — the engine's `synth_dem` analog
   * (FIXTURES.md §3), sized to be fully reproducible in the DuckDB oracle
@@ -20,9 +19,7 @@ object RasterGen {
   val TileH = 50; val TileW = 50
   val TilesY: Int = H / TileH; val TilesX: Int = W / TileW
   val Nodata = -99999.0
-  val Transform: Affine = Affine.fromOrigin(0.0, 100.0, 0.25, 0.25)
-  /** Cell level whose cell size (12.5 ⊂ level 3 @16) bounds a tile. */
-  val TileCellLevel = 3
+  val Grid: GridSpec = GridSpec(0.25, 0.25, 0.0, 100.0, W, H, TileW, TileH, "EPSG:32645")
 
   @inline def value(i: Int, j: Int): Double = ((i * 7 + j * 13) % 97).toDouble
   @inline def valid(i: Int, j: Int): Boolean = (i * 31 + j * 17) % 101 != 0
@@ -44,12 +41,7 @@ object RasterGen {
       }
       di += 1
     }
-    val t = Transform.forTile(tr * TileH, tc * TileW)
-    val (cminx, cminy, _, _) = (t.xmin, t.ymax - TileH * t.yres, 0, 0)
-    RasterTile("dem", 0, tr, tc, TileW, TileH,
-      t.xres, t.yres, t.xmin, t.ymax, "EPSG:32645", Nodata, "Area", "float64",
-      TileCodec.packDoubles(data), TileCodec.packMask(m),
-      CellIndex.cellOf(cminx + 1e-9, cminy + 1e-9, TileCellLevel))
+    Grid.tile(rasterId, 0, tr, tc, Nodata, "Area", "float64", data, m)
   }
 
   def tiles(spark: SparkSession): Dataset[RasterTile] = {

@@ -21,16 +21,18 @@ object TableCommit {
   private val SnapshotName = """v(\d+)\.txt""".r
   private val TempName = """_tmp-v(\d+)-.+\.txt""".r // writeSnapshot's temp file
 
-  /** The file names in the snapshot dir; none if it does not exist. */
-  private def snapshotNames(table: String): Seq[String] = {
-    val d = Paths.get(snapDir(table))
+  /** The entry names in `dir`; none if it does not exist. */
+  private def names(dir: String): Seq[String] = {
+    val d = Paths.get(dir)
     if (!Files.exists(d)) Seq.empty
     else {
-      val names = Files.list(d)
-      try names.iterator().asScala.map(_.getFileName.toString).toList
-      finally names.close()
+      val entries = Files.list(d)
+      try entries.iterator().asScala.map(_.getFileName.toString).toList
+      finally entries.close()
     }
   }
+
+  private def snapshotNames(table: String): Seq[String] = names(snapDir(table))
 
   /** The versions whose snapshot files exist, ascending. Only `vNNNNNN.txt`
     * names count: a temp file of [[writeSnapshot]] is not a version. */
@@ -194,23 +196,29 @@ object TableCommit {
   }
 
   /** Snapshot expiry + vacuum: keep the newest `keep` snapshot files,
-    * delete older ones, then delete every data dir no surviving snapshot
-    * references (the unbounded-growth reaper — compaction and overwrite
-    * commits orphan their inputs, which otherwise live forever). Also
-    * deletes the snapshot temp files a crashed writer left for versions up
-    * to the current one (the next version's may still be in flight).
-    * Returns the deleted data dirs. Time travel to an expired version
-    * fails by design; readers mid-scan on just-expired data are the same
-    * hazard Iceberg's expire_snapshots documents — run it with a grace
-    * period in production. */
+    * delete older ones, then delete every data dir under `<table>/data`
+    * that no surviving snapshot references (the unbounded-growth reaper —
+    * compaction and overwrite commits orphan their inputs, which otherwise
+    * live forever), matched by UUID name. That includes the dir of an
+    * attempt that crashed before its snapshot file, and the dirs of
+    * snapshots an earlier expire deleted before it crashed. The dirs the
+    * next version's commit, overwrite or merge writes stay: that write may
+    * be in flight. Also deletes the snapshot temp files a crashed writer
+    * left for versions up to the current one. Returns the deleted data
+    * dirs. Time travel to an expired version fails by design; readers
+    * mid-scan on just-expired data are the same hazard Iceberg's
+    * expire_snapshots documents — run it with a grace period in
+    * production. */
   def expireSnapshots(table: String, keep: Int = 1): Seq[String] = {
     require(keep >= 1, s"keep must be >= 1, got $keep")
     // only the snapshot files that exist: an earlier expire deleted the
     // older ones
     val vs = versions(table)
     val (expired, kept) = vs.splitAt(vs.size - keep)
-    val live = kept.flatMap(v => snapshotDirs(table, v)).toSet
-    val dead = expired.flatMap(v => snapshotDirs(table, v)).distinct.filterNot(live)
+    val inFlight = Seq("", "ow", "mrg").map(dataDir(table, vs.lastOption.getOrElse(0), _))
+    val live = (kept.flatMap(v => snapshotDirs(table, v)) ++ inFlight)
+      .map(d => Paths.get(d).getFileName.toString).toSet
+    val dead = names(s"$table/data").filterNot(live).sorted.map(n => s"$table/data/$n")
     expired.foreach { v =>
       Files.deleteIfExists(Paths.get(f"${snapDir(table)}/v$v%06d.txt"))
     }

@@ -1,5 +1,8 @@
 package graft.model
 
+import org.apache.spark.sql.{Column, DataFrame, Dataset}
+import org.apache.spark.sql.functions.{col, explode, floor, greatest, least, lit, sequence}
+
 /** Core row types of the engine (SURVEY.md §1). All flat primitives +
   * binary payloads so Tungsten rows stay compact and case-class Encoders
   * apply directly.
@@ -25,6 +28,87 @@ final case class RasterTile(
     xres: Double, yres: Double, xmin: Double, ymax: Double,
     crs: String, nodata: Double, area_or_point: String, dtype: String,
     data: Array[Byte], mask: Array[Byte], cell: Long)
+
+/** The one description of a tiled north-up raster grid (the reference's
+  * `ChunkedGeoGrid`, `multiproc/chunked.py:35-249`): every raster producer
+  * derives each tile's shape, origin and cell from it, fills the tiles it
+  * has no data for, and routes envelopes to tile keys through it. Tiles
+  * are `tileW`×`tileH` pixels; those on the right and bottom edges are
+  * clipped to the grid. */
+final case class GridSpec(xres: Double, yres: Double, xmin: Double, ymax: Double,
+                          width: Int, height: Int, tileW: Int, tileH: Int,
+                          crs: String) {
+  def tilesX: Int = (width + tileW - 1) / tileW
+  def tilesY: Int = (height + tileH - 1) / tileH
+
+  def tileWidth(tc: Int): Int = math.min(tileW, width - tc * tileW)
+  def tileHeight(tr: Int): Int = math.min(tileH, height - tr * tileH)
+  def tileXmin(tc: Int): Double = xmin + tc.toLong * tileW * xres
+  def tileYmax(tr: Int): Double = ymax - tr.toLong * tileH * yres
+
+  /** The level-[[GridSpec.TileCellLevel]] cell of tile (tr, tc)'s SW
+    * corner, nudged inward so a corner on a cell edge takes the cell the
+    * tile lies in. */
+  def tileCell(tr: Int, tc: Int): Long =
+    graft.geo.CellIndex.cellOf(tileXmin(tc) + 1e-9,
+      tileYmax(tr) - tileHeight(tr) * yres + 1e-9, GridSpec.TileCellLevel)
+
+  /** The tile at (tr, tc) holding `data` with validity `valid`, both
+    * row-major over the tile's clipped `tileWidth(tc)`×`tileHeight(tr)`
+    * pixels. */
+  def tile(rasterId: String, band: Int, tr: Int, tc: Int, nodata: Double,
+           areaOrPoint: String, dtype: String,
+           data: Array[Double], valid: Array[Boolean]): RasterTile =
+    RasterTile(rasterId, band, tr, tc, tileWidth(tc), tileHeight(tr), xres, yres,
+      tileXmin(tc), tileYmax(tr), crs, nodata, areaOrPoint, dtype,
+      TileCodec.packDoubles(data), TileCodec.packMask(valid), tileCell(tr, tc))
+
+  /** Every tile key not in `have`, as an all-masked tile of each band in
+    * `bands` (raster_id, band, nodata, area_or_point, dtype): a producer
+    * returns the full grid even where it had no input. Cells hold `fill`,
+    * or the band's nodata when `fill` is None. */
+  def missingTiles(have: Dataset[(Int, Int)],
+                   bands: Dataset[(String, Int, Double, String, String)],
+                   fill: Option[Double] = None): Dataset[RasterTile] = {
+    val spark = have.sparkSession
+    import spark.implicits._
+    spark.range(tilesY.toLong * tilesX)
+      .map(id => ((id / tilesX).toInt, (id % tilesX).toInt))
+      .except(have)
+      .joinWith(bands, lit(true), "cross")
+      .map { case ((tr, tc), (rid, band, nodata, aop, dtype)) =>
+        val n = tileWidth(tc) * tileHeight(tr)
+        tile(rid, band, tr, tc, nodata, aop, dtype,
+          Array.fill(n)(fill.getOrElse(nodata)), new Array[Boolean](n))
+      }
+  }
+
+  /** `df` with one row per tile whose pixels the envelope (minx, miny,
+    * maxx, maxy), grown by `haloPixels`, overlaps, keyed by `tile_row` and
+    * `tile_col`. An envelope off the grid routes to no tile: without the
+    * lo ≤ hi guard, `sequence(9, 7)` would descend into phantom tiles. */
+  def routeToTiles(df: DataFrame, minx: Column, miny: Column, maxx: Column, maxy: Column,
+                   haloPixels: Int = 0): DataFrame = {
+    def lo(px: Column, tile: Int) =
+      greatest(floor((px - haloPixels) / tile).cast("int"), lit(0))
+    def hi(px: Column, tile: Int, tiles: Int) =
+      least(floor((px + haloPixels) / tile).cast("int"), lit(tiles - 1))
+    df.withColumn("trlo", lo((lit(ymax) - maxy) / yres, tileH))
+      .withColumn("trhi", hi((lit(ymax) - miny) / yres, tileH, tilesY))
+      .withColumn("tclo", lo((minx - lit(xmin)) / xres, tileW))
+      .withColumn("tchi", hi((maxx - lit(xmin)) / xres, tileW, tilesX))
+      .where(col("trlo") <= col("trhi") && col("tclo") <= col("tchi"))
+      .withColumn("tile_row", explode(sequence(col("trlo"), col("trhi"))))
+      .withColumn("tile_col", explode(sequence(col("tclo"), col("tchi"))))
+      .drop("trlo", "trhi", "tclo", "tchi")
+  }
+}
+
+object GridSpec {
+  /** Cell level of a tile's `cell`: a level-3 cell (12.5 units on the
+    * default domain) bounds a 50×50 tile at 0.25 resolution. */
+  val TileCellLevel = 3
+}
 
 /** Vector feature: geometry as WKT text (per BASELINE input_hint),
   * bbox + covering cells precomputed for pruning/partitioning. */

@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 import org.locationtech.jts.geom.{Coordinate, GeometryFactory}
 import org.locationtech.jts.triangulate.DelaunayTriangulationBuilder
 
-import graft.model.{RasterTile, TileCodec}
+import graft.model.{GridSpec, RasterTile}
 
 /** Irregular pointcloud → raster gridding via Delaunay triangulation — the
   * reference's `griddata`-based `_grid_pointcloud`
@@ -172,36 +172,19 @@ object Gridding {
   }
 
   /** Route each point to every tile whose halo-expanded pixel range
-    * contains it (pure column math, shared by [[delaunayGrid]] and
-    * [[globalMnnGradients]]' edge extraction). The last two tuple slots
-    * carry supplied per-point gradients (0.0 when none). */
-  private def routeToTiles(points: DataFrame, xres: Double, yres: Double,
-                           xmin: Double, ymax: Double,
-                           tilesX: Int, tilesY: Int, tileW: Int, tileH: Int,
-                           haloPixels: Int,
-                           gradientCols: Option[(String, String)])
+    * contains it (shared by [[delaunayGrid]] and [[globalMnnGradients]]'
+    * edge extraction). The last two tuple slots carry supplied per-point
+    * gradients (0.0 when none). */
+  private def routePoints(points: DataFrame, grid: GridSpec, haloPixels: Int,
+                          gradientCols: Option[(String, String)])
       : org.apache.spark.sql.Dataset[(Int, Int, Double, Double, Double, Double, Double)] = {
     val spark = points.sparkSession
     import spark.implicits._
-    // fractional pixel coords; clamped tile ranges; the lo<=hi guard
-    // drops points farther than the halo from the whole grid
-    // (sequence(9,7) would otherwise DESCEND and route them to phantom
-    // out-of-grid tiles)
-    val fi = (lit(ymax) - col("y")) / yres
-    val fj = (col("x") - lit(xmin)) / xres
     val (gxCol, gyCol) = gradientCols match {
       case Some((gx, gy)) => (col(gx).cast("double"), col(gy).cast("double"))
       case None           => (lit(0.0), lit(0.0))
     }
-    points
-      .withColumn("fi", fi).withColumn("fj", fj)
-      .withColumn("trlo", greatest(floor((col("fi") - haloPixels) / tileH).cast("int"), lit(0)))
-      .withColumn("trhi", least(floor((col("fi") + haloPixels) / tileH).cast("int"), lit(tilesY - 1)))
-      .withColumn("tclo", greatest(floor((col("fj") - haloPixels) / tileW).cast("int"), lit(0)))
-      .withColumn("tchi", least(floor((col("fj") + haloPixels) / tileW).cast("int"), lit(tilesX - 1)))
-      .where(col("trlo") <= col("trhi") && col("tclo") <= col("tchi"))
-      .withColumn("tile_row", explode(sequence(col("trlo"), col("trhi"))))
-      .withColumn("tile_col", explode(sequence(col("tclo"), col("tchi"))))
+    grid.routeToTiles(points, col("x"), col("y"), col("x"), col("y"), haloPixels)
       .select(col("tile_row"), col("tile_col"), col("x"), col("y"), col("value"),
               gxCol.as("sgx"), gyCol.as("sgy"))
       .as[(Int, Int, Double, Double, Double, Double, Double)]
@@ -240,25 +223,21 @@ object Gridding {
       "halo must cover the nodata cutoff distance (surviving cells must see their nearest point)")
     val spark = points.sparkSession
     import spark.implicits._
-    val tilesX = (width + tileW - 1) / tileW
-    val tilesY = (height + tileH - 1) / tileH
+    val grid = GridSpec(xres, yres, xmin, ymax, width, height, tileW, tileH, crs)
 
     // ephemeral: the routed postings feed BOTH the per-tile gridding
     // groupBy and the all-nodata-tile `have` distinct below — without it
     // each shuffle stage recomputes the point scan + halo explode
     // (deterministic, so reliable mode correctly recomputes instead)
     val routed = Checkpoints.ephemeral(
-      routeToTiles(points, xres, yres, xmin, ymax,
-        tilesX, tilesY, tileW, tileH, haloPixels, gradientCols))
+      routePoints(points, grid, haloPixels, gradientCols))
 
     implicit val keyEnc = Encoders.tuple(Encoders.scalaInt, Encoders.scalaInt)
     routed.groupByKey(r => (r._1, r._2)).mapGroups {
       (key: (Int, Int), it: Iterator[(Int, Int, Double, Double, Double, Double, Double)]) =>
         val (tr, tc) = key
-        val tw = math.min(tileW, width - tc * tileW)
-        val th = math.min(tileH, height - tr * tileH)
-        val x0 = xmin + tc.toLong * tileW * xres
-        val y1 = ymax - tr.toLong * tileH * yres
+        val tw = grid.tileWidth(tc); val th = grid.tileHeight(tr)
+        val x0 = grid.tileXmin(tc); val y1 = grid.tileYmax(tr)
         val ptsFull = dedupPts(it)
         val pts = ptsFull.map(t => (t._1, t._2, t._3))
 
@@ -422,28 +401,12 @@ object Gridding {
           }
         }
 
-        RasterTile("grid", 0, tr, tc, tw, th, xres, yres, x0, y1,
-          crs, nodata, "Area", "float64",
-          TileCodec.packDoubles(data), TileCodec.packMask(valid),
-          graft.geo.CellIndex.cellOf(x0 + 1e-9, y1 - th * yres + 1e-9, 3))
+        grid.tile("grid", 0, tr, tc, nodata, "Area", "float64", data, valid)
     }(Encoders.product[RasterTile]).union {
       // point-free tiles still belong to the output grid (all-nodata)
       val have = routed.toDF().select(col("tile_row"), col("tile_col"))
         .distinct().as[(Int, Int)]
-      spark.range(tilesY.toLong * tilesX)
-        .map(id => ((id / tilesX).toInt, (id % tilesX).toInt))
-        .except(have)
-        .map { case (tr, tc) =>
-          val tw = math.min(tileW, width - tc * tileW)
-          val th = math.min(tileH, height - tr * tileH)
-          val x0 = xmin + tc.toLong * tileW * xres
-          val y1 = ymax - tr.toLong * tileH * yres
-          RasterTile("grid", 0, tr, tc, tw, th, xres, yres, x0, y1,
-            crs, nodata, "Area", "float64",
-            TileCodec.packDoubles(Array.fill(tw * th)(nodata)),
-            TileCodec.packMask(new Array[Boolean](tw * th)),
-            graft.geo.CellIndex.cellOf(x0 + 1e-9, y1 - th * yres + 1e-9, 3))
-        }
+      grid.missingTiles(have, Seq(("grid", 0, nodata, "Area", "float64")).toDS())
     }
   }
 
@@ -483,10 +446,8 @@ object Gridding {
                          checkEvery: Int = 8): DataFrame = {
     val spark = points.sparkSession
     import spark.implicits._
-    val tilesX = (width + tileW - 1) / tileW
-    val tilesY = (height + tileH - 1) / tileH
-    val routed = routeToTiles(points, xres, yres, xmin, ymax,
-      tilesX, tilesY, tileW, tileH, haloPixels, None)
+    val routed = routePoints(points,
+      GridSpec(xres, yres, xmin, ymax, width, height, tileW, tileH, ""), haloPixels, None)
 
     implicit val keyEnc = Encoders.tuple(Encoders.scalaInt, Encoders.scalaInt)
     val edges = routed.groupByKey(r => (r._1, r._2)).flatMapGroups {

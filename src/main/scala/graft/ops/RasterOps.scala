@@ -1,8 +1,8 @@
 package graft.ops
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, Encoder, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.model.{RasterTile, TileCodec}
+import graft.model.{GridSpec, RasterTile, TileCodec}
 
 /** Tile-table raster operators (SURVEY.md §2.2/§2.5/§2.10).
   *
@@ -30,32 +30,40 @@ object RasterOps {
     }
   }
 
-  /** Raster⊗raster cell-wise combine: equi-join on (band, tile_row,
-    * tile_col) — the grid-equality precondition of `raster.py:259-267`
-    * becomes a co-partitioned join; masks AND together (mask propagation
-    * invariant of `raster.py:516-634`). */
-  def tileZip(a: Dataset[RasterTile], b: Dataset[RasterTile])
-             (f: (Double, Double) => Double): Dataset[RasterTile] = {
-    val spark = a.sparkSession
-    import spark.implicits._
+  /** The aligned tile pairs of two rasters on one grid, combined by `f`:
+    * the equi-join on (band, tile_row, tile_col) behind every
+    * raster⊗raster operator. A pair whose tiles differ in resolution,
+    * origin or shape fails: its cells would be read misaligned (the
+    * grid-equality precondition of `raster.py:259-267`). */
+  private[ops] def tilePairs[T: Encoder](a: Dataset[RasterTile], b: Dataset[RasterTile])
+                                        (f: (RasterTile, RasterTile) => T): Dataset[T] =
     a.joinWith(b,
         a("band") === b("band") && a("tile_row") === b("tile_row") &&
         a("tile_col") === b("tile_col"), "inner")
       .map { case (ta, tb) =>
-        require(ta.xres == tb.xres && ta.xmin == tb.xmin && ta.ymax == tb.ymax,
+        require(ta.xres == tb.xres && ta.yres == tb.yres && ta.xmin == tb.xmin &&
+          ta.ymax == tb.ymax && ta.width == tb.width && ta.height == tb.height,
           s"georeferenced grids differ at tile (${ta.tile_row},${ta.tile_col})")
-        val da = TileCodec.unpackDoubles(ta.data)
-        val db = TileCodec.unpackDoubles(tb.data)
-        val mask = TileCodec.maskAnd(ta.mask, tb.mask)
-        val out = new Array[Double](da.length)
-        var i = 0
-        while (i < da.length) {
-          out(i) = if (TileCodec.maskBit(mask, i)) f(da(i), db(i)) else ta.nodata
-          i += 1
-        }
-        ta.copy(data = TileCodec.packDoubles(out), mask = mask)
+        f(ta, tb)
       }
-  }
+
+  /** Raster⊗raster cell-wise combine: a co-partitioned [[tilePairs]]
+    * join; masks AND together (mask propagation invariant of
+    * `raster.py:516-634`). */
+  def tileZip(a: Dataset[RasterTile], b: Dataset[RasterTile])
+             (f: (Double, Double) => Double): Dataset[RasterTile] =
+    tilePairs(a, b) { (ta, tb) =>
+      val da = TileCodec.unpackDoubles(ta.data)
+      val db = TileCodec.unpackDoubles(tb.data)
+      val mask = TileCodec.maskAnd(ta.mask, tb.mask)
+      val out = new Array[Double](da.length)
+      var i = 0
+      while (i < da.length) {
+        out(i) = if (TileCodec.maskBit(mask, i)) f(da(i), db(i)) else ta.nodata
+        i += 1
+      }
+      ta.copy(data = TileCodec.packDoubles(out), mask = mask)
+    }(a.encoder)
 
   /** Global stats over valid cells: one partial row per tile, then a
     * single global combine (`stats/stats.py:36-299` minus percentiles). */
@@ -100,28 +108,25 @@ object RasterOps {
   def statsInlier(tiles: Dataset[RasterTile], inlier: Dataset[RasterTile]): DataFrame = {
     val spark = tiles.sparkSession
     import spark.implicits._
-    tiles.joinWith(inlier,
-        tiles("band") === inlier("band") && tiles("tile_row") === inlier("tile_row") &&
-        tiles("tile_col") === inlier("tile_col"), "inner")
-      .map { case (t, m) =>
-        val d = TileCodec.unpackDoubles(t.data)
-        val md = TileCodec.unpackDoubles(m.data)
-        var validPre = 0L; var inlierCnt = 0L; var validIn = 0L
-        var sum = 0.0; var sq = 0.0; var mn = Double.MaxValue; var mx = Double.MinValue
-        var i = 0
-        while (i < d.length) {
-          val v = TileCodec.maskBit(t.mask, i)
-          val in = TileCodec.maskBit(m.mask, i) && md(i) != 0.0
-          if (v) validPre += 1
-          if (in) inlierCnt += 1
-          if (v && in) {
-            validIn += 1; sum += d(i); sq += d(i) * d(i)
-            if (d(i) < mn) mn = d(i); if (d(i) > mx) mx = d(i)
-          }
-          i += 1
+    tilePairs(tiles, inlier) { (t, m) =>
+      val d = TileCodec.unpackDoubles(t.data)
+      val md = TileCodec.unpackDoubles(m.data)
+      var validPre = 0L; var inlierCnt = 0L; var validIn = 0L
+      var sum = 0.0; var sq = 0.0; var mn = Double.MaxValue; var mx = Double.MinValue
+      var i = 0
+      while (i < d.length) {
+        val v = TileCodec.maskBit(t.mask, i)
+        val in = TileCodec.maskBit(m.mask, i) && md(i) != 0.0
+        if (v) validPre += 1
+        if (in) inlierCnt += 1
+        if (v && in) {
+          validIn += 1; sum += d(i); sq += d(i) * d(i)
+          if (d(i) < mn) mn = d(i); if (d(i) > mx) mx = d(i)
         }
-        (validPre, inlierCnt, validIn, sum, sq, mn, mx, d.length.toLong)
-      }.toDF("valid_pre", "inlier_cnt", "valid_in", "sum", "sq", "mn", "mx", "total")
+        i += 1
+      }
+      (validPre, inlierCnt, validIn, sum, sq, mn, mx, d.length.toLong)
+    }.toDF("valid_pre", "inlier_cnt", "valid_in", "sum", "sq", "mn", "mx", "total")
       .agg(
         sum($"valid_pre").as("n_valid"), sum($"total").as("n_total"),
         sum($"valid_in").as("valid_inlier"), sum($"inlier_cnt").as("total_inlier"),
@@ -267,24 +272,18 @@ object RasterOps {
   /** set_mask (`raster/raster.py:1541-1576`): extend a raster's mask from
     * a boolean Mask raster — cells where the mask raster is true (or
     * invalid) become invalid. Grids must align (tile-key join). */
-  def applyMask(tiles: Dataset[RasterTile], mask: Dataset[RasterTile]): Dataset[RasterTile] = {
-    val spark = tiles.sparkSession
-    import spark.implicits._
-    tiles.joinWith(mask,
-        tiles("band") === mask("band") && tiles("tile_row") === mask("tile_row") &&
-        tiles("tile_col") === mask("tile_col"), "inner")
-      .map { case (t, m) =>
-        val md = TileCodec.unpackDoubles(m.data)
-        val valid = new Array[Boolean](md.length)
-        var i = 0
-        while (i < md.length) {
-          valid(i) = TileCodec.maskBit(t.mask, i) &&
-            TileCodec.maskBit(m.mask, i) && md(i) == 0.0
-          i += 1
-        }
-        t.copy(mask = TileCodec.packMask(valid))
+  def applyMask(tiles: Dataset[RasterTile], mask: Dataset[RasterTile]): Dataset[RasterTile] =
+    tilePairs(tiles, mask) { (t, m) =>
+      val md = TileCodec.unpackDoubles(m.data)
+      val valid = new Array[Boolean](md.length)
+      var i = 0
+      while (i < md.length) {
+        valid(i) = TileCodec.maskBit(t.mask, i) &&
+          TileCodec.maskBit(m.mask, i) && md(i) == 0.0
+        i += 1
       }
-  }
+      t.copy(mask = TileCodec.packMask(valid))
+    }(tiles.encoder)
 
   /** reduce_points (`raster/base.py:1590-1638`): windowed reducer around
     * point coordinates — mean over the (2r+1)² pixel window centered on
@@ -375,7 +374,7 @@ object RasterOps {
       ((col("x") - xmin) / xres - 0.5).as("fj"),
       ((lit(ymax) - col("y")) / yres - 0.5).as("fi"),
       col("value"))
-    val tilesX = (width + tileW - 1) / tileW
+    val grid = GridSpec(xres, yres, xmin, ymax, width, height, tileW, tileH, crs)
     implicit val keyEnc = org.apache.spark.sql.Encoders.tuple(
       org.apache.spark.sql.Encoders.scalaInt, org.apache.spark.sql.Encoders.scalaInt)
     withIj.as[(Double, Double, Double)].map { case (fj, fi, v) =>
@@ -385,20 +384,14 @@ object RasterOps {
     }.groupByKey(r => (r._1 / tileH, r._2 / tileW))
       .mapGroups { (key: (Int, Int), it: Iterator[(Int, Int, Double)]) =>
         val (tr, tc) = key
-        val tw = math.min(tileW, width - tc * tileW)
-        val th = math.min(tileH, height - tr * tileH)
-        val data = Array.fill(tw * th)(nodata)
-        val valid = new Array[Boolean](tw * th)
+        val tw = grid.tileWidth(tc)
+        val data = Array.fill(tw * grid.tileHeight(tr))(nodata)
+        val valid = new Array[Boolean](data.length)
         it.foreach { case (i, j, v) =>
           val k = (i - tr * tileH) * tw + (j - tc * tileW)
           data(k) = v; valid(k) = true
         }
-        RasterTile("scatter", 0, tr, tc, tw, th, xres, yres,
-          xmin + tc.toLong * tileW * xres, ymax - tr.toLong * tileH * yres,
-          crs, nodata, "Area", "float64",
-          TileCodec.packDoubles(data), TileCodec.packMask(valid),
-          graft.geo.CellIndex.cellOf(xmin + tc.toLong * tileW * xres + 1e-9,
-            ymax - (tr.toLong * tileH + th) * yres + 1e-9, 3))
+        grid.tile("scatter", 0, tr, tc, nodata, "Area", "float64", data, valid)
       }(org.apache.spark.sql.Encoders.product[RasterTile])
   }
 
@@ -409,22 +402,13 @@ object RasterOps {
     * one subwindow scan per (zone, tile) pair emits a partial (cnt, sum);
     * final groupBy(zone) combines partials. Cells count when their center
     * is strictly inside the zone. */
-  def zonalBox(tiles: Dataset[RasterTile], zones: DataFrame,
-               rasterYmax: Double, tileSpanX: Double, tileSpanY: Double,
-               tilesX: Int, tilesY: Int): DataFrame = {
+  def zonalBox(tiles: Dataset[RasterTile], zones: DataFrame, grid: GridSpec): DataFrame = {
     val spark = tiles.sparkSession
     import spark.implicits._
 
-    val zoneTiles = zones.select($"zone_id", $"zxmin", $"zymin", $"zxmax", $"zymax")
-      // lo<=hi guard: zones entirely off the raster route to NO tile (an
-      // inverted sequence would descend into phantom tile keys)
-      .withColumn("trlo", greatest(floor((lit(rasterYmax) - $"zymax") / tileSpanY).cast("int"), lit(0)))
-      .withColumn("trhi", least(floor((lit(rasterYmax) - $"zymin") / tileSpanY).cast("int"), lit(tilesY - 1)))
-      .withColumn("tclo", greatest(floor($"zxmin" / tileSpanX).cast("int"), lit(0)))
-      .withColumn("tchi", least(floor($"zxmax" / tileSpanX).cast("int"), lit(tilesX - 1)))
-      .where($"trlo" <= $"trhi" && $"tclo" <= $"tchi")
-      .withColumn("tr", explode(sequence($"trlo", $"trhi")))
-      .withColumn("tc", explode(sequence($"tclo", $"tchi")))
+    val zoneTiles = grid.routeToTiles(
+      zones.select($"zone_id", $"zxmin", $"zymin", $"zxmax", $"zymax"),
+      $"zxmin", $"zymin", $"zxmax", $"zymax")
 
     val pairAgg = udf((data: Array[Byte], mask: Array[Byte],
                        geo: Seq[Double], zone: Seq[Double]) => {
@@ -458,8 +442,7 @@ object RasterOps {
       (cnt, s)
     })
 
-    tiles.toDF().join(zoneTiles,
-        $"tile_row" === $"tr" && $"tile_col" === $"tc", "inner")
+    tiles.toDF().join(zoneTiles, Seq("tile_row", "tile_col"), "inner")
       .withColumn("partial", pairAgg($"data", $"mask",
         array($"width".cast("double"), $"height".cast("double"),
               $"xmin", $"ymax", $"xres", $"yres"),

@@ -2,7 +2,7 @@ package graft.ops
 
 import org.apache.spark.sql.{DataFrame, Dataset, Encoders}
 import org.apache.spark.sql.functions._
-import graft.model.{RasterTile, TileCodec}
+import graft.model.{GridSpec, RasterTile}
 import graft.functions.GeoFunctions
 
 /** Rasterize / create_mask — vector → raster burn (reference
@@ -42,8 +42,8 @@ object Rasterize {
                 orderCol: Option[String] = None): Dataset[RasterTile] = {
     val spark = geoms.sparkSession
     import spark.implicits._
-    val tilesX = (width + tileW - 1) / tileW
-    val tilesY = (height + tileH - 1) / tileH
+    val grid = GridSpec(gridXres, gridYres, gridXmin, gridYmax, width, height,
+      tileW, tileH, crs)
 
     // default burn = 1..N feature index in lexicographic wkt order —
     // computed scalably (range-partitioned rank, Ids.denseIndex), not via
@@ -56,25 +56,17 @@ object Rasterize {
     }
     // paint order: explicit feature order if given, else the burn value
     // itself (ascending paint ⇒ max-burn-wins / last-in-order-wins)
-    val feats = indexed
+    val envs = indexed
       .withColumn("__ord", orderCol.fold(col("__burn"))(c => col(c).cast("double")))
       // st_env_rect (non-nullable, cached parse), not st_envelope: the
-      // tile-range filter below pushes past this projection, and with a
+      // tile-range filter of `routeToTiles` pushes past this projection, and with a
       // nullable array UDF the inferred isnotnull constraints re-ran the
       // parse once per extracted corner inside the filter condition
       .withColumn("env", GeoFunctions.st_env_rect(col("wkt")))
       .select(col("wkt"), col("__burn").as("burn"), col("__ord").as("ord"),
         col("env._1").as("minx"), col("env._2").as("miny"),
         col("env._3").as("maxx"), col("env._4").as("maxy"))
-      // lo<=hi guard: a feature entirely outside the grid must route
-      // NOWHERE (an inverted sequence(9,7) descends → phantom tiles)
-      .withColumn("trlo", greatest(floor((lit(gridYmax) - col("maxy")) / (tileH * gridYres)).cast("int"), lit(0)))
-      .withColumn("trhi", least(floor((lit(gridYmax) - col("miny")) / (tileH * gridYres)).cast("int"), lit(tilesY - 1)))
-      .withColumn("tclo", greatest(floor((col("minx") - lit(gridXmin)) / (tileW * gridXres)).cast("int"), lit(0)))
-      .withColumn("tchi", least(floor((col("maxx") - lit(gridXmin)) / (tileW * gridXres)).cast("int"), lit(tilesX - 1)))
-      .where(col("trlo") <= col("trhi") && col("tclo") <= col("tchi"))
-      .withColumn("tile_row", explode(sequence(col("trlo"), col("trhi"))))
-      .withColumn("tile_col", explode(sequence(col("tclo"), col("tchi"))))
+    val feats = grid.routeToTiles(envs, col("minx"), col("miny"), col("maxx"), col("maxy"))
 
     implicit val keyEnc = Encoders.tuple(Encoders.scalaInt, Encoders.scalaInt)
     val grouped = feats
@@ -86,10 +78,8 @@ object Rasterize {
     val burned = grouped.mapGroups {
       (key: (Int, Int), it: Iterator[(Int, Int, String, Double, Double, Double, Double, Double, Double)]) =>
         val (tr, tc) = key
-        val tw = math.min(tileW, width - tc * tileW)
-        val th = math.min(tileH, height - tr * tileH)
-        val x0 = gridXmin + tc.toLong * tileW * gridXres
-        val y1 = gridYmax - tr.toLong * tileH * gridYres
+        val tw = grid.tileWidth(tc); val th = grid.tileHeight(tr)
+        val x0 = grid.tileXmin(tc); val y1 = grid.tileYmax(tr)
         val data = Array.fill(tw * th)(fill)
         val valid = new Array[Boolean](tw * th)
         // paint in ascending ord (paint order), later features overwrite —
@@ -119,33 +109,16 @@ object Rasterize {
             di += 1
           }
         }
-        RasterTile("burn", 0, tr, tc, tw, th, gridXres, gridYres, x0, y1,
-          crs, nodata, "Area", "float64",
-          TileCodec.packDoubles(data), TileCodec.packMask(valid),
-          graft.geo.CellIndex.cellOf(x0 + 1e-9, y1 - th * gridYres + 1e-9, 3))
+        grid.tile("burn", 0, tr, tc, nodata, "Area", "float64", data, valid)
     }(Encoders.product[RasterTile])
 
     // tiles with no features at all: emit empty (all-fill, masked) tiles so
     // the output is a complete grid (rasterize semantics: full raster out).
     // Keys come from the cheap pre-burn projection `feats` — deriving them
     // from `burned` would re-execute the whole PIP burn kernel.
-    val allKeys = spark.range(tilesY.toLong * tilesX)
-      .map(id => ((id / tilesX).toInt, (id % tilesX).toInt))
-    val have = feats.select(col("tile_row"), col("tile_col")).distinct()
-      .as[(Int, Int)]
-    val missing = allKeys.except(have)
-    val empty = missing.map { case (tr, tc) =>
-      val tw = math.min(tileW, width - tc * tileW)
-      val th = math.min(tileH, height - tr * tileH)
-      val x0 = gridXmin + tc.toLong * tileW * gridXres
-      val y1 = gridYmax - tr.toLong * tileH * gridYres
-      RasterTile("burn", 0, tr, tc, tw, th, gridXres, gridYres, x0, y1,
-        crs, nodata, "Area", "float64",
-        TileCodec.packDoubles(Array.fill(tw * th)(fill)),
-        TileCodec.packMask(new Array[Boolean](tw * th)),
-        graft.geo.CellIndex.cellOf(x0 + 1e-9, y1 - th * gridYres + 1e-9, 3))
-    }
-    burned.union(empty)
+    val have = feats.select(col("tile_row"), col("tile_col")).distinct().as[(Int, Int)]
+    burned.union(grid.missingTiles(have,
+      Seq(("burn", 0, nodata, "Area", "float64")).toDS(), Some(fill)))
   }
 
   /** create_mask: boolean burn (ref `vector/vector.py:1519-1571`). */

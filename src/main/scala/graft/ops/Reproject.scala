@@ -2,7 +2,7 @@ package graft.ops
 
 import org.apache.spark.sql.{Dataset, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.model.{RasterTile, TileCodec}
+import graft.model.{GridSpec, RasterTile, TileCodec}
 
 /** Reproject / grid resample — the canonical shuffle op (reference
   * `raster/transformation.py:738-825`; chunked dst→src block mapping
@@ -19,13 +19,6 @@ import graft.model.{RasterTile, TileCodec}
   * same grid + nearest ⇒ the input Dataset is returned unchanged.
   */
 object Reproject {
-
-  final case class GridSpec(xres: Double, yres: Double, xmin: Double, ymax: Double,
-                            width: Int, height: Int, tileW: Int, tileH: Int,
-                            crs: String) {
-    def tilesX: Int = (width + tileW - 1) / tileW
-    def tilesY: Int = (height + tileH - 1) / tileH
-  }
 
   /** Resample `src` (whose full grid is `srcGrid`) onto `dst`.
     * method: "nearest" | "bilinear". Identity transform between CRSs for
@@ -92,9 +85,9 @@ object Reproject {
     val dstTiles = spark.range(dst.tilesY.toLong * dst.tilesX).map { id =>
       val dtr = (id / dst.tilesX).toInt; val dtc = (id % dst.tilesX).toInt
       // dst tile world bounds
-      val x0 = dst.xmin + dtc.toLong * dst.tileW * dst.xres
+      val x0 = dst.tileXmin(dtc)
       val x1 = math.min(dst.xmin + dst.width * dst.xres, x0 + dst.tileW * dst.xres)
-      val y1 = dst.ymax - dtr.toLong * dst.tileH * dst.yres
+      val y1 = dst.tileYmax(dtr)
       val y0 = math.max(dst.ymax - dst.height * dst.yres, y1 - dst.tileH * dst.yres)
       // world → src world (corners; identity or CRS fn — monotone assumed
       // per-axis for the supported CRS subset)
@@ -135,29 +128,16 @@ object Reproject {
         val (dtr, dtc) = (key._1, key._2)
         val srcTiles = it.map(_._3).toArray
         val byKey = srcTiles.map(t => ((t.tile_row, t.tile_col), t)).toMap
-        val tw = math.min(dst.tileW, dst.width - dtc * dst.tileW)
-        val th = math.min(dst.tileH, dst.height - dtr * dst.tileH)
+        val tw = dst.tileWidth(dtc); val th = dst.tileHeight(dtr)
         val data = new Array[Double](tw * th)
         val valid = new Array[Boolean](tw * th)
         val nodata = srcTiles.head.nodata
-
-        @inline def srcVal(i: Int, j: Int): (Double, Boolean) = {
-          if (i < 0 || j < 0 || i >= srcGrid.height || j >= srcGrid.width) (nodata, false)
-          else byKey.get((i / srcGrid.tileH, j / srcGrid.tileW)) match {
-            case Some(t) =>
-              val li = i % srcGrid.tileH; val lj = j % srcGrid.tileW
-              val k = li * t.width + lj
-              val ok = TileCodec.maskBit(t.mask, k)
-              (if (ok) TileCodec.unpackDoubles(t.data)(k) else nodata, ok)
-            case None => (nodata, false)
-          }
-        }
 
         // cache decoded payloads: decode each src tile once
         val decoded = byKey.map { case (k, t) =>
           k -> (TileCodec.unpackDoubles(t.data), t.mask, t.width)
         }
-        @inline def srcVal2(i: Int, j: Int): (Double, Boolean) = {
+        @inline def srcVal(i: Int, j: Int): (Double, Boolean) = {
           if (i < 0 || j < 0 || i >= srcGrid.height || j >= srcGrid.width) (nodata, false)
           else decoded.get((i / srcGrid.tileH, j / srcGrid.tileW)) match {
             case Some((d, m, w)) =>
@@ -189,7 +169,7 @@ object Reproject {
             val fi = (srcGrid.ymax - sy) / srcGrid.yres - 0.5
             val k = di * tw + dj
             if (method == "nearest") {
-              val (v, ok) = srcVal2(math.round(fi).toInt, math.round(fj).toInt)
+              val (v, ok) = srcVal(math.round(fi).toInt, math.round(fj).toInt)
               data(k) = v; valid(k) = ok
             } else if (isConv) {
               // separable kernel convolution (4×4 cubic / B-spline, 6×6
@@ -204,7 +184,7 @@ object Reproject {
                   val wj = kw(fj - (j0 + dj2))
                   val w = wi * wj
                   if (w != 0.0) {
-                    val (v, m) = srcVal2(i0 + di2, j0 + dj2)
+                    val (v, m) = srcVal(i0 + di2, j0 + dj2)
                     if (!m) ok = false else { acc += w * v; wsum += w }
                   }
                   dj2 += 1
@@ -226,7 +206,7 @@ object Reproject {
                 val wi = if (di2 == 0) 2 else 1
                 var dj2 = -1
                 while (dj2 <= 1) {
-                  val (v, m) = srcVal2(ic + di2, jc + dj2)
+                  val (v, m) = srcVal(ic + di2, jc + dj2)
                   if (m) {
                     val w = wi * (if (dj2 == 0) 2 else 1)
                     num += w * v; den += w
@@ -265,7 +245,7 @@ object Reproject {
               while (ii <= i1) {
                 var jj = j0
                 while (jj <= j1) {
-                  val (v, m) = srcVal2(ii, jj)
+                  val (v, m) = srcVal(ii, jj)
                   if (m) buf += v
                   jj += 1
                 }
@@ -305,8 +285,8 @@ object Reproject {
             } else {
               val i0 = math.floor(fi).toInt; val j0 = math.floor(fj).toInt
               val wi = fi - i0; val wj = fj - j0
-              val (v00, m00) = srcVal2(i0, j0); val (v01, m01) = srcVal2(i0, j0 + 1)
-              val (v10, m10) = srcVal2(i0 + 1, j0); val (v11, m11) = srcVal2(i0 + 1, j0 + 1)
+              val (v00, m00) = srcVal(i0, j0); val (v01, m01) = srcVal(i0, j0 + 1)
+              val (v10, m10) = srcVal(i0 + 1, j0); val (v11, m11) = srcVal(i0 + 1, j0 + 1)
               // nodata spreading (interpolation.py:72-86): any contributing
               // neighbor invalid ⇒ dst invalid
               if (m00 && m01 && m10 && m11) {
@@ -320,50 +300,19 @@ object Reproject {
           di += 1
         }
         val h = srcTiles.head
-        RasterTile(h.raster_id, h.band, dtr, dtc, tw, th,
-          dst.xres, dst.yres,
-          dst.xmin + dtc.toLong * dst.tileW * dst.xres,
-          dst.ymax - dtr.toLong * dst.tileH * dst.yres,
-          dst.crs, nodata, h.area_or_point, h.dtype,
-          TileCodec.packDoubles(data), TileCodec.packMask(valid),
-          graft.geo.CellIndex.cellOf(
-            dst.xmin + dtc.toLong * dst.tileW * dst.xres + 1e-9,
-            dst.ymax - (dtr.toLong * dst.tileH + th) * dst.yres + 1e-9, 3))
+        dst.tile(h.raster_id, h.band, dtr, dtc, nodata, h.area_or_point, h.dtype, data, valid)
       }(org.apache.spark.sql.Encoders.product[RasterTile])
 
     // reproject always returns the FULL dst grid (transformation.py:738-825):
     // dst tiles whose src footprint matched no src tile become all-nodata
     // tiles, one per (raster_id, band) of the input
-    implicit val k2 = org.apache.spark.sql.Encoders.tuple(
-      org.apache.spark.sql.Encoders.scalaInt, org.apache.spark.sql.Encoders.scalaInt)
-    val haveKeys = joined.map(r => (r._1, r._2))(k2).distinct()
-    val missing = spark.range(dst.tilesY.toLong * dst.tilesX)
-      .map(id => ((id / dst.tilesX).toInt, (id % dst.tilesX).toInt))(k2)
-      .except(haveKeys)
+    val haveKeys = joined.map(r => (r._1, r._2)).distinct()
     // one tiny row per (raster_id, band, nodata, area_or_point, dtype)
     val bands = src.toDF()
       .select(col("raster_id"), col("band"), col("nodata"),
         col("area_or_point"), col("dtype")).distinct()
-      .as[(String, Int, Double, String, String)](
-        org.apache.spark.sql.Encoders.tuple(
-          org.apache.spark.sql.Encoders.STRING, org.apache.spark.sql.Encoders.scalaInt,
-          org.apache.spark.sql.Encoders.scalaDouble, org.apache.spark.sql.Encoders.STRING,
-          org.apache.spark.sql.Encoders.STRING))
-    val empty = missing.joinWith(bands, org.apache.spark.sql.functions.lit(true), "cross")
-      .map { case ((dtr, dtc), (rid, band, nodata, aop, dtype)) =>
-        val tw = math.min(dst.tileW, dst.width - dtc * dst.tileW)
-        val th = math.min(dst.tileH, dst.height - dtr * dst.tileH)
-        RasterTile(rid, band, dtr, dtc, tw, th, dst.xres, dst.yres,
-          dst.xmin + dtc.toLong * dst.tileW * dst.xres,
-          dst.ymax - dtr.toLong * dst.tileH * dst.yres,
-          dst.crs, nodata, aop, dtype,
-          TileCodec.packDoubles(Array.fill(tw * th)(nodata)),
-          TileCodec.packMask(new Array[Boolean](tw * th)),
-          graft.geo.CellIndex.cellOf(
-            dst.xmin + dtc.toLong * dst.tileW * dst.xres + 1e-9,
-            dst.ymax - (dtr.toLong * dst.tileH + th) * dst.yres + 1e-9, 3))
-      }(org.apache.spark.sql.Encoders.product[RasterTile])
-    warped.union(empty)
+      .as[(String, Int, Double, String, String)]
+    warped.union(dst.missingTiles(haveKeys, bands))
   }
 
   /** Flat mirror of RasterTile for the join row (same fields). */

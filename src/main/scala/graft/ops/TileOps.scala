@@ -112,25 +112,21 @@ object TileOps {
     * the reference's `raster[mask] = value`): cells where the mask raster
     * is true take `value` and become valid; others untouched. */
   def assignWhere(tiles: Dataset[RasterTile], mask: Dataset[RasterTile],
-                  value: Double): Dataset[RasterTile] = {
-    implicit val keyEnc = Encoders.tuple(Encoders.scalaInt, Encoders.scalaInt)
-    tiles.joinWith(mask, tiles("tile_row") === mask("tile_row") &&
-        tiles("tile_col") === mask("tile_col") && tiles("band") === mask("band"))
-      .map { case (t, m) =>
-        val d = TileCodec.unpackDoubles(t.data)
-        val md = TileCodec.unpackDoubles(m.data)
-        val out = new Array[Double](d.length)
-        val valid = new Array[Boolean](d.length)
-        var i = 0
-        while (i < d.length) {
-          val set = TileCodec.maskBit(m.mask, i) && md(i) != 0.0
-          valid(i) = set || TileCodec.maskBit(t.mask, i)
-          out(i) = if (set) value else d(i)
-          i += 1
-        }
-        t.copy(data = TileCodec.packDoubles(out), mask = TileCodec.packMask(valid))
+                  value: Double): Dataset[RasterTile] =
+    RasterOps.tilePairs(tiles, mask) { (t, m) =>
+      val d = TileCodec.unpackDoubles(t.data)
+      val md = TileCodec.unpackDoubles(m.data)
+      val out = new Array[Double](d.length)
+      val valid = new Array[Boolean](d.length)
+      var i = 0
+      while (i < d.length) {
+        val set = TileCodec.maskBit(m.mask, i) && md(i) != 0.0
+        valid(i) = set || TileCodec.maskBit(t.mask, i)
+        out(i) = if (set) value else d(i)
+        i += 1
       }
-  }
+      t.copy(data = TileCodec.packDoubles(out), mask = TileCodec.packMask(valid))
+    }
 
   /** Boolean algebra on mask rasters (`raster/raster.py:1439-1483`). */
   def maskCombine(a: Dataset[RasterTile], b: Dataset[RasterTile], op: String): Dataset[RasterTile] = {

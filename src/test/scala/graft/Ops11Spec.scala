@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.functions._
+import graft.model.GridSpec
 import graft.ops.{Overlay, Polygonize, Rasterize}
 
 /** Round-4 specs: bounded (skew-safe) overlay partner aggregation, the
@@ -130,8 +131,8 @@ class Ops11Spec extends SparkSpec {
     import spark.implicits._
     import graft.ops.Reproject
     import graft.io.RasterGen
-    val srcGrid = Reproject.GridSpec(0.25, 0.25, 0, 100, 400, 400, 50, 50, "EPSG:32645")
-    val dst = Reproject.GridSpec(0.5, 0.5, 0, 100, 200, 200, 50, 50, "EPSG:32645")
+    val srcGrid = GridSpec(0.25, 0.25, 0, 100, 400, 400, 50, 50, "EPSG:32645")
+    val dst = GridSpec(0.5, 0.5, 0, 100, 200, 200, 50, 50, "EPSG:32645")
     def v(i: Int, j: Int) = ((i * 7 + j * 13) % 97).toDouble
     def ok(i: Int, j: Int) = (i * 31 + j * 17) % 101 != 0
 
@@ -284,12 +285,12 @@ class Ops11Spec extends SparkSpec {
   test("footprint reducers degrade to nearest on 2x upsample (no spurious nodata)") {
     import graft.ops.Reproject
     import graft.io.RasterGen
-    val srcGrid = Reproject.GridSpec(0.25, 0.25, 0, 100, 400, 400, 50, 50, "EPSG:32645")
+    val srcGrid = GridSpec(0.25, 0.25, 0, 100, 400, 400, 50, 50, "EPSG:32645")
     // dst twice as fine: every dst footprint spans less than one src
     // pixel, so on at least one axis it contains no src center — GDAL
     // degrades to nearest there, and a single-pixel footprint makes every
     // reducer (mean/mode/min/max/sum/med) equal the nearest value
-    val dst = Reproject.GridSpec(0.125, 0.125, 0, 100, 100, 100, 50, 50, "EPSG:32645")
+    val dst = GridSpec(0.125, 0.125, 0, 100, 100, 100, 50, 50, "EPSG:32645")
     val near = rowSet(graft.ops.RasterOps.cells(
       Reproject.resample(RasterGen.tiles(spark), srcGrid, dst, "nearest")))
     // each valid src pixel in the covered 50×50 window backs exactly 4

@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.functions._
 import graft.geo.{CrsMath, SplitMix64}
 import graft.io.GeoTables
-import graft.model.{RasterTile, TileCodec}
+import graft.model.{GridSpec, RasterTile, TileCodec}
 import graft.ops._
 
 class Ops4Spec extends SparkSpec {
@@ -78,9 +78,9 @@ class Ops4Spec extends SparkSpec {
         TileCodec.packDoubles(data), TileCodec.packMask(Array.fill(625)(true)),
         graft.geo.CellIndex.cellOf(tc.toDouble, tr.toDouble, 3))
     })
-    val srcGrid = Reproject.GridSpec(1000, 1000, x0, y1, 100, 100, 25, 25, "EPSG:32645")
+    val srcGrid = GridSpec(1000, 1000, x0, y1, 100, 100, 25, 25, "EPSG:32645")
     // dst: lon/lat grid covering the interior of the source footprint
-    val dst = Reproject.GridSpec(0.005, 0.005, 86.6, 28.4, 80, 60, 20, 20, "EPSG:4326")
+    val dst = GridSpec(0.005, 0.005, 86.6, 28.4, 80, 60, 20, 20, "EPSG:4326")
     val ll2utm = CrsMath.transform(4326, 32645)
     val out = Reproject.resample(tiles, srcGrid, dst, "nearest", ll2utm)
     val cells = RasterOps.cells(out).collect()

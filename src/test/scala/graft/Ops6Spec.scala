@@ -374,4 +374,50 @@ class Ops6Spec extends SparkSpec {
     assert(names() === Set("v000004.txt", "_tmp4242.txt", inFlight))
     assert(TableCommit.read(spark, dir).collect().map(_.getInt(0)).toSet === Set(3, 4))
   }
+
+  /** A fresh table at version 3: two commits, then an overwrite that
+    * orphans their dirs, which it returns. */
+  private def orphaningTable(name: String): (String, Seq[String]) = {
+    import spark.implicits._
+    val dir = java.nio.file.Files.createTempDirectory("tc").toString + "/" + name
+    TableCommit.commit(Seq(1).toDF("a"), dir)
+    TableCommit.commit(Seq(2).toDF("a"), dir)
+    TableCommit.commitOverwrite(Seq(3).toDF("a"), dir)
+    (dir, Seq(TableCommit.dataDir(dir, 0, ""), TableCommit.dataDir(dir, 1, "")))
+  }
+  private def exists(d: String) = java.nio.file.Files.exists(java.nio.file.Paths.get(d))
+  private def rows(dir: String) = TableCommit.read(spark, dir).collect().map(_.getInt(0)).toSet
+
+  test("TableCommit.expireSnapshots: reaps the dirs of snapshot files already deleted") {
+    val (dir, orphans) = orphaningTable("t8")
+    // what an expire that crashed between its snapshot deletes and its dir
+    // deletes leaves: the orphans, with no snapshot naming them
+    Seq(1, 2).foreach(v => java.nio.file.Files.delete(
+      java.nio.file.Paths.get(f"$dir/snapshots/v$v%06d.txt")))
+    assert(orphans.forall(exists))
+    assert(TableCommit.expireSnapshots(dir, keep = 1).toSet === orphans.toSet)
+    assert(!orphans.exists(exists))
+    assert(rows(dir) === Set(3))
+  }
+
+  test("TableCommit.expireSnapshots: keeps the next version's dir, which may be in flight") {
+    import spark.implicits._
+    val (dir, orphans) = orphaningTable("t9")
+    val inFlight = TableCommit.dataDir(dir, 3, "")
+    Seq(9).toDF("a").write.parquet(inFlight)
+    assert(TableCommit.expireSnapshots(dir, keep = 1).toSet === orphans.toSet)
+    assert(exists(inFlight))
+    assert(TableCommit.commit(Seq(4).toDF("a"), dir) === 4) // replaces the in-flight dir
+    assert(rows(dir) === Set(3, 4))
+  }
+
+  test("TableCommit.expireSnapshots: reaps an abandoned attempt at an older version") {
+    import spark.implicits._
+    val (dir, orphans) = orphaningTable("t10")
+    val abandoned = TableCommit.dataDir(dir, 1, "mrg")
+    Seq(9).toDF("a").write.parquet(abandoned)
+    assert(TableCommit.expireSnapshots(dir, keep = 1).toSet === (orphans :+ abandoned).toSet)
+    assert(!exists(abandoned))
+    assert(rows(dir) === Set(3))
+  }
 }

@@ -1,9 +1,8 @@
 package graft
 
 import graft.io.RasterGen
-import graft.model.{RasterTile, TileCodec}
+import graft.model.{GridSpec, RasterTile, TileCodec}
 import graft.ops.{RasterOps, Reproject}
-import graft.ops.Reproject.GridSpec
 import graft.geo.CellIndex
 
 class ReprojectSpec extends SparkSpec {
