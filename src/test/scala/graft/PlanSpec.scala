@@ -7,13 +7,11 @@ import graft.io.GeoTables
 import graft.ops.{BenchKernel, PipPlan, SpatialJoin}
 import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.optimizer.BuildLeft
-import org.apache.spark.sql.catalyst.plans.physical.{HashPartitioning, SinglePartition}
-import org.apache.spark.sql.execution.{QueryExecution, RDDScanExec, SparkPlan}
+import org.apache.spark.sql.execution.{RDDScanExec, SparkPlan}
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 import org.apache.spark.sql.execution.aggregate.{BaseAggregateExec, HashAggregateExec}
 import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
 import org.apache.spark.sql.execution.joins.{BaseJoinExec, ShuffledHashJoinExec}
-import org.apache.spark.sql.util.QueryExecutionListener
 
 /** Plan-shape regression guards: the perf-critical properties verified by
   * hand during the plan audit must not silently rot. */
@@ -54,52 +52,37 @@ class PlanSpec extends SparkSpec with AdaptiveSparkPlanHelper {
       assert(plan.contains("HashAggregate"), plan)
     }
 
-    // the kernel's executed plan on both sides of the broadcast threshold
+    // the executed plan of the kernel's tile keys on both sides of the
+    // broadcast threshold: run counts its metrics in the partitions of
+    // this plan, with no DataFrame action of its own
     def kernelPlan(docs: DataFrame): SparkPlan = {
-      val executed = new java.util.concurrent.LinkedBlockingQueue[SparkPlan]()
-      val listener = new QueryExecutionListener {
-        // the kernel's one action: a global (total, mrows) aggregate
-        def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit =
-          if (qe.analyzed.output.map(_.name) == Seq("total", "mrows")) executed.put(qe.executedPlan)
-        def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
-      }
-      spark.listenerManager.register(listener)
-      // listeners are called asynchronously: stay registered until the call
-      val kernel = try {
-        BenchKernel.run(spark, docs)
-        executed.poll(60, java.util.concurrent.TimeUnit.SECONDS)
-      } finally spark.listenerManager.unregister(listener)
-      assert(kernel != null, "kernel action was not observed")
-      kernel
+      val qe = BenchKernel.tiles(docs, GeoTables.JoinLevel).queryExecution
+      qe.toRdd.count()
+      qe.executedPlan
     }
     def fromPoints(p: SparkPlan) = p.output.exists(_.name == "x")
     def refs(es: Seq[Expression]) = es.flatMap(_.references.map(_.name)).toSet
 
     // default threshold: the sf0.001 point side is under it, so the zonal
-    // aggregate is fused. The action reads the fused polygon pass as one
-    // RDD scan; it has no join keyed on cell, no aggregate grouped on
-    // poly_doc, and exchanges only for the two metric aggregates. A run on
-    // cached docs starts at most 4 jobs: the point-side collect and the
-    // action's stages.
+    // aggregate is fused. The tile rows are the fused polygon pass, read as
+    // one RDD scan: no exchange, no join keyed on cell and no aggregate
+    // grouped on poly_doc. A run on cached docs starts at most 2 jobs: the
+    // point-side collect, and the probe pass that also counts the metrics.
     val cached = BenchKernel.prepareInput(spark, sf001).cache()
     try {
       cached.count()
-      val (fused, jobs) = countJobs(kernelPlan(cached))
-      assert(jobs <= 4, s"a fused kernel run started $jobs jobs\n$fused")
+      val (_, jobs) = countJobs(BenchKernel.run(spark, cached))
+      val fused = kernelPlan(cached)
+      assert(jobs <= 2, s"a fused kernel run started $jobs jobs\n$fused")
       assert(collect(fused) { case r: RDDScanExec => r }.size == 1, fused.toString)
+      assert(collect(fused) { case e: ShuffleExchangeExec => e }.isEmpty,
+        s"exchange in the fused kernel\n$fused")
       assert(collect(fused) {
         case j: BaseJoinExec if refs(j.leftKeys ++ j.rightKeys)("cell") => j
       }.isEmpty, s"join keyed on cell in the fused kernel\n$fused")
       assert(collect(fused) {
         case a: BaseAggregateExec if refs(a.groupingExpressions)("poly_doc") => a
       }.isEmpty, s"aggregate grouped on poly_doc in the fused kernel\n$fused")
-      val exchanges = collect(fused) { case e: ShuffleExchangeExec => e.outputPartitioning }
-      assert(exchanges.size == 2 && exchanges.forall {
-        // (spark_partition_id(), the level-4 histogram cell)
-        case h: HashPartitioning => h.expressions.size == 2 && refs(h.expressions)("cell") &&
-          !refs(h.expressions)("poly_doc")
-        case p => p == SinglePartition
-      }, s"exchanges other than the metric aggregates'\n$fused")
     } finally cached.unpersist(true)
 
     // threshold -1: exactly one shuffle-hash join, built from the points

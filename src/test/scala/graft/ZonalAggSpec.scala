@@ -58,6 +58,37 @@ class ZonalAggSpec extends SparkSpec {
     assert(fallback == expected, "fallback zonalAgg differs from the brute-force reference")
   }
 
+  test("BenchKernel.run metrics equal a per-partition groupBy, with and without empty partitions") {
+    // the reference: each tile row's level-4 histogram cell by the cell_of
+    // UDF, grouped on (spark_partition_id(), cell), then summed and counted
+    def reference(docs: DataFrame): (Long, Long) = {
+      val m = BenchKernel.assigned(docs, GeoTables.JoinLevel)
+        .withColumn("cell", GeoFunctions.cell_of(
+          col("tc") * 12.5 + 6.25, lit(100.0) - col("tr") * 12.5 - 6.25, lit(4)))
+        .groupBy(spark_partition_id(), col("cell")).count()
+        .agg(sum(col("count")), count(lit(1))).first()
+      (m.getLong(0), m.getLong(1))
+    }
+    def check(docs: DataFrame, input: String): Unit = {
+      val expected = reference(docs)
+      assert(expected._1 > 0 && expected._2 > 0, input)
+      assert(BenchKernel.run(spark, docs) == expected, input)
+    }
+    val docs = BenchKernel.prepareInput(spark, sf001)
+    check(docs, "default threshold")
+    withBroadcastThreshold("-1")(check(docs, "threshold -1"))
+
+    // the docs in 6 partitions of which at most 2 hold rows: the fused
+    // probe then has empty partitions, and an empty partition adds no
+    // metric row
+    val sparse = docs.repartition(6, col("doc_id").endsWith("0"))
+    val perPartition = BenchKernel.tiles(sparse, GeoTables.JoinLevel)
+      .queryExecution.toRdd.mapPartitions(rows => Iterator(rows.size)).collect()
+    assert(perPartition.length == 6 && perPartition.contains(0) && perPartition.exists(_ > 0),
+      perPartition.mkString(","))
+    check(sparse, "empty probe partitions")
+  }
+
   test("zonalAgg: non-rectangles, null values, edges and corners, duplicate and empty polygons") {
     import spark.implicits._
     // an integer grid, so points lie exactly on the box edges and corners
